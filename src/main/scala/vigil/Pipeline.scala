@@ -146,9 +146,8 @@ object Decide {
   /** Single-pass decide: conversation decisions via window aggregates over
     * the scored frame instead of the aggregate+self-join, so the expensive
     * narrow scoring stage runs EXACTLY ONCE with no cache or materialized
-    * temp table (decide()'s self-join recomputes it; DecideCached persists
-    * it). Equality-tested against decide() in PipelineSpec
-    * ("decideWindowed equals decide").
+    * temp table (decide()'s self-join recomputes it). Equality-tested
+    * against decide() in PipelineSpec ("decideWindowed equals decide").
     *
     * Shape: ONE exchange on conv_id, and it runs BEFORE scoring, so only
     * the RAW turn width (conv_id, turn_idx, role, text, tool, ts) crosses
@@ -160,7 +159,8 @@ object Decide {
     * PipelineSpec); the explicit repartition also satisfies the
     * (conv_id, lang) window's clustering, so both windows reuse it —
     * plan shows a single Exchange, two sorts (plan-asserted in
-    * PlanCheck). Trade-off vs decide(): a whole conversation lands in
+    * PipelineSpec: "decideWindowed plan: score once, one exchange, scoring
+    * above it"). Trade-off vs decide(): a whole conversation lands in
     * one task (no salting), so at 10^12-turn scale with power-law
     * conversations prefer [[Pipeline.run]]; for stateless single-job
     * runs this is the fastest correct shape.
@@ -205,29 +205,6 @@ object Decide {
           col("pii_density") > lit(cfg.maxConvPiiDensity))
       .withColumn("keep", col("keep_turn") && !col("drop_conversation"))
       .drop("__lang_cnt", "__m", "__n_turns")
-  }
-}
-
-object DecideCached {
-  import org.apache.spark.storage.StorageLevel
-
-  /** decide() with the scored frame persisted so the expensive narrow
-    * scoring runs ONCE (decide()'s self-join otherwise recomputes it for
-    * the conversation branch). The right choice whenever the scored
-    * working set fits executor storage memory; at full cluster scale use
-    * [[Pipeline.run]], which materializes to the lineage-tracked table
-    * instead. Caller must eventually unpersist via the returned handle.
-    */
-  def decide(turns: DataFrame, cfg: Decide.Config = Decide.Default)
-      : (DataFrame, DataFrame) = {
-    val scored = Decide.scoreTurns(turns, cfg)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val conv = Decide.convDecisions(scored, cfg)
-      .select("conv_id", "majority_lang", "pii_density", "drop_conversation")
-    val out = scored
-      .join(conv, Seq("conv_id"))
-      .withColumn("keep", col("keep_turn") && !col("drop_conversation"))
-    (out, scored)
   }
 }
 

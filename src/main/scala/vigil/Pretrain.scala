@@ -36,7 +36,7 @@ import vigil.dedup.SpanDedup
   * shape — restartable, inspectable, append-compatible with the
   * incremental families' stored tables), else `localCheckpoint` (the
   * in-session shape). Costs are therefore additive in the stage costs —
-  * PlanCheck-style lineage re-runs cannot occur across boundaries.
+  * lineage re-runs of an upstream stage cannot occur across boundaries.
   */
 object Pretrain {
 

@@ -315,6 +315,15 @@ object Dedup {
     * same-block pairs are candidates, buckets get strictly smaller, and
     * the LSH shuffle is block-partitioned instead of global.
     *
+    * Static input assumed: the capped-bucket set is collected on the
+    * driver ONCE, when this DataFrame is BUILT, and it both drives the
+    * cross-band skip and decides whether the (id_a, id_b) dedup exchange
+    * is elided. Re-executing the returned frame after the source changed
+    * (a re-scanned mutable table, an evicted cache over changed input)
+    * plans against the stale snapshot: a bucket that became capped can
+    * then emit duplicate pairs with no dedup, or lose pairs to the skip.
+    * Rebuild the frame per run over a source that can change.
+    *
     * Returns (id_a, id_b, est_jaccard) with id_a < id_b, est ≥ minEst.
     */
   def minhashLsh(
@@ -380,6 +389,11 @@ object Dedup {
     * design), and callers should persist `newSigs` if they also append
     * it to that table in the same job. At 100 TB the corpus sig table is
     * the only big input, and it is NEVER recomputed or cached here.
+    *
+    * Static input assumed, as for [[minhashLsh]]: the capped-bucket set
+    * over the union is snapshotted when this DataFrame is BUILT. Build it
+    * AFTER the batch is final and rebuild it per ingest run — re-executing
+    * it once the corpus table has grown plans against the stale caps.
     */
   def minhashLshIncremental(
       corpusSigs: DataFrame, newSigs: DataFrame,
@@ -508,14 +522,14 @@ object Dedup {
   }
 
   /** THE capped-bucket member shape, shared by every bucketed candidate
-    * generator (MinHash-LSH, SimHash, id-only candidates, and the
-    * embedding sign-LSH in vigil.ann.Ann): cap membership BEFORE
-    * aggregating via row_number over the bucket key — the cap-smallest
-    * members by `member` order (deterministic: `member` starts with the
-    * unique id) — so the agg buffer is bounded by the cap even for a
-    * degenerate billion-member bucket, the window sort is spillable, and
-    * the window's hash partitioning satisfies the groupBy (ONE exchange;
-    * plan-asserted in DedupAnnSpec). slice-after-collect_list would
+    * generator (MinHash-LSH, SimHash, and the embedding sign-LSH in
+    * vigil.ann.Ann): cap membership BEFORE aggregating via row_number
+    * over the bucket key — the cap-smallest members by `member` order
+    * (deterministic: `member` starts with the unique id) — so the agg
+    * buffer is bounded by the cap even for a degenerate billion-member
+    * bucket, the window sort is spillable, and the window's hash
+    * partitioning satisfies the groupBy (ONE exchange; plan-asserted in
+    * DedupAnnSpec). slice-after-collect_list would
     * materialize the whole bucket first — the bug class this helper
     * exists to prevent from reappearing in any one variant.
     * Returns keyCols + `members` (sorted array), buckets of ≥2 only.
@@ -928,85 +942,6 @@ object Dedup {
       .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
   }
 
-  /** MinHash-LSH candidate pairs, ids only — bucket pairs WITHOUT the
-    * per-pair Jaccard estimate. Cheapest when pair similarity is
-    * concentrated near 0 with a thin duplicate tail (the realistic
-    * web-corpus shape): the shuffle carries ids instead of signatures and
-    * no estimate work happens at all. On adversarially dense corpora
-    * (most pairs mid-similarity, e.g. the template-generated test docs
-    * where 67% of pairs have J ≥ 0.5) prefer [[minhashLsh]] with a
-    * minEst pre-filter: its in-bucket estimate drops mid-sim pairs
-    * BEFORE they materialize as shuffle rows, which measures 2× faster
-    * there (see BENCH/BASELINE.md). Pure column algebra, no pair UDF.
-    */
-  def candidatePairs(
-      df: DataFrame, textCol: String, idCol: String,
-      bands: Int, rowsPerBand: Int, shingleK: Int,
-      seed: Long, maxBucketSize: Int = 100000): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val sigUdf = udf((t: String) =>
-      MinHash.signature(if (t == null) "" else t, numHashes, shingleK, seed))
-    val sigs = df.select(col(idCol).as("id"), sigUdf(col(textCol)).as("sig"))
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",",
-          (0 until rowsPerBand).map(r => element_at(col("sig"), b * rowsPerBand + r + 1)): _*))
-          .as("bh"))
-    }
-    val grouped = cappedSortedMembers(
-      sigs
-        .withColumn("bandrow", explode(array(bandCols: _*)))
-        .select(col("bandrow.band").as("band"), col("bandrow.bh").as("bh"), col("id")),
-      Seq("band", "bh"), col("id"), maxBucketSize)
-    // lazy pair iterator, NOT a materialized pair array: memory stays
-    // bounded by the member list even for C(k,2)-sized outputs
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped
-      .select(col("members"))
-      .as[Seq[Long]]
-      .flatMap { ids =>
-        val a = ids.toArray
-        (0 until a.length).iterator.flatMap(i =>
-          ((i + 1) until a.length).iterator.map(j => (a(i), a(j))))
-      }
-      .toDF("id_a", "id_b")
-      .distinct()
-  }
-
-  /** Scale-safe exact near-dup pairs: MinHash-LSH candidate generation
-    * followed by exact word-set Jaccard verification — the 100 TB shape
-    * (candidates are linear in corpus size; the exact O(len) verify runs
-    * only on candidate pairs), with output identical to the brute-force
-    * all-pairs [[jaccardPairs]] above the threshold.
-    *
-    * Candidate generation shingles at `shingleK` — the SAME k the
-    * verifier tokenizes at, so the MinHash collision probability always
-    * tracks the exact Jaccard being verified. Default k=1 verifies
-    * word-SET Jaccard; k≥2 is the n-gram-Jaccard variant (the verified
-    * metric is k-shingle-set Jaccard, which decays much faster under
-    * small edits — a deliberate stricter similarity notion, not a recall
-    * break, because candidates and verifier move together). 24 bands ×
-    * 6 rows: a pair at J = 0.9 misses all bands with probability
-    * (1-0.9^6)^24 ≈ 1.3e-8.
-    *
-    * Candidate pre-filter: in-bucket estimate ≥ minJaccard - 0.2. With
-    * 144 hashes the estimator std at J = 0.9 is √(0.9·0.1/144) ≈ 2.5%,
-    * so a true ≥ 0.9 pair estimating below 0.7 is an 8σ event (~1e-15) —
-    * recall is untouched while the mid-similarity candidate bulk is
-    * dropped inside the bucket UDF, before it ever becomes shuffle rows
-    * (on the dense test corpus that beats id-only [[candidatePairs]] 2×).
-    *
-    * `blockCol`: optional blocking key, folded into the LSH bucket key
-    * (same-block candidates only — strictly smaller buckets and a
-    * block-partitioned shuffle; equivalent to blocking the brute force).
-    *
-    * NOTE on oracle parity: the LSH path is probabilistic (miss ~1.3e-8
-    * per pair at J = 0.9 given the band math above, plus the 8σ prefilter
-    * tail) — exact on the committed fixtures and verified at sf0.001 and
-    * sf0.1 (DedupAnnSpec exactness gates); regenerating the corpus
-    * requires re-running the sf0.1 gate / vigil.tools.RecallProbe.
-    */
   /** The verifier's tokenization, shared by [[neardupVerified]] and
     * [[neardupVerifiedIncremental]]: it matches the CANDIDATE shingling
     * exactly — single-space split of the lowercased text, word k-grams
@@ -1064,6 +999,50 @@ object Dedup {
   private def verifyPartitions(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
 
+  /** Scale-safe exact near-dup pairs: MinHash-LSH candidate generation
+    * followed by exact word-set Jaccard verification — the 100 TB shape
+    * (candidates are linear in corpus size; the exact O(len) verify runs
+    * only on candidate pairs), with output identical to the brute-force
+    * all-pairs [[jaccardPairs]] above the threshold.
+    *
+    * Candidate generation shingles at `shingleK` — the SAME k the
+    * verifier tokenizes at, so the MinHash collision probability always
+    * tracks the exact Jaccard being verified. Default k=1 verifies
+    * word-SET Jaccard; k≥2 is the n-gram-Jaccard variant (the verified
+    * metric is k-shingle-set Jaccard, which decays much faster under
+    * small edits — a deliberate stricter similarity notion, not a recall
+    * break, because candidates and verifier move together). 24 bands ×
+    * 6 rows: a pair at J = 0.9 misses all bands with probability
+    * (1-0.9^6)^24 ≈ 1.3e-8.
+    *
+    * Candidate pre-filter: in-bucket estimate ≥ minJaccard - 0.2. With
+    * 144 hashes the estimator std at J = 0.9 is √(0.9·0.1/144) ≈ 2.5%,
+    * so a true ≥ 0.9 pair estimating below 0.7 is an 8σ event (~1e-15) —
+    * recall is untouched while the mid-similarity candidate bulk is
+    * dropped inside the bucket UDF, before it ever becomes shuffle rows
+    * (on the dense test corpus that beat id-only candidate emission 2×).
+    *
+    * `blockCol`: optional blocking key, folded into the LSH bucket key
+    * (same-block candidates only — strictly smaller buckets and a
+    * block-partitioned shuffle; equivalent to blocking the brute force).
+    *
+    * NOTE on oracle parity: the LSH path is probabilistic (miss ~1.3e-8
+    * per pair at J = 0.9 given the band math above, plus the 8σ prefilter
+    * tail) — exact on the committed fixtures and verified at sf0.001 and
+    * sf0.1 (DedupAnnSpec exactness gates); regenerating the corpus
+    * requires re-running the sf0.1 `oracle_gate.py … q_neardup_verified`
+    * gate.
+    *
+    * Lost pushdown (deliberate): the `jaccard` column comes from
+    * `sorted_jaccard_ge`, which reports itself non-deterministic so the
+    * `jaccard >= t` filter cannot be inlined into the pair-join condition
+    * (that re-ran the merge walk 2-3× per pair). The cost lands on
+    * callers: NO predicate on this output — not even a cheap one on
+    * id_a/id_b — is pushed below the final projection, so filter the
+    * input `df` (or block with `blockCol`) instead of filtering the pairs
+    * afterwards. The plan-shape specs in DedupAnnSpec (one walk, no dedup
+    * exchange) are the canaries if a Spark upgrade changes this.
+    */
   def neardupVerified(
       df: DataFrame, textCol: String, idCol: String,
       minJaccard: Double, bands: Int = 24, rowsPerBand: Int = 6,

@@ -82,7 +82,7 @@ object ScalingBench {
     // score-once single-pass shape (same as the driver-bench flagship) —
     // no executor-storage cache, so memory per executor is bounded by the
     // window buffers and the identical job runs at any cluster size
-    // (DecideCached's whole-corpus persist OOMs small executors).
+    // (a whole-corpus persist of the scored frame OOMs small executors).
     def once(): Double = {
       val t0 = System.nanoTime()
       Decide.decideWindowed(turns, cfg)

@@ -594,7 +594,8 @@ class DedupAnnSpec extends AnyFunSuite {
       bands = 24, rowsPerBand = 6, shingleK = 1)
     assert(maxBucket * 10 <= 100000,
       s"largest LSH bucket $maxBucket is within 10× of the 100k cap — " +
-        "neardupVerified exactness is at risk; re-run vigil.tools.RecallProbe")
+        "neardupVerified exactness is at risk; re-run the sf0.1 " +
+        "`oracle_gate.py … q_neardup_verified` gate")
   }
 
   test("sf0.1-equivalent density: neardupVerified equals brute force on big clusters") {

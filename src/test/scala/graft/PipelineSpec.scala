@@ -127,4 +127,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(a.size == b.size && a.nonEmpty)
     a.zip(b).foreach { case (x, y) => assert(x == y, s"row mismatch: $x vs $y") }
   }
+
+  test("decideWindowed plan: score once, one exchange, scoring above it") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    val windowed = Decide.decideWindowed(vigil.Synth.corpusDF(spark, 100),
+      Decide.Default.copy(targetLang = "pt"))
+      .select("conv_id", "turn_idx", "contem_pii", "scrubbed_text", "lang",
+        "perplexity", "quality_pass", "toxic", "keep")
+    val qe = windowed.queryExecution
+    // CollapseProject must not duplicate the regex-heavy scoring kernel
+    // per derived column
+    val scores = "turn_score".r.findAllIn(qe.optimizedPlan.toString).size
+    assert(scores == 1, s"expected turn_score once in the optimized plan, saw $scores")
+    // under AQE the executed plan is an AdaptiveSparkPlanExec LEAF, so a
+    // collect() over it finds no exchange at all; walk the plan it wraps.
+    // initialPlan, not inputPlan: only the former has the exchanges
+    // EnsureRequirements adds for the windows' required distribution
+    val phys = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val exchanges = phys.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1 && exchanges.head.shuffleOrigin == REPARTITION_BY_NUM &&
+      exchanges.head.outputPartitioning.toString.contains("conv_id"),
+      s"expected one repartition(conv_id) exchange shared by both windows:\n$phys")
+    // scale shape: only the raw turn width crosses the shuffle; the wide
+    // scored columns are produced on the reduce side
+    assert(!exchanges.head.toString.contains("turn_score"),
+      s"scoring runs below the conv_id exchange:\n${exchanges.head}")
+  }
 }
