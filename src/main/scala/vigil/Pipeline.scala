@@ -256,7 +256,10 @@ object Pipeline {
   /** Two-phase run:
     *  1. per-turn scoring (narrow) written bucketed-by-conv_id with
     *     per-bucket lineage — the expensive regex/LM pass runs exactly once
-    *     per turn, and a crashed run resumes at bucket granularity;
+    *     per turn (the write is the only action over it; lineage counts
+    *     come from a re-read, see [[TableIO.writeScored]]; TableIOEvalSpec
+    *     counts the source reads), and a crashed run resumes at bucket
+    *     granularity;
     *  2. conversation decisions aggregated from a re-read that scans ONLY
     *     (conv_id, turn_idx, lang, contem_pii, toxic) — with parquet
     *     column pruning this reads a few % of the stored bytes;

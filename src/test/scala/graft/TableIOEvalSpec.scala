@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import vigil.{Decide, Eval, Synth, TableIO}
@@ -18,6 +18,32 @@ class TableIOEvalSpec extends AnyFunSuite {
     .getOrCreate()
   import spark.implicits._
 
+  private type Counters = (Long, Long, Long, Long)
+
+  /** `_lineage` rows of one snapshot: bucket → (n_turns, kept, dropped,
+    * scrubbed). Fails on a bucket with more than one row. */
+  private def lineageOf(dir: String, snap: String): Map[Int, Counters] = {
+    val rows = TableIO.lineage(spark, dir).get
+      .filter(col("input_snapshot_id") === snap)
+      .select("bucket", "n_turns", "kept", "dropped", "scrubbed").collect()
+      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+    assert(rows.map(_._1).distinct.length == rows.length, "one lineage row per bucket")
+    rows.toMap
+  }
+
+  /** The lineage counters by their defining formulas, straight from the
+    * scored frame per bucket: `keep` (else `keep_turn`) and
+    * `scrubbed_text =!= clean`. */
+  private def countersOf(scored: DataFrame, nBuckets: Int): Map[Int, Counters] = {
+    val keep = if (scored.columns.contains("keep")) col("keep") else col("keep_turn")
+    scored.groupBy(TableIO.bucketOf(nBuckets).as("bucket"))
+      .agg(count(lit(1)), sum(keep.cast("long")), sum((!keep).cast("long")),
+        sum((col("scrubbed_text") =!= col("clean")).cast("long")))
+      .collect()
+      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+      .toMap
+  }
+
   test("writeScored writes bucketed data + lineage; resume skips done buckets") {
     val dir = Files.createTempDirectory("vigil_tio").toString
     val scored = Decide.decide(
@@ -33,6 +59,8 @@ class TableIOEvalSpec extends AnyFunSuite {
     val sums = lin.agg(sum("n_turns"), sum("kept"), sum("dropped")).collect()(0)
     assert(sums.getLong(0) == total)
     assert(sums.getLong(1) + sums.getLong(2) == total)
+    val expected = countersOf(scored, 8)
+    assert(lineageOf(dir, "snap-1") == expected)
 
     // resume with the same snapshot: everything already done → no-op
     val n2 = TableIO.writeScored(spark, scored, dir, snapshotId = "snap-1",
@@ -44,6 +72,7 @@ class TableIOEvalSpec extends AnyFunSuite {
     val n3 = TableIO.writeScored(spark, scored, dir, snapshotId = "snap-2",
       nBuckets = 8)
     assert(n3 == n1)
+    assert(lineageOf(dir, "snap-2") == expected)
   }
 
   test("partial-failure resume: only missing buckets are recomputed") {
@@ -55,11 +84,57 @@ class TableIOEvalSpec extends AnyFunSuite {
     val part = scored.filter(TableIO.bucketOf(8) < 3)
     val nPart = TableIO.writeScored(spark, part, dir, "snap-1", nBuckets = 8)
     assert(nPart > 0 && nPart <= 3)
+    val expected = countersOf(scored, 8)
+    assert(lineageOf(dir, "snap-1") == expected.filter(_._1 < 3))
     // resume with the FULL input: already-done buckets must be skipped
     val nRest = TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8)
     assert(nRest > 0)
     assert(TableIO.readScored(spark, dir).count() == scored.count(),
       "after resume the table holds exactly one copy of every turn")
+    assert(lineageOf(dir, "snap-1") == expected)
+  }
+
+  test("Pipeline.run reads every source turn exactly once") {
+    val dir = Files.createTempDirectory("vigil_reads").toString
+    Synth.corpusDF(spark, 40).write.parquet(s"$dir/in")
+    val reads = spark.sparkContext.longAccumulator("textReads")
+    val counted = udf { (s: String) => reads.add(1L); s }
+    val turns = spark.read.parquet(s"$dir/in").withColumn("text", counted(col("text")))
+    val n = spark.read.parquet(s"$dir/in").count()
+    val view = vigil.Pipeline.run(spark, turns, s"$dir/store", "snap-1",
+      Decide.Default.copy(targetLang = "pt"), nBuckets = 8)
+    assert(reads.value == n, s"Pipeline.run read ${reads.value} turns for $n")
+    view.write.format("noop").mode("overwrite").save()
+    assert(reads.value == n, "the returned view reads the stored table, not the source")
+  }
+
+  test("clustered write: each bucket directory holds nParts / nBuckets files") {
+    val dir = Files.createTempDirectory("vigil_files").toString
+    val scored = Decide.scoreTurns(Synth.corpusDF(spark, 60).repartition(3),
+      Decide.Default.copy(targetLang = "pt"))
+    // 3 input partitions: nParts is the smallest multiple of nBuckets ≥ 3
+    for ((nBuckets, perBucket) <- Seq(2 -> 2, 4 -> 1)) {
+      val snap = s"b$nBuckets"
+      TableIO.writeScored(spark, scored, dir, snap, nBuckets)
+      val buckets = new java.io.File(s"$dir/data/snapshot=$snap").listFiles()
+        .filter(_.getName.startsWith("bucket=")).sortBy(_.getName)
+      assert(buckets.length == nBuckets)
+      buckets.foreach { b =>
+        val files = b.list().count(_.startsWith("part-"))
+        assert(files == perBucket, s"${b.getName} holds $files data files")
+      }
+    }
+  }
+
+  test("upgrade canary: repartition(k·n, conv_id) partition p holds exactly bucket p mod n") {
+    val turns = Synth.corpusDF(spark, 60)
+    for ((n, k) <- Seq(8 -> 1, 8 -> 3, 5 -> 2, 16 -> 2)) {
+      val misaligned = turns.repartition(k * n, col("conv_id"))
+        .filter(spark_partition_id() % n =!= TableIO.bucketOf(n))
+        .count()
+      assert(misaligned == 0,
+        s"HashPartitioning no longer agrees with bucketOf($n) at ${k * n} partitions")
+    }
   }
 
   test("orphan bucket (data committed, lineage lost) is replaced, not duplicated") {
