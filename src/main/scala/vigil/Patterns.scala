@@ -68,9 +68,11 @@ object Patterns {
 
   // --- Name grammar + strong contexts (detector.py:240-255) --------------
   // Bounded repetition {1,5} kept to avoid catastrophic backtracking.
-  private val NomeParte = """[A-Z][a-záàâãéêíóôõúç]+"""
+  private val NomeLower = "a-záàâãéêíóôõúç"
+  private val NomeParte = "[A-Z][" + NomeLower + "]+"
   private val NomeCompleto =
     NomeParte + """(?:\s+(?:de|da|do|das|dos|e)?\s*""" + NomeParte + """){1,5}"""
+  private val Trailer = "(?:CPF|portador)"
 
   /** In reference list order — emission order is observable in outputs. */
   val StrongNameContexts: Seq[Pattern] = Seq(
@@ -78,10 +80,23 @@ object Patterns {
     pi("""(?:nome)[:\s]+(""" + NomeCompleto + """)"""),
     pi("""(?:chamo-me|me\s+chamo)[:\s]+(""" + NomeCompleto + """)"""),
     pi("""(?:CPF[:\s]*[\d.-]+[,\s]+)(""" + NomeCompleto + """)"""),
-    pi("""(""" + NomeCompleto + """)[,\s]+(?:CPF|portador)"""),
+    pi("""(""" + NomeCompleto + """)[,\s]+""" + Trailer),
     pi("""(?:cidadão|cidadã|requerente|solicitante)[:\s]+(""" + NomeCompleto + """)"""),
     pi("""(?:servidor(?:a)?|funcionário(?:a)?)[:\s]+(""" + NomeCompleto + """)""")
   )
+
+  /** Index in [[StrongNameContexts]] of the one pattern with no literal
+    * prefix: the name comes first and the trailer `(?:CPF|portador)` last.
+    */
+  val TrailerNameIndex = 4
+  /** That pattern's trailer alone. */
+  val NameTrailer: Pattern = pi(Trailer)
+  /** One char of that pattern's match before its trailer: the union of
+    * `[A-Z]`, `[a-záàâãéêíóôõúç]`, `\s` and `,` (the connectors de/da/...
+    * are letters of the second class). Under `UI` `[A-Z]` matches no char
+    * the second class misses, but the union is the obvious superset.
+    */
+  val NameSpanChar: Pattern = pi("[A-Z" + NomeLower + """\s,]""")
 
   /** Title prefixes stripped from extracted names (detector.py:278-280). */
   val NamePrefixes: Seq[String] = Seq("Dr", "Dra", "Sr", "Sra", "Prof", "Profa")

@@ -1,6 +1,6 @@
 package vigil
 
-import java.util.regex.Pattern
+import java.util.regex.{Matcher, Pattern}
 import scala.collection.mutable
 
 /** The per-row PII analysis kernel: matchers with anti-false-positive
@@ -14,9 +14,24 @@ import scala.collection.mutable
   * executor.
   *
   * Performance: all patterns are compiled once per JVM (object init), which
-  * at cluster scale means once per executor via classloading. Per row the
-  * cost is a fixed set of linear regex scans over the turn text — no
-  * allocation-heavy intermediate collections beyond the result buffers.
+  * at cluster scale means once per executor via classloading. A regex scan
+  * is not linear in general: a pattern with no literal prefix, under
+  * `CASE_INSENSITIVE` (where `[A-Z]` matches any letter), tries a
+  * backtracking parse at every start position. So [[PreScan]] makes one
+  * O(n) pass and each pattern runs only when the text passes a condition
+  * every one of its matches needs:
+  *   - a count of `\d` code points (`Character.isDigit(int)`, exactly the
+  *     `\d` of `UNICODE_CHARACTER_CLASS`): CPF ≥ 11, phone ≥ 10, card ≥ 13,
+  *     SSN ≥ 9, the `\d` each pattern's shortest match holds;
+  *   - a keyword every match contains, tested case-folded. Under
+  *     `CASE_INSENSITIVE|UNICODE_CASE` U+0130/U+0131 match `i`, U+017F
+  *     matches `s` and U+212A matches `k`, which a lowercase substring test
+  *     misses; a text holding one of them opens every keyword gate.
+  * The trailer-anchored name pattern (`StrongNameContexts(4)`) is further
+  * searched only near its trailer ([[forEachTrailerNameMatch]]). A gate or
+  * a narrowed search never changes a detection, a signal or a scrubbed
+  * byte; PropertySpec checks both, and PiiCoreSpec locks the output on the
+  * Synth corpus.
   */
 object PiiCore {
 
@@ -27,7 +42,6 @@ object PiiCore {
     * substring, which is what the reference's window slicing does.
     */
   private final class MatcherSet {
-    import java.util.regex.Matcher
     private def m(p: Pattern): Matcher = p.matcher("")
     val cpfFormatted = m(Patterns.CpfFormatted)
     val cpfPartial = m(Patterns.CpfPartial)
@@ -44,6 +58,7 @@ object PiiCore {
     val address: Array[Matcher] = Patterns.AddressMarkers.map(m).toArray
     val contact: Array[Matcher] = Patterns.ContactMarkers.map(m).toArray
     val names: Array[Matcher] = Patterns.StrongNameContexts.map(m).toArray
+    val nameTrailer = m(Patterns.NameTrailer)
     val card = m(Patterns.CardCandidate)
     val ssn = m(Patterns.Ssn)
     val apiKey = m(Patterns.ApiKey)
@@ -161,46 +176,72 @@ object PiiCore {
   }
 
   /** One O(n) pre-scan replacing up to ~15 full regex scans on the common
-    * (PII-free) turn: which character classes / keywords exist at all.
+    * (PII-free) turn: how many digits and which keywords exist at all; each
+    * gate is a necessary condition of the patterns it guards (PropertySpec
+    * checks each gate against its patterns).
     * The flag loop also detects pure-ASCII texts (the dominant case), for
     * which the keyword gates run as allocation-free case-folded scans over
     * the original text instead of materializing a full `toLowerCase` copy
     * — the largest per-turn allocation left after the r4 zero-copy clean
     * path (equivalence for ASCII is exact; see [[asciiFoldedContains]]).
     */
-  private final class PreScan(text: String) {
-    var hasDigit = false
+  private[vigil] final class PreScan(text: String) {
+    /** `\d` code points: `Character.isDigit(int)` (Nd), not ASCII '0'-'9' —
+      * the gated regexes run with UNICODE_CHARACTER_CLASS where `\d`
+      * matches every Nd code point (Python-re parity), supplementary-plane
+      * ones (e.g. Osmanya U+104A0) included.
+      */
+    var digits = 0
     var hasAt = false
-    var hasUpper = false
     var isAscii = true
+    /** U+0130 İ, U+0131 ı, U+017F ſ or U+212A K: chars that `UNICODE_CASE`
+      * matches against an ASCII keyword letter (i, s, k) where
+      * `toLowerCase(ROOT).contains` does not find it.
+      */
+    var hasFoldChar = false
     private lazy val lower = text.toLowerCase(java.util.Locale.ROOT)
     var i = 0
-    // full scan (no early break): isAscii needs every char, and the old
-    // all-three-flags break almost never fired ('@' is rare)
+    // full scan (no early break): isAscii and digits need every char
     while (i < text.length) {
       val c = text.charAt(i)
-      // Character.isDigit (Nd category), not ASCII '0'-'9': the gated
-      // regexes run with UNICODE_CHARACTER_CLASS where \d matches all Nd
-      // digits (Python-re parity), so the gate must be a superset
       if (c > 127) {
         isAscii = false
-        if (Character.isDigit(c)) hasDigit = true
-        else if (Character.isUpperCase(c)) hasUpper = true
+        val cp = text.codePointAt(i)
+        if (Character.isDigit(cp)) digits += 1
+        else if (cp == 0x130 || cp == 0x131 || cp == 0x17F || cp == 0x212A) hasFoldChar = true
+        i += Character.charCount(cp)
+      } else {
+        if (c >= '0' && c <= '9') digits += 1
+        else if (c == '@') hasAt = true
+        i += 1
       }
-      else if (c >= '0' && c <= '9') hasDigit = true
-      else if (c == '@') hasAt = true
-      else if (c >= 'A' && c <= 'Z') hasUpper = true
-      i += 1
     }
     // keyword gates (substring scan on the lowercased text is far cheaper
     // than running the full alternation patterns; allocation-free for
     // ASCII texts)
     def has(kw: String): Boolean =
-      if (isAscii) asciiFoldedContains(text, kw) else lower.contains(kw)
-    lazy val nameContextPossible: Boolean =
-      has("nome") || has("chamo") || has("cpf") || has("portador") ||
-        has("cidad") || has("requerente") || has("solicitante") ||
-        has("servidor") || has("funcion")
+      hasFoldChar || (if (isAscii) asciiFoldedContains(text, kw) else lower.contains(kw))
+    // the fewest `\d` a match holds: \d{3}.\d{3}.\d{3}-\d{2} / \d{9}-\d{2} /
+    // \d{11}; (\d{2}) \d{4}\d{4} in every phone variant; \d([ -]?\d){12,};
+    // \d{3}-\d{2}-\d{4}
+    def cpfPossible: Boolean = digits >= 11
+    def phonePossible: Boolean = digits >= 10
+    def cardPossible: Boolean = digits >= 13
+    def ssnPossible: Boolean = digits >= 9
+    // PhoneWithContext's alternation; keywords kept free of i/k/s
+    lazy val phoneContextPossible: Boolean =
+      has("fone") || has("tel") || has("cel") || has("contato") ||
+        has("what") || has("zap")
+    /** Per [[Patterns.StrongNameContexts]] pattern, in list order: whether
+      * the text holds a keyword every match of that pattern contains.
+      */
+    lazy val nameGates: Array[Boolean] = {
+      val nome = has("nome")
+      val cpf = has("cpf")
+      Array(has("meu") && nome, nome, has("chamo"), cpf, cpf || has("portador"),
+        has("cidad") || has("requerente") || has("solicitante"),
+        has("servidor") || has("funcion"))
+    }
     // no digit requirement: the RG charset [\d.-]+ matches dots/dashes
     // alone, so "rg" presence is the only safe gate
     lazy val rgPossible: Boolean = has("rg")
@@ -214,7 +255,49 @@ object PiiCore {
         has("apartamento") || has("apt") || has("cep")
     lazy val contactPossible: Boolean =
       (has("contato") || has("whats") || has("zap") || has("fone") ||
-        has("cel")) && hasDigit
+        has("cel")) && digits > 0
+  }
+
+  /** Chars of [[Patterns.NameSpanChar]], over the BMP: no supplementary
+    * code point is one (PropertySpec checks it), so the walk-back below
+    * stops at a surrogate.
+    */
+  private val NameSpanChars: java.util.BitSet = {
+    val bs = new java.util.BitSet(0x10000)
+    val m = Patterns.NameSpanChar.matcher("")
+    (0 until 0x10000).foreach { c => if (m.reset(c.toChar.toString).matches()) bs.set(c) }
+    bs
+  }
+
+  /** Calls `f` on each match of `StrongNameContexts(4)`,
+    * `(NomeCompleto)[,\s]+(?:CPF|portador)`, with `m` (its matcher) positioned
+    * on it, yielding exactly the matches and groups of a plain
+    * `while (m.find())` loop over `text`, in the same order. `trailer`
+    * matches [[Patterns.NameTrailer]]. From search position `p`:
+    *   1. find the first trailer starting at or after `p`;
+    *   2. walk back from it over name-span chars, stopping at `w` ≥ `p`;
+    *   3. run `find()` on `region(w, lastTrailerEnd)`; continue from its end.
+    * Exact because every char of a match before its trailer is a name-span
+    * char, so no match starting at or after `p` starts before `w` (not even
+    * one running past the first trailer to a later one); and every match
+    * ends at a trailer's end while the pattern has no lookaround, `\b` or
+    * anchor, so capping the region at the last trailer's end drops no
+    * match and reorders no backtracking choice.
+    */
+  private[vigil] def forEachTrailerNameMatch(m: Matcher, trailer: Matcher,
+      text: String)(f: Matcher => Unit): Unit = {
+    // "cpf" and "portador" cannot overlap, so find() visits every trailer
+    trailer.reset(text)
+    var lastEnd = -1
+    while (trailer.find()) lastEnd = trailer.end
+    var p = 0
+    while (p < lastEnd && trailer.region(p, text.length).find()) {
+      var w = trailer.start
+      while (w > p && NameSpanChars.get(text.charAt(w - 1))) w -= 1
+      if (!m.region(w, lastEnd).find()) return
+      f(m)
+      p = m.end
+    }
   }
 
   /** Full analysis of an already-cleaned text (see TextClean.clean). */
@@ -228,7 +311,7 @@ object PiiCore {
     // --- R1/R2: CPF formatted + partial (shared digit-dedupe set;
     //     formatted wins — patterns.py:158-187)
     val seenCpf = mutable.HashSet.empty[String]
-    if (pre.hasDigit) {
+    if (pre.cpfPossible) {
       val m = ms.cpfFormatted.reset(text)
       while (m.find()) {
         if (!isSeiContext(ms, text, m.start)) {
@@ -250,7 +333,7 @@ object PiiCore {
     // --- R3: CPF numeric with explicit context; emits capture group 1
     //     (digits only) — no dedupe vs R1/R2 in the reference
     //     (patterns.py:189-201)
-    if (pre.hasDigit) {
+    if (pre.cpfPossible) {
       val m = ms.cpfNumeric.reset(text)
       while (m.find()) {
         if (!isNotCpfContext(ms, text, m.start)) {
@@ -272,9 +355,9 @@ object PiiCore {
     // --- R5: phone cascade — fixed variant order decides which surface
     //     form/confidence wins; dedupe by digits, reject <10 digits
     //     (patterns.py:210-247)
-    if (pre.hasDigit) {
+    if (pre.phonePossible) {
       val seenPhone = mutable.HashSet.empty[String]
-      def phonePass(m0: java.util.regex.Matcher, conf: Double): Unit = {
+      def phonePass(m0: Matcher, conf: Double): Unit = {
         val m = m0.reset(text)
         while (m.find()) {
           val norm = digitsOnly(m.group)
@@ -287,7 +370,7 @@ object PiiCore {
       }
       phonePass(ms.phone, 0.95)
       phonePass(ms.phoneIntl, 0.95)
-      phonePass(ms.phoneWithContext, 0.90)
+      if (pre.phoneContextPossible) phonePass(ms.phoneWithContext, 0.90)
       phonePass(ms.phoneNoParens, 0.80)
     }
 
@@ -303,23 +386,29 @@ object PiiCore {
     // --- N2-N6: conservative name extraction (detector.py:243-268) —
     //     per-pattern finditer in fixed order, clean + validate + dedupe by
     //     lowercased name (first occurrence wins, conf 0.80)
-    if (pre.nameContextPossible) {
+    val nameGates = pre.nameGates
+    if (nameGates.contains(true)) {
       val seenNames = mutable.HashSet.empty[String]
-      ms.names.foreach { pat =>
-        val m = pat.reset(text)
-        while (m.find()) {
-          val raw = m.group(1).trim
-          val name = cleanName(raw)
-          if (name.nonEmpty && isValidPersonName(name)) {
-            // span of the *cleaned* name inside the capture (cleaning only
-            // strips from the edges, so indexOf is exact)
-            val rel = m.group(1).indexOf(name)
-            val beg = if (rel >= 0) m.start(1) + rel else m.start(1)
-            val end = beg + name.length
-            scrub += ScrubSpan("nome", beg, end)
-            if (seenNames.add(name.toLowerCase(java.util.Locale.ROOT)))
-              details += Detection("nome", name, 0.80, beg, end)
-          }
+      def emitName(m: Matcher): Unit = {
+        val raw = m.group(1).trim
+        val name = cleanName(raw)
+        if (name.nonEmpty && isValidPersonName(name)) {
+          // span of the *cleaned* name inside the capture (cleaning only
+          // strips from the edges, so indexOf is exact)
+          val rel = m.group(1).indexOf(name)
+          val beg = if (rel >= 0) m.start(1) + rel else m.start(1)
+          val end = beg + name.length
+          scrub += ScrubSpan("nome", beg, end)
+          if (seenNames.add(name.toLowerCase(java.util.Locale.ROOT)))
+            details += Detection("nome", name, 0.80, beg, end)
+        }
+      }
+      ms.names.indices.foreach { k =>
+        if (nameGates(k)) {
+          val m = ms.names(k).reset(text)
+          if (k == Patterns.TrailerNameIndex)
+            forEachTrailerNameMatch(m, ms.nameTrailer, text)(emitName)
+          else while (m.find()) emitName(m)
         }
       }
     }
@@ -327,7 +416,7 @@ object PiiCore {
     // --- L5: credit card via Luhn (north rule, SURVEY §2.10). Skip
     //     candidates overlapping an earlier span (e.g. a +55 phone whose 13
     //     digits happen to pass mod-10).
-    if (pre.hasDigit) {
+    if (pre.cardPossible) {
       val seenCard = mutable.HashSet.empty[String]
       val m = ms.card.reset(text)
       while (m.find()) {
@@ -342,7 +431,7 @@ object PiiCore {
     }
 
     // --- L6: SSN + API keys (north rule)
-    if (pre.hasDigit) {
+    if (pre.ssnPossible) {
       val m = ms.ssn.reset(text)
       while (m.find()) {
         val overlaps = scrub.exists(s => m.start < s.end && s.beg < m.end)

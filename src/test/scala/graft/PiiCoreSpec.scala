@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.{PiiCore, TextClean, Patterns, Exclusions}
+import vigil.{PiiCore, TextClean, Patterns, Exclusions, Synth}
 
 /** Kernel tests ported from the reference's normative pinned strings:
   * /root/reference/tests/test_patterns.py, test_detector.py,
@@ -245,5 +245,46 @@ class PiiCoreSpec extends AnyFunSuite {
   test("pii inside 100KB padding is still found") {
     val big = ("lorem ipsum " * 5000) + "CPF 123.456.789-00" + (" dolor sit" * 5000)
     assert(byType(big, "cpf").size == 1)
+  }
+
+  test("keyword gates open on the chars UNICODE_CASE folds onto i / s / k") {
+    // U+0131 ı matches `i` in "solicitante" under CASE_INSENSITIVE|UNICODE_CASE
+    // (and Python re.IGNORECASE); NFKC keeps it
+    assert(detect("Solıcitante: João Silva").detalhes ==
+      Seq(vigil.Detection("nome", "João Silva", 0.80, 13, 23)))
+    assert(detect("Resıdo em Brasília, e-mail a@b.com").sinais.map(_.tipo) == Seq("endereco"))
+    assert(detect("Mınha senha, e-mail a@b.com").sinais.isEmpty)
+    assert(detect("Mınha CPF: a@b.com").sinais.map(_.tipo) == Seq("contexto_1pessoa"))
+  }
+  test("digit gates count supplementary-plane digits (Osmanya, U+104A0-U+104A9)") {
+    def osmanya(ds: String) = ds.map {
+      case d if d.isDigit => new String(Character.toChars(0x104A0 + (d - '0')))
+      case c => c.toString
+    }.mkString
+    val cpf = osmanya("123.456.789-09")
+    assert(TextClean.clean("CPF " + cpf) == "CPF " + cpf)
+    val r = detect("CPF " + cpf)
+    assert(r.detalhes.map(d => (d.tipo, d.valor)) == Seq(("cpf", cpf)))
+    assert(r.scrubbed == "CPF <CPF>")
+  }
+
+  // --- Kernel output lock ----------------------------------------------------
+  /** SHA-256 (first 16 hex digits) over `(detalhes, sinais, scrubbed)` of
+    * `detect` on the first 20,000 turns of `Synth.corpus(10000, 42,
+    * maxLen = 2, repeat)`: the text distribution perfbench's turns workloads
+    * score. A kernel optimization must leave this hash unchanged.
+    */
+  private def kernelOutputHash(repeat: Int): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    Synth.corpus(10000, 42L, maxLen = 2, repeat = repeat).take(20000).foreach { t =>
+      val a = detect(t.text)
+      val row = s"${a.detalhes.mkString(";")}|${a.sinais.mkString(";")}|${a.scrubbed}\n"
+      md.update(row.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    md.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+  test("kernel output lock: detect over 20,000 Synth turns at repeat 1 and 3") {
+    assert(kernelOutputHash(1) == "b6902ed6d0939564")
+    assert(kernelOutputHash(3) == "c7acdcca4b5a3e1a")
   }
 }
