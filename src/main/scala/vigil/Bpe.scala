@@ -1,7 +1,6 @@
 package vigil
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer — trainable subword vocabulary (Sennrich,
@@ -180,8 +179,4 @@ object Bpe {
     df.withColumn("tokens", functions.bpe_encode(col(textCol), b))
       .withColumn("n_tokens", size(col("tokens")).cast("long"))
   }
-
-  /** Column form for composition (tokens only). */
-  def tokensColumn(c: Column, model: Broadcast[Model]): Column =
-    functions.bpe_encode(c, model)
 }

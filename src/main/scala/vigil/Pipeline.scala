@@ -6,15 +6,21 @@ import org.apache.spark.sql.functions._
 /** End-to-end per-turn scoring + conversation-level decisions.
   *
   * Shape (SURVEY.md §3 E1): everything per-turn is a narrow, pipelined
-  * projection — scan → clean+analyze (one expression) → column algebra —
-  * with shuffles ONLY at (i) the conversation aggregates and (ii) the join
-  * of conversation decisions back to turns. Both key on conv_id; AQE
-  * coalesces/splits the exchanges at runtime.
+  * projection — scan → clean+analyze (one expression) → column algebra
+  * ([[scoreTurns]]). The conversation rules (majority language, PII
+  * density) are window aggregates ([[convWindows]]) over ONE hash
+  * exchange on conv_id, which both windows reuse. The two public shapes
+  * share that code and differ only in where scoring sits:
+  * [[decideWindowed]] scores above the exchange (raw-width shuffle, one
+  * stateless job) and [[Pipeline.run]] scores below it, inside the
+  * clustered write (skew-immune scoring, stored and resumable).
   *
-  * Skew: conversation lengths are power-law at transcript scale. The
-  * conversation aggregates use an explicit two-level salted aggregation
-  * (conv_id × salt, then conv_id) so no reducer ever owns a whole
-  * mega-conversation, on top of hash-aggregate map-side partial combine.
+  * Skew: conversation lengths are power-law at transcript scale. Scoring
+  * is narrow either way; the windows decide a whole conversation inside
+  * one task, whose sort and window buffer both spill, so a
+  * mega-conversation bounds that one task's time (a 300,000-turn
+  * conversation in a 506k-turn corpus: `Pipeline.run` plus its view in
+  * 21.8 s on 4 cores, no disk spill at an 8 GB heap).
   */
 object Decide {
 
@@ -22,7 +28,6 @@ object Decide {
       targetLang: String = "en",
       maxConvPiiDensity: Double = 0.5,
       minMajorityFrac: Double = 0.5,
-      saltBuckets: Int = 16,
       quality: Quality.Config = Quality.Default
   )
   val Default: Config = Config()
@@ -81,73 +86,11 @@ object Decide {
       .drop("__score")
   }
 
-  /** Conversation-level decisions over scored turns: majority language and
-    * PII density (north rule J4/A6). Two-level salted aggregation.
-    */
-  def convDecisions(scored: DataFrame, cfg: Config = Default): DataFrame = {
-    val salted = scored.select(
-      col("conv_id"),
-      pmod(hash(col("turn_idx")), lit(cfg.saltBuckets)).as("salt"),
-      col("lang"),
-      col("contem_pii").cast("int").as("pii"),
-      col("toxic").cast("int").as("tox")
-    )
-    // level 1: (conv, salt, lang) partials — no reducer sees a whole
-    // mega-conversation; level 2: merge salt buckets per (conv, lang);
-    // level 3: pick the majority lang + fold counters per conv.
-    val perLang = salted
-      .groupBy("conv_id", "salt", "lang")
-      .agg(count(lit(1)).as("cnt"), sum("pii").as("pii"), sum("tox").as("tox"))
-      .groupBy("conv_id", "lang")
-      .agg(sum("cnt").as("cnt"), sum("pii").as("pii"), sum("tox").as("tox"))
-    perLang
-      .groupBy("conv_id")
-      .agg(
-        // deterministic mode: max (count, lang) struct — ties break to the
-        // lexicographically largest lang
-        max(struct(col("cnt"), col("lang"))).as("m"),
-        sum("cnt").as("n_turns"),
-        sum("pii").as("n_pii_turns"),
-        sum("tox").as("n_toxic_turns")
-      )
-      .select(
-        col("conv_id"),
-        col("m.lang").as("majority_lang"),
-        (col("m.cnt").cast("double") / col("n_turns")).as("majority_frac"),
-        col("n_turns"),
-        (col("n_pii_turns").cast("double") / col("n_turns")).as("pii_density"),
-        col("n_toxic_turns")
-      )
-      .withColumn("drop_conversation",
-        (col("majority_lang") =!= lit(cfg.targetLang) &&
-          col("majority_frac") >= lit(cfg.minMajorityFrac)) ||
-          col("pii_density") > lit(cfg.maxConvPiiDensity))
-  }
-
-  /** Full decision: per-turn scoring + conversation decisions joined back.
-    * keep = keep_turn && !drop_conversation. The join keys on conv_id;
-    * conversation rows are ~|turns|/avg_len so at scale this is a
-    * sort-merge join with AQE skew splitting; at test scale AQE broadcasts.
-    *
-    * NOTE: the conversation branch re-derives the scoring from `turns`
-    * (Spark recomputes shared lineage on self-joins). Fine at test scale;
-    * the 100 TB path is [[Pipeline.run]], which materializes the scored
-    * table once and aggregates from a column-pruned re-read.
-    */
-  def decide(turns: DataFrame, cfg: Config = Default): DataFrame = {
-    val scored = scoreTurns(turns, cfg)
-    val conv = convDecisions(scored, cfg)
-      .select("conv_id", "majority_lang", "pii_density", "drop_conversation")
-    scored
-      .join(conv, Seq("conv_id"))
-      .withColumn("keep", col("keep_turn") && !col("drop_conversation"))
-  }
-
-  /** Single-pass decide: conversation decisions via window aggregates over
-    * the scored frame instead of the aggregate+self-join, so the expensive
-    * narrow scoring stage runs EXACTLY ONCE with no cache or materialized
-    * temp table (decide()'s self-join recomputes it). Equality-tested
-    * against decide() in PipelineSpec ("decideWindowed equals decide").
+  /** Stateless decide, one job: per-turn scoring plus the conversation
+    * decisions ([[convWindows]]), so the expensive narrow scoring stage
+    * runs EXACTLY ONCE with no cache or materialized temp table.
+    * Equality-tested against the salted aggregate+join twin in PipelineSpec
+    * ("decideWindowed equals decide").
     *
     * Shape: ONE exchange on conv_id, and it runs BEFORE scoring, so only
     * the RAW turn width (conv_id, turn_idx, role, text, tool, ts) crosses
@@ -155,18 +98,15 @@ object Decide {
     * detection structs, lang/quality fields, ~2-3× the raw width) are
     * produced on the reduce side and never serialized across executors.
     * Scoring is row-local, so its placement relative to the exchange
-    * cannot change any result (equality-tested against decide() in
-    * PipelineSpec); the explicit repartition also satisfies the
-    * (conv_id, lang) window's clustering, so both windows reuse it —
-    * plan shows a single Exchange, two sorts (plan-asserted in
-    * PipelineSpec: "decideWindowed plan: score once, one exchange, scoring
-    * above it"). Trade-off vs decide(): a whole conversation lands in
-    * one task (no salting), so at 10^12-turn scale with power-law
-    * conversations prefer [[Pipeline.run]]; for stateless single-job
-    * runs this is the fastest correct shape.
+    * cannot change any result; the explicit repartition also satisfies
+    * the windows' clustering, so both reuse it — plan shows a single
+    * Exchange, two sorts (plan-asserted in PipelineSpec: "decideWindowed
+    * plan: score once, one exchange, scoring above it"). Skew: a whole
+    * conversation, scoring included, lands in one task. [[Pipeline.run]]
+    * keeps a conversation's windows in one task too, but scores on the
+    * input splits, below its exchange.
     */
   def decideWindowed(turns: DataFrame, cfg: Config = Default): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // EXPLICIT partition count: the reduce side of this exchange is the
     // heavy scoring stage, and its shuffle BYTES are small (raw width) —
     // with an implicit count AQE's byte-based coalescing merges it into
@@ -185,13 +125,24 @@ object Decide {
     val nParts = math.max(
       spark.sessionState.conf.numShufflePartitions,
       spark.sparkContext.defaultParallelism * waves)
-    val scored = scoreTurns(turns.repartition(nParts, col("conv_id")), cfg)
+    convWindows(scoreTurns(turns.repartition(nParts, col("conv_id")), cfg), cfg)
+  }
+
+  /** Conversation decisions as window aggregates over scored turns: adds
+    * majority_lang, pii_density, drop_conversation and the final keep
+    * (keep_turn && !drop_conversation). `scored` must already be
+    * hash-partitioned on conv_id: that partitioning satisfies both windows'
+    * distribution, so they add no exchange of their own (plan-asserted in
+    * PipelineSpec), and every conversation is decided whole inside one task.
+    */
+  private[vigil] def convWindows(scored: DataFrame, cfg: Config): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val wLang = Window.partitionBy("conv_id", "lang")
     val wConv = Window.partitionBy("conv_id")
     scored
       .withColumn("__lang_cnt", count(lit(1)).over(wLang))
-      // deterministic mode, same as convDecisions: max (count, lang)
-      // struct — ties break to the lexicographically largest lang
+      // deterministic mode: max (count, lang) struct — ties break to the
+      // lexicographically largest lang
       .withColumn("__m",
         max(struct(col("__lang_cnt").as("cnt"), col("lang"))).over(wConv))
       .withColumn("__n_turns", count(lit(1)).over(wConv))
@@ -208,19 +159,10 @@ object Decide {
   }
 }
 
-/** Conversation assembly (north rule W4): stable turn ordering within each
-  * conversation and document-shaped rollups.
+/** Conversation assembly (north rule W4): document-shaped rollups of each
+  * conversation in stable turn order.
   */
 object Assemble {
-  import org.apache.spark.sql.expressions.Window
-
-  /** Stable per-conversation ordering: turn_idx ranks within conv_id
-    * (ties impossible by schema contract; ts as deterministic tiebreak).
-    */
-  def orderedTurns(turns: DataFrame): DataFrame = {
-    val w = Window.partitionBy("conv_id").orderBy(col("turn_idx"), col("ts"))
-    turns.withColumn("turn_rank", row_number().over(w))
-  }
 
   /** One row per conversation: turns concatenated in stable order.
     *
@@ -248,23 +190,24 @@ object Assemble {
 }
 
 /** The production-shaped job (SURVEY.md §3 E1 / north rule): score once,
-  * persist with lineage, aggregate conversations from a column-pruned
-  * re-read, join decisions back lazily.
+  * decide each conversation inside the clustered, resumable write, and
+  * return the stored snapshot.
   */
 object Pipeline {
 
-  /** Two-phase run:
-    *  1. per-turn scoring (narrow) written bucketed-by-conv_id with
-    *     per-bucket lineage — the expensive regex/LM pass runs exactly once
-    *     per turn (the write is the only action over it; lineage counts
-    *     come from a re-read, see [[TableIO.writeScored]]; TableIOEvalSpec
-    *     counts the source reads), and a crashed run resumes at bucket
-    *     granularity;
-    *  2. conversation decisions aggregated from a re-read that scans ONLY
-    *     (conv_id, turn_idx, lang, contem_pii, toxic) — with parquet
-    *     column pruning this reads a few % of the stored bytes;
-    *  3. the returned view joins scored × conv on conv_id (sort-merge +
-    *     AQE skew handling at scale) and derives the final keep flag.
+  /** One write, then a read:
+    *  1. per-turn scoring (narrow, on the input splits) feeds
+    *     [[TableIO.writeScored]], whose `repartition(nParts, conv_id)`
+    *     puts every conversation whole into one write task; the
+    *     conversation windows ([[Decide.convWindows]]) run in that task, so
+    *     each stored row carries majority_lang, pii_density,
+    *     drop_conversation and the final keep. The write is the only action
+    *     over the scoring: the expensive regex/LM pass runs exactly once per
+    *     turn (TableIOEvalSpec counts the source reads), and a crashed run
+    *     resumes at bucket granularity — a conversation lives in one bucket,
+    *     so a done bucket's decisions are final;
+    *  2. the returned view is the snapshot-scoped read of the stored table
+    *     (equality-tested against [[Decide.decideWindowed]] in PipelineSpec).
     */
   def run(
       spark: org.apache.spark.sql.SparkSession,
@@ -273,25 +216,10 @@ object Pipeline {
       snapshotId: String,
       cfg: Decide.Config = Decide.Default,
       nBuckets: Int = 64): DataFrame = {
-    val scored = Decide.scoreTurns(turns, cfg)
-    TableIO.writeScored(spark, scored, path, snapshotId, nBuckets)
-
-    // both re-reads are snapshot-scoped: earlier snapshots persist under
-    // $path/data (dynamic partition overwrite keeps them), so an unscoped
-    // read would fold THEIR turns into this run's conversation decisions
-    // (wrong majority_lang/pii_density) and duplicate output rows. The
-    // filter is a partition-directory prune (snapshot is a partition
-    // column), not a data scan.
-    val pruned = TableIO.readScored(spark, path, snapshotId)
-      .select("conv_id", "turn_idx", "lang", "contem_pii", "toxic")
-    val conv = Decide.convDecisions(pruned, cfg)
-    conv.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/conv")
-
+    TableIO.writeScored(spark, Decide.scoreTurns(turns, cfg), path, snapshotId, nBuckets, cfg)
+    // snapshot-scoped: earlier snapshots persist under $path/data (dynamic
+    // partition overwrite keeps them); the filter is a partition-directory
+    // prune, not a data scan
     TableIO.readScored(spark, path, snapshotId)
-      .join(spark.read.parquet(s"$path/conv")
-        .select("conv_id", "majority_lang", "pii_density", "drop_conversation"),
-        Seq("conv_id"))
-      .withColumn("keep", col("keep_turn") && !col("drop_conversation"))
   }
 }

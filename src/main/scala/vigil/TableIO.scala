@@ -34,18 +34,11 @@ object TableIO {
 
   def bucketOf(nBuckets: Int) = pmod(hash(col("conv_id")), lit(nBuckets))
 
-  /** Write scored turns partitioned by conv_id bucket, appending one
-    * lineage row per bucket. Buckets already present in `_lineage` for
-    * this (snapshotId, ruleVersionHash) are skipped — checkpoint-resume.
-    *
-    * One pass over the scoring: the partitioned data write is the only
-    * action over `scored`'s lineage. The lineage counters come from a
-    * column-pruned re-read of the buckets this call just wrote (this
-    * snapshot's partitions, minus the `done` buckets); the stored boolean
-    * `scrubbed` column (`scrubbed_text =!= clean`) lets that count read no
-    * text. The re-read relies on the assumption resume already relies on:
-    * the same snapshot id means the same input, so the written buckets
-    * hold exactly this call's rows.
+  /** Decide and write per-turn scored turns (the [[Decide.scoreTurns]]
+    * frame) partitioned by conv_id bucket, appending one lineage row per
+    * bucket. Buckets already present in `_lineage` for this (snapshotId,
+    * ruleVersionHash) are skipped — checkpoint-resume; the skip is a filter
+    * on conv_id below the exchange, so a resume scores only pending turns.
     *
     * Clustered write: `repartition(nParts, conv_id)` with `nParts` the
     * smallest multiple of `nBuckets` ≥ the scored frame's own partition
@@ -55,9 +48,22 @@ object TableIO {
     * exactly bucket p mod nBuckets and the snapshot gets at most `nParts`
     * files, not input tasks × nBuckets (TableIOEvalSpec's canary fails if
     * a Spark upgrade breaks that). The exchange sits above scoring in the
-    * plan: scoring stays on the input splits, and a write task only
-    * encodes. Skew bound: one conversation's scored rows all land in one
-    * write task.
+    * plan: scoring stays on the input splits. The conversation windows
+    * ([[Decide.convWindows]], under `cfg`'s rules) sit above it and reuse
+    * its partitioning, so each stored row carries majority_lang,
+    * pii_density, drop_conversation and the final keep with no further
+    * exchange (plan-asserted in PipelineSpec). Skew bound: one
+    * conversation's scored rows, and its windows, all land in one write
+    * task.
+    *
+    * One pass over the scoring: the partitioned data write is the only
+    * action over `scored`'s lineage. The lineage counters come from a
+    * column-pruned re-read of the buckets this call just wrote (this
+    * snapshot's partitions, minus the `done` buckets); the stored boolean
+    * `scrubbed` column (`scrubbed_text =!= clean`) lets that count read no
+    * text. `kept`/`dropped` count the final keep. The re-read relies on the
+    * assumption resume already relies on: the same snapshot id means the
+    * same input, so the written buckets hold exactly this call's rows.
     *
     * Returns the number of buckets actually processed this call.
     */
@@ -66,10 +72,8 @@ object TableIO {
       scored: DataFrame,
       path: String,
       snapshotId: String,
-      nBuckets: Int = 64): Long = {
-    // lineage keep counter: final `keep` when present (decided frames),
-    // else the turn-level `keep_turn` (conversation decisions come later)
-    val keepName = if (scored.columns.contains("keep")) "keep" else "keep_turn"
+      nBuckets: Int = 64,
+      cfg: Decide.Config = Decide.Default): Long = {
     val withBucket = scored
       .withColumn("scrubbed", col("scrubbed_text") =!= col("clean"))
       .withColumn("snapshot", lit(snapshotId))
@@ -86,13 +90,13 @@ object TableIO {
     val notDone = !col("bucket").isin(done.toSeq: _*)
 
     val pending = withBucket.filter(notDone)
-    // conv_id alone: on a narrow scored frame (Pipeline.run's) column
-    // pruning drops the scoring, so neither the resume check nor planning
-    // the partition count scores a turn
+    // conv_id alone: column pruning drops the scoring, so neither the
+    // resume check nor planning the partition count scores a turn
     val keys = pending.select("conv_id")
     if (done.nonEmpty && keys.isEmpty) return 0L
     val nParts = nBuckets * math.max(1,
       (keys.rdd.getNumPartitions + nBuckets - 1) / nBuckets)
+    val decided = Decide.convWindows(pending.repartition(nParts, col("conv_id")), cfg)
 
     // dynamic partition OVERWRITE, not append: a crash after the data job
     // commits but before the lineage append would leave a committed bucket
@@ -101,7 +105,7 @@ object TableIO {
     // (exactly Iceberg's overwrite-by-partition recovery semantics). The
     // snapshot partition level scopes the overwrite: a NEW snapshot lands
     // in its own partitions and never clobbers a previous snapshot's data
-    pending.repartition(nParts, col("conv_id")).write
+    decided.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("snapshot", "bucket")
@@ -110,16 +114,15 @@ object TableIO {
     // lineage counters per bucket from the written files. The explicit
     // schema reads only the two counter columns, and tolerates other
     // snapshots whose files lack them
-    val keepCol = col(keepName)
     val lin = spark.read
-      .schema(withBucket.select(keepName, "scrubbed", "snapshot", "bucket").schema)
+      .schema(decided.select("keep", "scrubbed", "snapshot", "bucket").schema)
       .parquet(s"$path/data")
       .filter(col("snapshot") === snapshotId && notDone)
       .groupBy("bucket")
       .agg(
         count(lit(1)).as("n_turns"),
-        sum(keepCol.cast("long")).as("kept"),
-        sum((!keepCol).cast("long")).as("dropped"),
+        sum(col("keep").cast("long")).as("kept"),
+        sum((!col("keep")).cast("long")).as("dropped"),
         sum(col("scrubbed").cast("long")).as("scrubbed")
       )
       .withColumn("input_snapshot_id", lit(snapshotId))
@@ -142,9 +145,9 @@ object TableIO {
     spark.read.parquet(s"$path/data")
 
   /** Snapshot-scoped read: partition-prunes to ONE snapshot's directories.
-    * [[Pipeline.run]] must use this — the unscoped read returns every
+    * [[Pipeline.run]] returns this — the unscoped read returns every
     * snapshot ever written (asserted in TableIOEvalSpec), which would
-    * double-count prior snapshots in conversation aggregates.
+    * duplicate turns across snapshots.
     */
   def readScored(spark: SparkSession, path: String, snapshotId: String): DataFrame =
     readScored(spark, path).filter(col("snapshot") === snapshotId)

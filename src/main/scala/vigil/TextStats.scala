@@ -37,13 +37,6 @@ object TextStats {
       .limit(k)
   }
 
-  /** BPE-ish pre-tokenizer count: letter runs, digit runs, single
-    * punctuation — the usual byte-pair pre-segmentation shape.
-    */
-  def bpeTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
-      .cast("long")
-
   /** k-word shingle hashes of the text (step 1 of winnowing).
     *
     * IMPORTANT: materialize this as its own column (withColumn) before
@@ -74,14 +67,6 @@ object TextStats {
         i => array_min(slice(grams, i + 1, lit(w))))))
       .otherwise(array_distinct(array(array_min(grams))))
   }
-
-  /** Fingerprint-overlap similarity (|∩| / |∪|) between two fingerprint
-    * arrays — the cheap containment check over winnowed docs.
-    */
-  def fingerprintSim(a: Column, b: Column): Column =
-    when(size(array_union(a, b)) === 0, lit(0.0))
-      .otherwise(size(array_intersect(a, b)).cast("double") /
-        size(array_union(a, b)))
 
   /** Composite 0..1 quality score from the Quality metric columns —
     * a weighted product of rule satisfactions (soft version of

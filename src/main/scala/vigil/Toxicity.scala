@@ -35,8 +35,4 @@ object Toxicity {
   /** True when any token is in the lexicon. */
   def isToxic(clean: Column): Column =
     arrays_overlap(tokens(clean), lit(Lexicon.toArray))
-
-  /** Count of lexicon hits (for density-style thresholds). */
-  def toxicCount(clean: Column): Column =
-    size(array_intersect(tokens(clean), lit(Lexicon.toArray)))
 }

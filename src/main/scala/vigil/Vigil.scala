@@ -11,6 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - [[review]]           ≙ generate_human_review           (E1 step 5)
   *  - [[evaluate]]         ≙ scripts/evaluate.py             (E3)
   *  - [[vigil.Pipeline.run]] for the materialized, resumable production job
+  *    (the same decisions, stored with every turn)
   *  - [[vigil.io.Sources]] / [[vigil.io.Sinks]] for the reference's formats
   */
 object Vigil {
@@ -31,9 +32,12 @@ object Vigil {
   def score(turns: DataFrame, cfg: Decide.Config = Decide.Default): DataFrame =
     Decide.scoreTurns(turns, cfg)
 
-  /** Full keep/drop with conversation-level decisions. */
+  /** Full keep/drop with conversation-level decisions, as one stateless
+    * job ([[Decide.decideWindowed]]). [[vigil.Pipeline.run]] stores the
+    * same decisions per turn.
+    */
   def decide(turns: DataFrame, cfg: Decide.Config = Decide.Default): DataFrame =
-    Decide.decide(turns, cfg)
+    Decide.decideWindowed(turns, cfg)
 
   /** Human-review triage table from a scored frame. */
   def review(scored: DataFrame, cfg: Review.Config = Review.Default): DataFrame =

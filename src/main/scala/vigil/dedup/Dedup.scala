@@ -266,16 +266,6 @@ object Dedup {
     }
   }
 
-  /** (hi·2^64 + lo) mod (2^61 - 1). */
-  private[dedup] def mod61(hi: Long, lo: Long): Long = {
-    val p = MinHash.Prime
-    // 2^64 mod p = 8, since 2^64 = 2^3 * 2^61 ≡ 8·1 (as 2^61 ≡ 1 mod p)
-    val loMod = java.lang.Long.remainderUnsigned(lo, p)
-    val hiMod = java.lang.Long.remainderUnsigned(hi, p)
-    val r = (hiMod * 8) % p + loMod
-    if (r >= p) r - p else r
-  }
-
   /** MinHash-LSH near-duplicate pairs.
     *
     * numHashes = bands · rowsPerBand. A pair whose Jaccard ≥ t collides in

@@ -109,11 +109,4 @@ object Sinks {
       .csv(path)
     true
   }
-
-  /** S9: review JSON sink (enum values as strings). S10 applies. */
-  def reviewJson(review: DataFrame, path: String): Boolean = {
-    if (review.isEmpty) return false
-    review.write.mode(SaveMode.Overwrite).json(path)
-    true
-  }
 }

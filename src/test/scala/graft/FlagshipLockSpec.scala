@@ -1,0 +1,86 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Result lock for the flagship `SparkEntry` query `pipeline_transcripts`, which
+  * no oracle pairs: an order-independent row hash at sf0.01 that must equal
+  * a constant recorded before the conversation-decision refactor, at one
+  * core and at four.
+  *
+  * The query reads no file: `SparkEntry.transcripts` takes its scale from
+  * the directory name alone (sf0.01 → 2,000 Synth conversations).
+  *
+  * The suites share one local[4] SparkContext, and a JVM holds only one, so
+  * the local[1] hash comes from a child JVM running [[FlagshipLockSpec.main]]
+  * on this JVM's classpath and module options.
+  */
+class FlagshipLockSpec extends AnyFunSuite {
+  import FlagshipLockSpec._
+
+  lazy val spark: SparkSession = session("local[4]")
+
+  /** `main` in a child JVM; returns the hash it prints. */
+  private def hashInChildJvm(master: String): String = {
+    val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val jvmArgs = rt.getInputArguments.asScala.filter(a =>
+      a.startsWith("--add-opens") || a.startsWith("-D"))
+    val cmd = Seq(javaBin, "-Xmx1g") ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.FlagshipLockSpec", master)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").getLines().toList
+    assert(proc.waitFor() == 0, out.takeRight(20).mkString("\n"))
+    out.collectFirst { case l if l.startsWith(Prefix) => l.stripPrefix(Prefix) }
+      .getOrElse(fail(out.takeRight(20).mkString("\n")))
+  }
+
+  test("pipeline_transcripts row hash is locked at local[1] and local[4]") {
+    assert(hash(spark) == PipelineTranscripts, "pipeline_transcripts at local[4]")
+    assert(hashInChildJvm("local[1]") == PipelineTranscripts, "pipeline_transcripts at local[1]")
+  }
+}
+
+object FlagshipLockSpec {
+  /** `rows:sum of xxhash64` of `pipeline_transcripts` at sf0.01. */
+  val PipelineTranscripts = "4256:238196791668216167642"
+
+  private val Prefix = "pipeline_transcripts hash: "
+
+  def session(master: String): SparkSession = SparkSession.builder()
+    .master(master)
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  def hash(spark: SparkSession): String =
+    rowHash(SparkEntry.queries("pipeline_transcripts")(spark, "sf0.01"))
+
+  /** Row count and the sum of each row's xxhash64 over its columns in name
+    * order, doubles rounded to float first so that neither summation order
+    * nor partitioning can move the hash.
+    */
+  def rowHash(df: DataFrame): String = {
+    val cols = df.schema.fields.sortBy(_.name).toSeq.map { f =>
+      f.dataType match {
+        case DoubleType | FloatType => col(f.name).cast("float")
+        case _ => col(f.name)
+      }
+    }
+    val r = df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"))
+      .agg(count(lit(1)), sum(col("h")))
+      .first()
+    s"${r.getLong(0)}:${r.getDecimal(1)}"
+  }
+
+  /** Prints the hash at the master given as the only argument. */
+  def main(args: Array[String]): Unit = {
+    val spark = session(args(0))
+    spark.sparkContext.setLogLevel("ERROR")
+    try println(Prefix + hash(spark)) finally spark.stop()
+  }
+}

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.{Decide, Review, Synth}
+import vigil.{Decide, Review, SaltedDecide, Synth}
 import vigil.io.{Sinks, Sources}
 import vigil.streaming.StreamPipeline
 
@@ -195,7 +195,7 @@ class IoStreamingSpec extends AnyFunSuite {
   }
 
   test("result sinks: csv columns + nested json document with stats") {
-    val scored = Decide.decide(Synth.corpusDF(spark, 40), cfg)
+    val scored = SaltedDecide.decide(Synth.corpusDF(spark, 40), cfg)
     val dir = Files.createTempDirectory("vigil_sink").toString
     Sinks.resultsCsv(scored, s"$dir/csv")
     val back = spark.read.option("header", "true").csv(s"$dir/csv")
@@ -274,7 +274,7 @@ class IoStreamingSpec extends AnyFunSuite {
       .agg(max(struct(col("n_turns"), col("drop_conversation"))).as("last"))
       .select(col("conv_id"), col("last.n_turns"),
         col("last.drop_conversation"))
-    val convBatch = Decide.convDecisions(Decide.scoreTurns(corpus, cfg), cfg)
+    val convBatch = SaltedDecide.convDecisions(Decide.scoreTurns(corpus, cfg), cfg)
       .select("conv_id", "n_turns", "drop_conversation")
     assert(convStream.except(convBatch).isEmpty &&
       convBatch.except(convStream).isEmpty,
@@ -380,7 +380,7 @@ class IoStreamingSpec extends AnyFunSuite {
         col("pii_density"), col("drop_conversation"))).as("l"))
       .select(col("conv_id"), col("l.n_turns"), col("l.majority_lang"),
         col("l.pii_density"), col("l.drop_conversation"))
-    val batch = Decide.convDecisions(Decide.scoreTurns(corpus, cfg), cfg)
+    val batch = SaltedDecide.convDecisions(Decide.scoreTurns(corpus, cfg), cfg)
       .select("conv_id", "n_turns", "majority_lang", "pii_density",
         "drop_conversation")
     assert(last.count() == batch.count())

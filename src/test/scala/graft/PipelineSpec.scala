@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.Decide
+import vigil.{Decide, SaltedDecide}
 
 /** Spark-level tests of the scoring pipeline + conversation decisions. */
 class PipelineSpec extends AnyFunSuite {
@@ -56,7 +56,7 @@ class PipelineSpec extends AnyFunSuite {
       ("pii-conv", 0, "Meu CPF é 123.456.789-00, " + en),
       ("pii-conv", 1, "RG: 1234567, " + en)
     ))
-    val out = Decide.decide(df)
+    val out = SaltedDecide.decide(df)
     val conv = out.select("conv_id", "majority_lang", "pii_density", "drop_conversation")
       .distinct().collect().map(r => r.getString(0) -> r).toMap
     assert(conv("en-conv").getAs[String]("majority_lang") == "en")
@@ -122,7 +122,7 @@ class PipelineSpec extends AnyFunSuite {
     def dump(df: org.apache.spark.sql.DataFrame) =
       df.select(cols.head, cols.tail: _*)
         .orderBy("conv_id", "turn_idx").collect().toSeq
-    val a = dump(Decide.decide(turns, cfg))
+    val a = dump(SaltedDecide.decide(turns, cfg))
     val b = dump(Decide.decideWindowed(turns, cfg))
     assert(a.size == b.size && a.nonEmpty)
     a.zip(b).foreach { case (x, y) => assert(x == y, s"row mismatch: $x vs $y") }
@@ -156,5 +156,70 @@ class PipelineSpec extends AnyFunSuite {
     // scored columns are produced on the reduce side
     assert(!exchanges.head.toString.contains("turn_score"),
       s"scoring runs below the conv_id exchange:\n${exchanges.head}")
+  }
+
+  test("Pipeline.run view equals decideWindowed, with a 1,200-turn conversation") {
+    import spark.implicits._
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    // Synth's own lengths stay short (its longest at 300 conversations is 3
+    // turns), so splice in one long conversation of mixed Synth content
+    val mega = vigil.Synth.corpus(700, seed = 11L).take(1200).zipWithIndex.map {
+      case (g, i) => vigil.Turn("conv-mega", i, g.role, g.text, "", g.ts)
+    }
+    assert(mega.length == 1200)
+    val turns = vigil.Synth.corpusDF(spark, nConvs = 300).unionByName(mega.toDF())
+    val dir = java.nio.file.Files.createTempDirectory("vigil_view_eq").toString
+    val view = vigil.Pipeline.run(spark, turns, dir, "snap-1", cfg, nBuckets = 8)
+    val want = Decide.decideWindowed(turns, cfg)
+    def dump(df: org.apache.spark.sql.DataFrame) =
+      df.select(want.columns.toSeq.map(col): _*)
+        .orderBy("conv_id", "turn_idx").collect().toSeq
+    val a = dump(want)
+    val b = dump(view)
+    assert(a.size == b.size && a.count(_.getAs[String]("conv_id") == "conv-mega") == 1200)
+    a.zip(b).foreach { case (x, y) => assert(x == y, s"row mismatch: $x vs $y") }
+  }
+
+  test("Pipeline.run write plan: one conv_id exchange, windows above it, scoring below") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the initial (pre-AQE) plan of every adaptive query under a job: the
+    // data write's is the only one with windows
+    def writes = seen.toArray(Array.empty[QueryExecution]).toSeq.flatMap { qe =>
+      qe.executedPlan.collect { case a: AdaptiveSparkPlanExec => qe -> a.initialPlan }
+    }.filter(_._2.exists(_.isInstanceOf[WindowExec]))
+    spark.listenerManager.register(listener)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("vigil_write_plan").toString
+      vigil.Pipeline.run(spark, vigil.Synth.corpusDF(spark, 100), dir, "snap-1",
+        Decide.Default.copy(targetLang = "pt"), nBuckets = 8)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"expected one windowed write job, saw ${writes.size}")
+    val (qe, phys) = writes.head
+    val exchanges = phys.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1 && exchanges.head.shuffleOrigin == REPARTITION_BY_NUM &&
+      exchanges.head.outputPartitioning.toString.contains("conv_id"),
+      s"expected one repartition(conv_id) exchange in the write job:\n$phys")
+    // the (conv_id, lang) and conv_id windows, however many WindowExec
+    // nodes the planner splits them into
+    val windows = phys.collect { case w: WindowExec => w }
+    assert(windows.map(_.partitionSpec.flatMap(_.references.map(_.name))).toSet ==
+      Set(Seq("conv_id", "lang"), Seq("conv_id")) &&
+      windows.forall(_.exists(_.isInstanceOf[ShuffleExchangeLike])),
+      s"both windows sit above the exchange:\n$phys")
+    assert(exchanges.head.toString.contains("turn_score"),
+      s"scoring runs below the conv_id exchange:\n${exchanges.head}")
+    val scores = "turn_score".r.findAllIn(qe.optimizedPlan.toString).size
+    assert(scores == 1, s"expected turn_score once in the optimized plan, saw $scores")
   }
 }

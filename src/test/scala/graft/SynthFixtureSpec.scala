@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.{Decide, LangModel, Synth}
+import vigil.{Decide, LangModel, SaltedDecide, Synth}
 
 /** The north-rule correctness gate over the synthesized transcript corpus
   * (FIXTURES.md): keep/drop F1 ≥ 0.99 vs construction-time labels,
@@ -82,7 +82,7 @@ class SynthFixtureSpec extends AnyFunSuite {
     import spark.implicits._
     val turns = golden.map(g =>
       vigil.Turn(g.conv_id, g.turn_idx, g.role, g.text, g.tool, g.ts)).toDF()
-    val conv = Decide.convDecisions(Decide.scoreTurns(turns, cfg), cfg)
+    val conv = SaltedDecide.convDecisions(Decide.scoreTurns(turns, cfg), cfg)
       .select("conv_id", "majority_lang", "pii_density", "drop_conversation")
       .collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getDouble(2), r.getBoolean(3)))

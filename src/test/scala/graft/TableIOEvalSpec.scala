@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.{Decide, Eval, Synth, TableIO}
+import vigil.{Decide, Eval, SaltedDecide, Synth, TableIO}
 import vigil.media.Media
 
 /** Lineage + checkpoint-resume, eval metrics, media plumbing. */
@@ -31,12 +31,11 @@ class TableIOEvalSpec extends AnyFunSuite {
     rows.toMap
   }
 
-  /** The lineage counters by their defining formulas, straight from the
-    * scored frame per bucket: `keep` (else `keep_turn`) and
-    * `scrubbed_text =!= clean`. */
-  private def countersOf(scored: DataFrame, nBuckets: Int): Map[Int, Counters] = {
-    val keep = if (scored.columns.contains("keep")) col("keep") else col("keep_turn")
-    scored.groupBy(TableIO.bucketOf(nBuckets).as("bucket"))
+  /** The lineage counters by their defining formulas, straight from a
+    * decided frame per bucket: `keep` and `scrubbed_text =!= clean`. */
+  private def countersOf(decided: DataFrame, nBuckets: Int): Map[Int, Counters] = {
+    val keep = col("keep")
+    decided.groupBy(TableIO.bucketOf(nBuckets).as("bucket"))
       .agg(count(lit(1)), sum(keep.cast("long")), sum((!keep).cast("long")),
         sum((col("scrubbed_text") =!= col("clean")).cast("long")))
       .collect()
@@ -46,11 +45,12 @@ class TableIOEvalSpec extends AnyFunSuite {
 
   test("writeScored writes bucketed data + lineage; resume skips done buckets") {
     val dir = Files.createTempDirectory("vigil_tio").toString
-    val scored = Decide.decide(
-      Synth.corpusDF(spark, 60), Decide.Default.copy(targetLang = "pt"))
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    val input = Synth.corpusDF(spark, 60)
+    val scored = Decide.scoreTurns(input, cfg)
 
     val n1 = TableIO.writeScored(spark, scored, dir, snapshotId = "snap-1",
-      nBuckets = 8)
+      nBuckets = 8, cfg = cfg)
     assert(n1 > 0)
     val total = TableIO.readScored(spark, dir).count()
     assert(total == scored.count())
@@ -59,35 +59,36 @@ class TableIOEvalSpec extends AnyFunSuite {
     val sums = lin.agg(sum("n_turns"), sum("kept"), sum("dropped")).collect()(0)
     assert(sums.getLong(0) == total)
     assert(sums.getLong(1) + sums.getLong(2) == total)
-    val expected = countersOf(scored, 8)
+    val expected = countersOf(Decide.decideWindowed(input, cfg), 8)
     assert(lineageOf(dir, "snap-1") == expected)
 
     // resume with the same snapshot: everything already done → no-op
     val n2 = TableIO.writeScored(spark, scored, dir, snapshotId = "snap-1",
-      nBuckets = 8)
+      nBuckets = 8, cfg = cfg)
     assert(n2 == 0, "second run with identical snapshot must skip all buckets")
     assert(TableIO.readScored(spark, dir).count() == total, "no duplicate rows")
 
     // a new snapshot processes again (append semantics per snapshot)
     val n3 = TableIO.writeScored(spark, scored, dir, snapshotId = "snap-2",
-      nBuckets = 8)
+      nBuckets = 8, cfg = cfg)
     assert(n3 == n1)
     assert(lineageOf(dir, "snap-2") == expected)
   }
 
   test("partial-failure resume: only missing buckets are recomputed") {
     val dir = Files.createTempDirectory("vigil_resume").toString
-    val scored = Decide.decide(
-      Synth.corpusDF(spark, 60), Decide.Default.copy(targetLang = "pt"))
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    val input = Synth.corpusDF(spark, 60)
+    val scored = Decide.scoreTurns(input, cfg)
     // simulate a crashed run: process only buckets {0,1,2} (filtered input),
     // recording their lineage
     val part = scored.filter(TableIO.bucketOf(8) < 3)
-    val nPart = TableIO.writeScored(spark, part, dir, "snap-1", nBuckets = 8)
+    val nPart = TableIO.writeScored(spark, part, dir, "snap-1", nBuckets = 8, cfg = cfg)
     assert(nPart > 0 && nPart <= 3)
-    val expected = countersOf(scored, 8)
+    val expected = countersOf(Decide.decideWindowed(input, cfg), 8)
     assert(lineageOf(dir, "snap-1") == expected.filter(_._1 < 3))
     // resume with the FULL input: already-done buckets must be skipped
-    val nRest = TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8)
+    val nRest = TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8, cfg = cfg)
     assert(nRest > 0)
     assert(TableIO.readScored(spark, dir).count() == scored.count(),
       "after resume the table holds exactly one copy of every turn")
@@ -106,6 +107,38 @@ class TableIOEvalSpec extends AnyFunSuite {
     assert(reads.value == n, s"Pipeline.run read ${reads.value} turns for $n")
     view.write.format("noop").mode("overwrite").save()
     assert(reads.value == n, "the returned view reads the stored table, not the source")
+  }
+
+  test("Pipeline.run resume reads only the turns of pending buckets") {
+    val dir = Files.createTempDirectory("vigil_resume_reads").toString
+    Synth.corpusDF(spark, 60).write.parquet(s"$dir/in")
+    val reads = spark.sparkContext.longAccumulator("textReads")
+    val counted = udf { (s: String) => reads.add(1L); s }
+    val turns = spark.read.parquet(s"$dir/in").withColumn("text", counted(col("text")))
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    // a crashed first run that finished buckets {0, 1, 2} only
+    vigil.Pipeline.run(spark, turns.filter(TableIO.bucketOf(8) < 3), s"$dir/store",
+      "snap-1", cfg, nBuckets = 8)
+    val before = reads.value
+    vigil.Pipeline.run(spark, turns, s"$dir/store", "snap-1", cfg, nBuckets = 8)
+    val pending = spark.read.parquet(s"$dir/in").filter(TableIO.bucketOf(8) >= 3).count()
+    assert(pending > 0)
+    assert(reads.value - before == pending,
+      s"resume read ${reads.value - before} turns for $pending pending")
+  }
+
+  test("a Pipeline.run view still reads after a later run at the same path") {
+    val dir = Files.createTempDirectory("vigil_view_later_run").toString
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    val cols = Seq("conv_id", "turn_idx", "majority_lang", "pii_density",
+      "drop_conversation", "keep")
+    def dump(df: DataFrame) =
+      df.select(cols.head, cols.tail: _*).orderBy("conv_id", "turn_idx").collect().toSeq
+    val r1 = vigil.Pipeline.run(spark, Synth.corpusDF(spark, 30), dir, "snap-1", cfg, 4)
+    val before = dump(r1)
+    assert(before.nonEmpty)
+    vigil.Pipeline.run(spark, Synth.corpusDF(spark, 30, seed = 7), dir, "snap-2", cfg, 4)
+    assert(dump(r1) == before)
   }
 
   test("clustered write: each bucket directory holds nParts / nBuckets files") {
@@ -139,9 +172,9 @@ class TableIOEvalSpec extends AnyFunSuite {
 
   test("orphan bucket (data committed, lineage lost) is replaced, not duplicated") {
     val dir = Files.createTempDirectory("vigil_orphan").toString
-    val scored = Decide.decide(
-      Synth.corpusDF(spark, 60), Decide.Default.copy(targetLang = "pt"))
-    TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8)
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    val scored = Decide.scoreTurns(Synth.corpusDF(spark, 60), cfg)
+    TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8, cfg = cfg)
     val total = TableIO.readScored(spark, dir).count()
     // simulate a crash between the data commit and the lineage append:
     // the data is on disk but no lineage row records it
@@ -150,11 +183,11 @@ class TableIOEvalSpec extends AnyFunSuite {
       .delete(linPath, true)
     // resume recomputes the "unfinished" buckets; dynamic partition
     // overwrite must REPLACE the orphan data (append would double it)
-    TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8)
+    TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8, cfg = cfg)
     assert(TableIO.readScored(spark, dir).count() == total,
       "orphan bucket data must not be duplicated on resume")
     // and a different snapshot must NOT clobber snap-1's partitions
-    TableIO.writeScored(spark, scored, dir, "snap-2", nBuckets = 8)
+    TableIO.writeScored(spark, scored, dir, "snap-2", nBuckets = 8, cfg = cfg)
     assert(TableIO.readScored(spark, dir).count() == 2 * total,
       "a new snapshot lands in its own partitions")
     assert(TableIO.readScored(spark, dir)
@@ -341,7 +374,7 @@ class TableIOEvalSpec extends AnyFunSuite {
     // into this run's conversation decisions or returned frame
     val r2 = vigil.Pipeline.run(spark, corpus, dir, "snap-2", cfg)
     assert(r2.count() == n1, "returned frame must cover ONLY the new snapshot")
-    val batch = Decide.convDecisions(Decide.scoreTurns(corpus, cfg), cfg)
+    val batch = SaltedDecide.convDecisions(Decide.scoreTurns(corpus, cfg), cfg)
       .select("conv_id", "majority_lang", "pii_density", "drop_conversation")
     val got = r2.select("conv_id", "majority_lang", "pii_density",
       "drop_conversation").distinct()
