@@ -999,8 +999,10 @@ object SparkEntry {
         .orderBy("id_a", "id_b")
     }),
     // --- near-dup cluster canonicalization (oracle-paired): connected
-    //     components over the verified pair graph via iterative min-label
-    //     propagation, vs a DuckDB recursive-CTE transitive closure ------
+    //     components over the verified pair graph (≤ 2^20 pairs finish in
+    //     one union-find on the driver, larger graphs in contracted
+    //     min-label rounds first), vs a DuckDB recursive-CTE transitive
+    //     closure ----------------------------------------------------------
     "q_neardup_components" -> ((s, dir) => {
       val d = docs(s, dir)
       Dedup.connectedComponents(d, "doc_id",

@@ -1,5 +1,8 @@
 package vigil.dedup
 
+import scala.collection.mutable.ArrayBuilder
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -584,27 +587,57 @@ object Dedup {
     * policy is right is corpus policy; this operator is the
     * transitive-closure one the MinHash-dedup literature uses.
     *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes the min of its own label and its neighbors' labels (one join +
-    * one hash aggregation per round, both keyed on the id), until a
-    * fixpoint or `maxIter`. Rounds needed = graph diameter; near-dup
-    * components are dense (verified-pair graphs are near-cliques), so
-    * convergence is typically 2-4 rounds. Each round's labels are
-    * `localCheckpoint`ed — persist alone is NOT enough for an iterative
-    * frame: the union references labels twice, so the LOGICAL plan
-    * doubles per round (2^k nodes) and the driver OOMs just RENDERING
-    * the plan string, while the checkpoint truncates it to a constant
-    * LogicalRDD (measured: OOM at sf0.1 → 8 s). Production jobs on
-    * adversarially long paths should use the large-star/small-star
-    * reshaping (Kiveris et al. 2014) — documented trade, not needed for
-    * near-dup graph shapes.
+    * Pair endpoints that are not nodes link nothing: a pair joins two
+    * nodes only when both its endpoints are nodes. The one exception is
+    * round 1's label `comp0(v) = min(v, Γ(v))`, which takes every
+    * neighbor: a node whose smallest neighbor is a non-node id takes that
+    * id as its label (and so shares it with every node whose smallest
+    * neighbor it also is). Pairs with a null endpoint are ignored.
     *
-    * Throws if `maxIter` rounds don't reach the fixpoint (no silent
-    * wrong answers — same contract as `Ann.bandsFor`).
+    * Driver finish: when the canonical pair list has at most
+    * `DriverEdges` = 2^20 edges, it is collected as primitive arrays and
+    * finished on the driver. Round 1 is replayed exactly — `comp0`, then
+    * one contracted edge `(comp0(s), comp0(d))` per pair whose endpoints
+    * are both nodes — with node membership of the endpoint ids from one
+    * broadcast semi-join against `nodes` (a filter, no shuffle); a
+    * union-find with the smallest id as root finishes the components, and
+    * every node is remapped in one lazy pass through a broadcast of sorted
+    * primitive arrays. Driver memory is O(2^20) primitive longs (≤ 2·2^20
+    * endpoint ids, their labels and the edge arrays: tens of MB), and no
+    * checkpoint is written.
+    *
+    * Above the budget the rounds run distributed: round 1 is one
+    * aggregation over the cached pair list; later rounds iterate a
+    * min-label hook plus one pointer jump on the CONTRACTED edge set
+    * (edges remapped through the current labels, self-loops dropped,
+    * duplicates merged), which near-dup graphs shrink fast. Each round's
+    * frames are `localCheckpoint`ed — persist alone is NOT enough for an
+    * iterative frame: the union references labels twice, so the LOGICAL
+    * plan doubles per round (2^k nodes) and the driver OOMs just
+    * RENDERING the plan string (measured: OOM at sf0.1 → 8 s). Once a
+    * round's contracted edge count, which the round computes anyway, is
+    * within the budget, those edges are collected and finished by the
+    * same union-find. `maxIter` bounds the distributed rounds only: if
+    * they end above the budget, the operator warns and falls back to the
+    * large-star/small-star reshaping (Kiveris et al. 2014,
+    * [[connectedComponentsStar]]) over the raw pair graph, where a
+    * non-node endpoint does link its neighbors.
     */
   def connectedComponents(
       nodes: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 25): DataFrame = {
+      maxIter: Int = 25): DataFrame =
+    componentsWithin(nodes, idCol, pairs, maxIter, DriverEdges)
+
+  /** Edge budget of [[connectedComponents]]' driver finish. */
+  private val DriverEdges = 1 << 20
+
+  /** [[connectedComponents]] with its driver finish at `driverEdges`
+    * edges; at 0 only an empty pair list finishes on the driver, every
+    * other graph runs the distributed rounds to the fixpoint.
+    */
+  private[vigil] def componentsWithin(
+      nodes: DataFrame, idCol: String, pairs: DataFrame,
+      maxIter: Int, driverEdges: Int): DataFrame = {
     // persist the CANONICAL one-direction pair list ONCE: it is two long
     // columns (tiny), but its lineage is the whole upstream dedup
     // pipeline — without the persist every iteration's convergence probe
@@ -617,6 +650,12 @@ object Dedup {
     val canonPairs = pairs
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the count materializes the cache that either path reads next
+    if (canonPairs.count() <= driverEdges) {
+      val out = finishOnDriver(nodes, idCol, canonPairs)
+      canonPairs.unpersist(blocking = false)
+      return out
+    }
     // Round 1 needs NO labels join: with comp(v) initialized to v, the
     // neighbor-min fold is simply min(v, min Γ(v)) — one aggregation over
     // the cached pair list. Later rounds then iterate on a CONTRACTED
@@ -652,11 +691,11 @@ object Dedup {
         greatest(col("x"), col("y")).as("v"))
       .distinct()
       .iterBoundary(false)
-    // ONE action: materializes comp0 + the contracted edge set (and the
-    // pairs cache underneath them) and answers convergence
+    // ONE action: materializes comp0 + the contracted edge set and
+    // answers convergence
     var nEdges = contracted.count()
     var iter = 1
-    while (nEdges > 0L && iter < maxIter) {
+    while (nEdges > driverEdges && iter < maxIter) {
       // min-label hook over the contracted labels + one pointer jump
       val nmin = contracted
         .select(col("u").as("a"), col("v").as("b"))
@@ -690,18 +729,18 @@ object Dedup {
       contracted = next
       iter += 1
     }
-    val converged = nEdges == 0L
-    if (!converged) {
-      // adversarial-diameter fallback: with pointer jumping a path needs
-      // ~log2(diameter) rounds, so landing here means diameter ≳ 2^maxIter
-      // (or a hand-built chain corpus). Switch to the large-star/small-star
+    if (nEdges > driverEdges) {
+      // adversarial-diameter fallback: a path whose ids run in path order
+      // loses only two labels per round (hook to the smaller neighbor,
+      // then one pointer jump), so landing here means a long chain-like
+      // component. Switch to the large-star/small-star
       // reshaping, which contracts ANY graph to stars in O(log² n) rounds
       // independent of how the label happened to propagate. The canonical
       // edge frame is derived from the PERSISTED pair cache, so the
       // expensive pairs lineage (LSH + verify) is not re-run.
-      System.err.println(
-        s"[vigil] connectedComponents: no fixpoint in $maxIter label rounds" +
-          " — falling back to large-star/small-star")
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"connectedComponents: $nEdges contracted edges left after $maxIter " +
+          "label rounds — falling back to large-star/small-star")
       val canon = canonPairs.filter(col("src") =!= col("dst"))
         .select(greatest(col("src"), col("dst")).as("u"),
           least(col("src"), col("dst")).as("v"))
@@ -711,12 +750,118 @@ object Dedup {
       canonPairs.unpersist(blocking = false)
       return out
     }
+    if (nEdges > 0L) {
+      // driver finish of the contracted labels: each label with an edge
+      // maps to its union-find root, the rest keep theirs
+      val Array(u, v) = collectLongs(contracted)
+      val uf = new MinUnionFind(sortedDistinct(u, v))
+      u.indices.foreach(e => uf.union(uf.index(u(e)), uf.index(v(e))))
+      mapping = mapping.select(col("id"),
+        lookup(nodes.sparkSession.sparkContext, col("comp"), uf.ids,
+          Array.tabulate(uf.ids.length)(uf.rootId)).as("comp"))
+    }
     // the mapping chain is backed by materialized checkpoints (comp0 and
     // every round's contracted edge frame); the pairs cache can go — a
     // later eviction means recompute of the EDGES only, never of the
     // iteration chain
     canonPairs.unpersist(blocking = false)
     mapping.select(col("id").as(idCol), col("comp").as("component"))
+  }
+
+  /** [[connectedComponents]]' driver finish over the whole counted pair
+    * list: round 1 replayed exactly, then union-find over the contracted
+    * label edges (see its scaladoc for the semantics this keeps).
+    */
+  private def finishOnDriver(
+      nodes: DataFrame, idCol: String, canonPairs: DataFrame): DataFrame = {
+    val sc = nodes.sparkSession.sparkContext
+    val Array(src, dst) = collectLongs(canonPairs)
+    val uf = new MinUnionFind(sortedDistinct(src, dst))
+    val ids = uf.ids
+    // which endpoints are nodes: a broadcast semi-join, no shuffle
+    val nodeIds = nodes.select(col(idCol).cast("long").as("id"))
+    val idsB = sc.broadcast(ids)
+    val isEndpoint =
+      udf((x: Long) => java.util.Arrays.binarySearch(idsB.value, x) >= 0)
+    val Array(members) = collectLongs(nodeIds.filter(isEndpoint(col("id"))))
+    idsB.destroy()
+    val isNode = new java.util.BitSet(ids.length)
+    members.foreach(m => isNode.set(uf.index(m)))
+    // round 1: comp0(v) = min(v, Γ(v)) over every neighbor, node or not
+    val comp0 = ids.clone()
+    src.indices.foreach { e =>
+      val (a, b) = (uf.index(src(e)), uf.index(dst(e)))
+      comp0(a) = math.min(comp0(a), dst(e))
+      comp0(b) = math.min(comp0(b), src(e))
+    }
+    // the contracted edges: (comp0(s), comp0(d)) for pairs of two nodes;
+    // every label is itself an endpoint id, so it has an index
+    val label = comp0.map(uf.index)
+    src.indices.foreach { e =>
+      val (a, b) = (uf.index(src(e)), uf.index(dst(e)))
+      if (isNode.get(a) && isNode.get(b)) uf.union(label(a), label(b))
+    }
+    val (keys, labels) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+    ids.indices.foreach { i =>
+      if (isNode.get(i)) { keys += ids(i); labels += uf.rootId(label(i)) }
+    }
+    nodeIds.select(col("id").as(idCol),
+      lookup(sc, col("id"), keys.result(), labels.result()).as("component"))
+  }
+
+  /** Union-find over the sorted distinct ids `ids` (by index), the
+    * smallest id as each class's root.
+    */
+  private final class MinUnionFind(val ids: Array[Long]) {
+    private val parent = Array.tabulate(ids.length)(identity)
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    def root(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def rootId(i: Int): Long = ids(root(i))
+    def union(i: Int, j: Int): Unit = {
+      val (a, b) = (root(i), root(j))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+  }
+
+  private def sortedDistinct(xs: Array[Long]*): Array[Long] = {
+    val all = Array.concat(xs: _*)
+    java.util.Arrays.sort(all)
+    var n = 0
+    all.indices.foreach { i =>
+      if (i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 }
+    }
+    java.util.Arrays.copyOf(all, n)
+  }
+
+  /** The rows of a frame of long columns that have no null, as one
+    * primitive array per column — packed per partition, so the driver
+    * holds no per-row objects.
+    */
+  private def collectLongs(df: DataFrame): Array[Array[Long]] = {
+    val n = df.columns.length
+    val parts = df.na.drop().queryExecution.toRdd.mapPartitions { rows =>
+      val cols = Array.fill(n)(new ArrayBuilder.ofLong)
+      rows.foreach(r => (0 until n).foreach(j => cols(j) += r.getLong(j)))
+      Iterator.single(cols.map(_.result()))
+    }.collect()
+    Array.tabulate(n)(j => Array.concat(parts.map(_(j)).toIndexedSeq: _*))
+  }
+
+  /** `c` through the map `keys(i) → values(i)` (`keys` sorted), identity
+    * off the keys: a lookup in a broadcast, lazy, with no join.
+    */
+  private def lookup(
+      sc: SparkContext, c: Column, keys: Array[Long], values: Array[Long]): Column = {
+    val b = sc.broadcast((keys, values))
+    udf { (x: Long) =>
+      val (k, v) = b.value
+      val i = java.util.Arrays.binarySearch(k, x)
+      if (i >= 0) v(i) else x
+    }.apply(c)
   }
 
   /** Connected components by alternating large-star/small-star edge

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.TextStats
+import vigil.{ComponentsBudget, TextStats}
 import vigil.ann.Ann
 import vigil.dedup.Dedup
 
@@ -744,14 +744,19 @@ class DedupAnnSpec extends AnyFunSuite {
     val nodes = Seq(1L, 2L, 3L, 9L, 10L, 11L, 20L).toDF("doc_id")
     val pairs = Seq((1L, 3L), (2L, 3L), (9L, 11L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val local = Dedup.connectedComponents(nodes, "doc_id", pairs)
+    // budget 0: a graph this small would otherwise finish on the driver,
+    // which writes no checkpoint
+    val local = ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dir = java.nio.file.Files.createTempDirectory("vigil_ckpt").toString
     spark.conf.set("spark.vigil.checkpoint.dir", dir)
     try {
-      val reliable = Dedup.connectedComponents(nodes, "doc_id", pairs)
+      val reliable = ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(reliable == local, reliable.toString)
+      val driver = Dedup.connectedComponents(nodes, "doc_id", pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(driver == local, driver.toString)
       // the reliable path actually wrote checkpoint data to the dir
       def anyFile(f: java.io.File): Boolean =
         f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
@@ -776,14 +781,19 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(star.size == n && star.values.forall(_ == 0L),
       s"path must be ONE component rooted at 0; got ${star.values.toSet.take(5)}")
 
-    // the public operator at a tiny round budget can't finish a 64-long
-    // path by label rounds (pointer jumping reaches ~2^maxIter hops) —
-    // it must FALL BACK to the star path and still be exact, not throw
+    // the distributed rounds (driver finish off: budget 0) at a tiny round
+    // budget can't finish a 64-long path by label rounds (pointer jumping
+    // reaches ~2^maxIter hops) — they must FALL BACK to the star path and
+    // still be exact, not throw
     val small = (0L until 64L).toDF("doc_id")
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val viaFallback = Dedup.connectedComponents(small, "doc_id", chain,
-      maxIter = 2).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaFallback = ComponentsBudget.connectedComponents(small, "doc_id", chain,
+      0, maxIter = 2).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaFallback.size == 64 && viaFallback.values.forall(_ == 0L))
+    // at the default budget the 63 pairs finish on the driver
+    val viaDriver = Dedup.connectedComponents(small, "doc_id", chain,
+      maxIter = 2).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaDriver == viaFallback)
 
     // on the dense near-dup fixture graph both operators are the same
     // function (multi-hundred-member components + singletons)
