@@ -1001,7 +1001,7 @@ object SparkEntry {
     // --- near-dup cluster canonicalization (oracle-paired): connected
     //     components over the verified pair graph (≤ 2^20 pairs finish in
     //     one union-find on the driver, larger graphs in contracted
-    //     min-label rounds first), vs a DuckDB recursive-CTE transitive
+    //     min-label rounds), vs a DuckDB recursive-CTE transitive
     //     closure ----------------------------------------------------------
     "q_neardup_components" -> ((s, dir) => {
       val d = docs(s, dir)

@@ -614,14 +614,11 @@ object Dedup {
     * frames are `localCheckpoint`ed — persist alone is NOT enough for an
     * iterative frame: the union references labels twice, so the LOGICAL
     * plan doubles per round (2^k nodes) and the driver OOMs just
-    * RENDERING the plan string (measured: OOM at sf0.1 → 8 s). Once a
-    * round's contracted edge count, which the round computes anyway, is
-    * within the budget, those edges are collected and finished by the
-    * same union-find. `maxIter` bounds the distributed rounds only: if
-    * they end above the budget, the operator warns and falls back to the
-    * large-star/small-star reshaping (Kiveris et al. 2014,
-    * [[connectedComponentsStar]]) over the raw pair graph, where a
-    * non-node endpoint does link its neighbors.
+    * RENDERING the plan string (measured: OOM at sf0.1 → 8 s). If
+    * `maxIter` rounds leave contracted edges, the operator warns and
+    * finishes those label edges by the large-star/small-star reshaping
+    * (Kiveris et al. 2014, [[connectedComponentsStar]]), so every path
+    * gives the same labels.
     */
   def connectedComponents(
       nodes: DataFrame, idCol: String, pairs: DataFrame,
@@ -695,7 +692,7 @@ object Dedup {
     // answers convergence
     var nEdges = contracted.count()
     var iter = 1
-    while (nEdges > driverEdges && iter < maxIter) {
+    while (nEdges > 0L && iter < maxIter) {
       // min-label hook over the contracted labels + one pointer jump
       val nmin = contracted
         .select(col("u").as("a"), col("v").as("b"))
@@ -729,36 +726,23 @@ object Dedup {
       contracted = next
       iter += 1
     }
-    if (nEdges > driverEdges) {
+    if (nEdges > 0L) {
       // adversarial-diameter fallback: a path whose ids run in path order
       // loses only two labels per round (hook to the smaller neighbor,
       // then one pointer jump), so landing here means a long chain-like
-      // component. Switch to the large-star/small-star
-      // reshaping, which contracts ANY graph to stars in O(log² n) rounds
-      // independent of how the label happened to propagate. The canonical
-      // edge frame is derived from the PERSISTED pair cache, so the
-      // expensive pairs lineage (LSH + verify) is not re-run.
+      // component. The large-star/small-star reshaping contracts ANY
+      // graph to stars in O(log² n) rounds independent of how the label
+      // happened to propagate. It runs over the checkpointed CONTRACTED
+      // label edges, not the raw pairs: a non-node endpoint then links
+      // nothing here either, and the pairs lineage is not re-run.
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"connectedComponents: $nEdges contracted edges left after $maxIter " +
-          "label rounds — falling back to large-star/small-star")
-      val canon = canonPairs.filter(col("src") =!= col("dst"))
-        .select(greatest(col("src"), col("dst")).as("u"),
-          least(col("src"), col("dst")).as("v"))
-        .distinct()
-        .iterBoundary(true)
-      val out = starContract(nodes, idCol, canon)
-      canonPairs.unpersist(blocking = false)
-      return out
-    }
-    if (nEdges > 0L) {
-      // driver finish of the contracted labels: each label with an edge
-      // maps to its union-find root, the rest keep theirs
-      val Array(u, v) = collectLongs(contracted)
-      val uf = new MinUnionFind(sortedDistinct(u, v))
-      u.indices.foreach(e => uf.union(uf.index(u(e)), uf.index(v(e))))
-      mapping = mapping.select(col("id"),
-        lookup(nodes.sparkSession.sparkContext, col("comp"), uf.ids,
-          Array.tabulate(uf.ids.length)(uf.rootId)).as("comp"))
+          "label rounds — finishing them by large-star/small-star")
+      val roots = starContract(contracted.select(col("v").as("u"), col("u").as("v")))
+        .select(col("id").as("lbl"), col("comp").as("root"))
+      mapping = mapping.join(roots, mapping("comp") === roots("lbl"), "left")
+        .select(mapping("id").as("id"),
+          coalesce(col("root"), mapping("comp")).as("comp"))
     }
     // the mapping chain is backed by materialized checkpoints (comp0 and
     // every round's contracted edge frame); the pairs cache can go — a
@@ -894,16 +878,21 @@ object Dedup {
         least(col("a"), col("b")).as("v"))
       .distinct()
       .iterBoundary(true)
-    starContract(nodes, idCol, canon, maxIter)
+    val roots = starContract(canon, maxIter)
+    nodes.select(col(idCol).cast("long").as("id"))
+      .join(roots, Seq("id"), "left")
+      .select(col("id").as(idCol),
+        coalesce(col("comp"), col("id")).as("component"))
   }
 
-  /** Core star-contraction loop over canonical `(u > v)` edges. Every
-    * round is `localCheckpoint`ed for the same reason as the label loop:
-    * iterative self-referencing plans double per round otherwise.
+  /** Core star-contraction loop over canonical `(u > v)` edges: `(id,
+    * comp)` for every id with an edge that is not its component's
+    * minimum. Every round is `localCheckpoint`ed for the same reason as
+    * the label loop: iterative self-referencing plans double per round
+    * otherwise.
     */
   private def starContract(
-      nodes: DataFrame, idCol: String, canonicalEdges: DataFrame,
-      maxIter: Int = 50): DataFrame = {
+      canonicalEdges: DataFrame, maxIter: Int = 50): DataFrame = {
     var edges = canonicalEdges
     // checkpoint-block hygiene (r6 ADVICE): frames THIS loop checkpointed
     // are released once the round that consumed them is over — an
@@ -952,12 +941,7 @@ object Dedup {
     // fixpoint = disjoint stars: each non-root node has exactly ONE edge
     // (u → component min); roots and isolated nodes map to themselves.
     // The groupBy-min is defensive (idempotent on a true star set).
-    val mapping = edges.groupBy(col("u").as("id"))
-      .agg(min(col("v")).as("comp"))
-    nodes.select(col(idCol).cast("long").as("id"))
-      .join(mapping, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("comp"), col("id")).as("component"))
+    edges.groupBy(col("u").as("id")).agg(min(col("v")).as("comp"))
   }
 
   private def persistSigs(df: DataFrame): DataFrame =

@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import vigil.ComponentsBudget
 import vigil.dedup.Dedup
 
-/** `Dedup.connectedComponents` at three driver-finish budgets: the default
-  * (small graphs finish on the driver before round 1), 0 (the distributed
-  * rounds alone) and 3 (a driver finish after a distributed round).
+/** `Dedup.connectedComponents` on its three paths: the default budget
+  * (small graphs finish on the driver before round 1), budget 0 (the
+  * distributed rounds alone) and budget 0 with `maxIter = 2` (rounds that
+  * run out on long paths and finish by the large-star/small-star fallback).
   */
 class ComponentsSpec extends AnyFunSuite {
 
@@ -81,7 +82,8 @@ class ComponentsSpec extends AnyFunSuite {
     Seq(
       "default" -> labels(Dedup.connectedComponents(nodes, "doc_id", pairs)),
       "budget 0" -> labels(ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0)),
-      "budget 3" -> labels(ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 3)))
+      "budget 0, maxIter 2" -> labels(
+        ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0, maxIter = 2)))
   }
 
   /** Union-find over the raw pairs, the smallest id as root. */
@@ -98,22 +100,9 @@ class ComponentsSpec extends AnyFunSuite {
     g.nodes.map(v => v -> find(v)).toMap
   }
 
-  /** Round 1's contracted edge count, replayed from the definition. */
-  private def round1Edges(g: Graph): Int = {
-    val ns = g.nodes.toSet
-    val nbrs = (g.pairs ++ g.pairs.map(_.swap)).groupMap(_._1)(_._2)
-    def comp0(v: Long) = (v +: nbrs.getOrElse(v, Nil)).min
-    g.pairs.collect { case (a, b) if ns(a) && ns(b) && comp0(a) != comp0(b) =>
-      (math.min(comp0(a), comp0(b)), math.max(comp0(a), comp0(b)))
-    }.distinct.size
-  }
-
-  test("labels are equal at the default budget, at 0 and at 3, and equal a union-find twin on closed graphs") {
+  test("labels are equal on the driver finish, the distributed rounds and the fallback, and equal a union-find twin on closed graphs") {
     assert(graphs.size >= 20)
     assert(graphs.count(!_.closed) >= 5, "too few graphs with non-node endpoints")
-    // budget 3 finishes on the driver right after round 1 on these
-    assert(graphs.count(g => g.pairs.size > 3 && (1 to 3).contains(round1Edges(g))) >= 3,
-      graphs.map(g => g.name -> round1Edges(g)).toString)
     graphs.foreach { g =>
       val got = atBudgets(g)
       val (_, first) = got.head
@@ -135,13 +124,16 @@ class ComponentsSpec extends AnyFunSuite {
         assert(l == expected, s"$budget: $pairs")
       }
     }
-    // the driver finish keeps these semantics whatever maxIter says; the
-    // distributed rounds would run out on the 71-node path here and fall
-    // back to the star reshaping, which links 1 and 2 through 9
+    // at budget 0 the rounds run out on the 71-node path and the star
+    // fallback finishes it: over the contracted label edges, so 1 and 2
+    // stay apart there too (over the raw pairs, 9 would link them)
     val nodes = (Seq(1L, 2L) ++ (10L to 80L)).toDF("doc_id")
     val pairs = (Seq((1L, 9L), (2L, 9L)) ++ (10L until 80L).map(i => (i, i + 1)))
       .toDF("id_a", "id_b")
-    val got = labels(Dedup.connectedComponents(nodes, "doc_id", pairs, maxIter = 2))
-    assert(got(1L) == 1L && got(2L) == 2L && (10L to 80L).forall(got(_) == 10L), got)
+    Seq(Dedup.connectedComponents(nodes, "doc_id", pairs, maxIter = 2),
+      ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0, maxIter = 2)
+    ).map(labels).foreach { got =>
+      assert(got(1L) == 1L && got(2L) == 2L && (10L to 80L).forall(got(_) == 10L), got)
+    }
   }
 }
