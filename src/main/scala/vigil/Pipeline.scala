@@ -3,13 +3,16 @@ package vigil
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** End-to-end per-turn scoring + conversation-level decisions.
   *
   * Shape (SURVEY.md §3 E1): everything per-turn is a narrow, pipelined
-  * projection — scan → clean+analyze (one expression) → column algebra
-  * ([[scoreTurns]]). The conversation rules (majority language, PII
-  * density) are window aggregates ([[convWindows]]) over ONE hash
-  * exchange on conv_id, which both windows reuse. The two public shapes
+  * projection — scan → clean+analyze+summarize (one expression) → column
+  * algebra ([[scoreTurns]]). The conversation rules (majority language,
+  * PII density) are three aggregates over ONE conv_id window
+  * ([[convWindows]]: one sort, one WindowExec) above ONE hash exchange on
+  * conv_id, which the window reuses. The two public shapes
   * share that code and differ only in where scoring sits:
   * [[decideWindowed]] scores above the exchange (raw-width shuffle, one
   * stateless job) and [[Pipeline.run]] scores below it, inside the
@@ -20,7 +23,8 @@ import org.apache.spark.sql.functions._
   * one task, whose sort and window buffer both spill, so a
   * mega-conversation bounds that one task's time (a 300,000-turn
   * conversation in a 506k-turn corpus: `Pipeline.run` plus its view in
-  * 21.8 s on 4 cores, no disk spill at an 8 GB heap).
+  * 21.8 s on 4 cores, no disk spill at an 8 GB heap, measured with the
+  * earlier three-WindowExec form).
   */
 object Decide {
 
@@ -32,58 +36,50 @@ object Decide {
   )
   val Default: Config = Config()
 
-  private val Real5 = PiiTypes.Real.toSeq.sorted
-
   /** Per-turn scoring: adds clean/detalhes/sinais/scrubbed_text, reference
-    * keep-drop columns (contem_pii, tipos_detectados, confianca), langid +
-    * perplexity, quality metrics, toxicity and the per-turn keep verdict.
-    * Narrow (no shuffle).
+    * keep-drop columns (contem_pii, tipos_detectados, confianca,
+    * has_extended_pii — folded inside the kernel, with only the 2-digit
+    * rounding and the sinais gate in column space), langid + perplexity,
+    * quality metrics, toxicity and the per-turn keep verdict. Narrow (no
+    * shuffle).
     */
   def scoreTurns(turns: DataFrame, cfg: Config = Default): DataFrame = {
-    // ONE fused expression computes PII analysis + scrub, langid +
-    // perplexity and quality/toxicity stats from a single text decode
-    // (composed pii_analyze → lang_score → turn_stats re-decodes the
-    // cleaned text twice more per row — measurable DRAM traffic at 32
-    // threads; bit-equality with the composed path is asserted in
-    // QualityExprSpec)
-    val withTs = turns.withColumn("__score", functions.turn_score(col("text")))
-    val reais = filter(col("__score.detalhes"), d => d.getField("tipo").isin(Real5: _*))
-    val base = withTs
-      .withColumn("clean", col("__score.clean"))
-      .withColumn("detalhes", col("__score.detalhes"))
-      .withColumn("scrubbed_text", col("__score.scrubbed"))
-      .withColumn("reais", reais)
-      // reference parity: contextual signals are surfaced only when real
-      // PII exists (detector.py:343-352 returns the empty result otherwise)
-      .withColumn("sinais",
-        when(size(col("reais")) > 0, col("__score.sinais"))
-          .otherwise(array().cast(
-            org.apache.spark.sql.types.ArrayType(PiiSchema.signalType, containsNull = false))))
-      // reference decision rule (detector.py:330-366): only the 5 real
-      // types flip contem_pii; contextual signals are metadata
-      .withColumn("contem_pii", size(col("reais")) > 0)
-      .withColumn("tipos_detectados",
-        array_distinct(transform(col("reais"), d => d.getField("tipo"))))
-      .withColumn("confianca",
-        when(col("contem_pii"),
-          round(array_max(transform(col("reais"), d => d.getField("confianca"))), 2))
-          .otherwise(lit(0.0)))
-      .withColumn("has_extended_pii",
-        exists(col("__score.detalhes"),
-          d => d.getField("tipo").isin(PiiTypes.Extended.toSeq: _*)))
-      .drop("reais")
+    // ONE fused expression computes PII analysis + scrub, the reference
+    // keep-drop summary, langid + perplexity and quality/toxicity stats
+    // from a single text decode (composed pii_analyze → lang_score →
+    // turn_stats re-decodes the cleaned text twice more per row —
+    // measurable DRAM traffic at 32 threads; bit-equality with the
+    // composed path is asserted in QualityExprSpec). Five projections,
+    // not one per column: each one re-analyzes the growing plan on the
+    // driver
+    val score = (f: String) => col(s"__score.$f")
     val fields = Seq("lang", "lang_conf", "perplexity",
       "n_words", "n_chars", "mean_word_len", "max_word_len",
       "alpha_word_frac", "symbol_word_ratio", "dup_2gram_frac", "toxic")
-    val withStats = fields.foldLeft(base) {
-      (df, f) => df.withColumn(f, col(s"__score.$f"))
-    }
-    withStats
-      .withColumn("quality_pass", Quality.passes(cfg.quality))
-      .withColumn("keep_turn", col("quality_pass") && !col("toxic"))
+    turns
+      .withColumn("__score", functions.turn_score(col("text")))
+      .withColumns(ListMap(
+        "clean" -> score("clean"),
+        "detalhes" -> score("detalhes"),
+        "scrubbed_text" -> score("scrubbed"),
+        // reference parity: contextual signals are surfaced only when real
+        // PII exists (detector.py:343-352 returns the empty result otherwise)
+        "sinais" -> when(score("contem_pii"), score("sinais"))
+          .otherwise(array().cast(
+            org.apache.spark.sql.types.ArrayType(PiiSchema.signalType, containsNull = false))),
+        // reference decision rule (detector.py:330-366): only the 5 real
+        // types flip contem_pii; contextual signals are metadata
+        "contem_pii" -> score("contem_pii"),
+        "tipos_detectados" -> score("tipos_detectados"),
+        "confianca" -> when(score("contem_pii"), round(score("confianca_max"), 2))
+          .otherwise(lit(0.0)),
+        "has_extended_pii" -> score("has_extended_pii")) ++
+        fields.map(f => f -> score(f)))
       // the raw scoring struct duplicates clean/detalhes/sinais/scrubbed —
       // dropping it halves the width of every downstream shuffle and write
       .drop("__score")
+      .withColumn("quality_pass", Quality.passes(cfg.quality))
+      .withColumn("keep_turn", col("quality_pass") && !col("toxic"))
   }
 
   /** Stateless decide, one job: per-turn scoring plus the conversation
@@ -99,12 +95,12 @@ object Decide {
     * produced on the reduce side and never serialized across executors.
     * Scoring is row-local, so its placement relative to the exchange
     * cannot change any result; the explicit repartition also satisfies
-    * the windows' clustering, so both reuse it — plan shows a single
-    * Exchange, two sorts (plan-asserted in PipelineSpec: "decideWindowed
-    * plan: score once, one exchange, scoring above it"). Skew: a whole
-    * conversation, scoring included, lands in one task. [[Pipeline.run]]
-    * keeps a conversation's windows in one task too, but scores on the
-    * input splits, below its exchange.
+    * the window's clustering, so it reuses it — plan shows a single
+    * Exchange, one sort on conv_id and one WindowExec (plan-asserted in
+    * PipelineSpec: "decideWindowed plan: score once, one exchange, scoring
+    * above it"). Skew: a whole conversation, scoring included, lands in
+    * one task. [[Pipeline.run]] keeps a conversation's window in one task
+    * too, but scores on the input splits, below its exchange.
     */
   def decideWindowed(turns: DataFrame, cfg: Config = Default): DataFrame = {
     // EXPLICIT partition count: the reduce side of this exchange is the
@@ -130,32 +126,38 @@ object Decide {
 
   /** Conversation decisions as window aggregates over scored turns: adds
     * majority_lang, pii_density, drop_conversation and the final keep
-    * (keep_turn && !drop_conversation). `scored` must already be
-    * hash-partitioned on conv_id: that partitioning satisfies both windows'
-    * distribution, so they add no exchange of their own (plan-asserted in
-    * PipelineSpec), and every conversation is decided whole inside one task.
+    * (keep_turn && !drop_conversation). One `Window.partitionBy(conv_id)`
+    * carries three aggregates — [[LangModeAgg]] (majority language and
+    * its count from a per-conversation hash map; ties to the largest
+    * lang, a null lang lowest), the turn count and the mean contem_pii —
+    * so the plan has one sort and one WindowExec, which buffers each
+    * conversation's scored rows once (a (conv_id, lang) count window
+    * instead would add a second sort and two more buffers of full-width
+    * rows). `scored` must already be hash-partitioned on conv_id: that
+    * partitioning satisfies the window's distribution, so it adds no
+    * exchange of its own (plan-asserted in PipelineSpec), and every
+    * conversation is decided whole inside one task.
     */
   private[vigil] def convWindows(scored: DataFrame, cfg: Config): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val wLang = Window.partitionBy("conv_id", "lang")
-    val wConv = Window.partitionBy("conv_id")
+    // one partition spec in one projection: the planner builds one sort on
+    // conv_id and one WindowExec that buffers each conversation once
+    val w = Window.partitionBy("conv_id")
     scored
-      .withColumn("__lang_cnt", count(lit(1)).over(wLang))
-      // deterministic mode: max (count, lang) struct — ties break to the
-      // lexicographically largest lang
-      .withColumn("__m",
-        max(struct(col("__lang_cnt").as("cnt"), col("lang"))).over(wConv))
-      .withColumn("__n_turns", count(lit(1)).over(wConv))
-      .withColumn("majority_lang", col("__m.lang"))
-      .withColumn("pii_density",
-        avg(col("contem_pii").cast("int")).over(wConv))
-      .withColumn("drop_conversation",
-        (col("majority_lang") =!= lit(cfg.targetLang) &&
-          (col("__m.cnt").cast("double") / col("__n_turns")) >=
-            lit(cfg.minMajorityFrac)) ||
-          col("pii_density") > lit(cfg.maxConvPiiDensity))
+      .withColumns(ListMap(
+        "__m" -> functions.lang_mode(col("lang")).over(w),
+        "__n_turns" -> count(lit(1)).over(w),
+        "__density" -> avg(col("contem_pii").cast("int")).over(w)))
+      .withColumns(ListMap(
+        "majority_lang" -> col("__m.lang"),
+        "pii_density" -> col("__density"),
+        "drop_conversation" ->
+          ((col("__m.lang") =!= lit(cfg.targetLang) &&
+            (col("__m.cnt").cast("double") / col("__n_turns")) >=
+              lit(cfg.minMajorityFrac)) ||
+            col("__density") > lit(cfg.maxConvPiiDensity))))
       .withColumn("keep", col("keep_turn") && !col("drop_conversation"))
-      .drop("__lang_cnt", "__m", "__n_turns")
+      .drop("__m", "__n_turns", "__density")
   }
 }
 
@@ -199,7 +201,7 @@ object Pipeline {
     *  1. per-turn scoring (narrow, on the input splits) feeds
     *     [[TableIO.writeScored]], whose `repartition(nParts, conv_id)`
     *     puts every conversation whole into one write task; the
-    *     conversation windows ([[Decide.convWindows]]) run in that task, so
+    *     conversation window ([[Decide.convWindows]]) runs in that task, so
     *     each stored row carries majority_lang, pii_density,
     *     drop_conversation and the final keep. The write is the only action
     *     over the scoring: the expensive regex/LM pass runs exactly once per

@@ -48,13 +48,13 @@ object TableIO {
     * exactly bucket p mod nBuckets and the snapshot gets at most `nParts`
     * files, not input tasks × nBuckets (TableIOEvalSpec's canary fails if
     * a Spark upgrade breaks that). The exchange sits above scoring in the
-    * plan: scoring stays on the input splits. The conversation windows
-    * ([[Decide.convWindows]], under `cfg`'s rules) sit above it and reuse
-    * its partitioning, so each stored row carries majority_lang,
-    * pii_density, drop_conversation and the final keep with no further
-    * exchange (plan-asserted in PipelineSpec). Skew bound: one
-    * conversation's scored rows, and its windows, all land in one write
-    * task.
+    * plan: scoring stays on the input splits. The conversation window
+    * ([[Decide.convWindows]], under `cfg`'s rules: one sort on conv_id and
+    * one WindowExec) sits above it and reuses its partitioning, so each
+    * stored row carries majority_lang, pii_density, drop_conversation and
+    * the final keep with no further exchange (plan-asserted in
+    * PipelineSpec). Skew bound: one conversation's scored rows, and its
+    * window buffer, all land in one write task.
     *
     * One pass over the scoring: the partitioned data write is the only
     * action over `scored`'s lineage. The lineage counters come from a
@@ -64,6 +64,7 @@ object TableIO {
     * text. `kept`/`dropped` count the final keep. The re-read relies on the
     * assumption resume already relies on: the same snapshot id means the
     * same input, so the written buckets hold exactly this call's rows.
+    * The ≤ nBuckets lineage rows are appended as one file per call.
     *
     * Returns the number of buckets actually processed this call.
     */
@@ -131,6 +132,7 @@ object TableIO {
     // at most nBuckets rows: collect once, append them from the driver
     val rows = lin.collect()
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), lin.schema)
+      .coalesce(1)
       .write.mode(SaveMode.Append).parquet(s"$path/_lineage")
     rows.length.toLong
   }

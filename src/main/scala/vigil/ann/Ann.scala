@@ -133,7 +133,9 @@ object Ann {
     val planes = hyperplanes(bands * bandBits, dim, seed)
     val bb = bandBits
     val nb = bands
-    udf((v: Seq[Double]) => {
+    udf((vs: Seq[Double]) => {
+      // a Seq argument arrives as a List: index an array, not the list
+      val v = vs.toArray
       Array.tabulate(nb) { b =>
         var key = 0L
         var r = 0
@@ -141,7 +143,7 @@ object Ann {
           val p = planes(b * bb + r)
           var dot = 0.0
           var i = 0
-          val n = math.min(p.length, v.size)
+          val n = math.min(p.length, v.length)
           while (i < n) { dot += p(i) * v(i); i += 1 }
           if (dot >= 0) key |= (1L << r)
           r += 1
@@ -262,15 +264,18 @@ object Ann {
 
   // one cosine kernel serves training assignment AND query probing — a
   // divergence between the two would silently mis-route queries
-  private def centroidCos(cj: Array[Double], v: Seq[Double]): Double = {
+  private def centroidCos(cj: Array[Double], v: Array[Double]): Double = {
     var dot = 0.0; var nv = 0.0; var nc = 0.0
     var i = 0
-    val n = math.min(cj.length, v.size)
+    val n = math.min(cj.length, v.length)
     while (i < n) { dot += cj(i) * v(i); nv += v(i) * v(i); nc += cj(i) * cj(i); i += 1 }
     if (nv == 0 || nc == 0) 0.0 else dot / math.sqrt(nv * nc)
   }
 
-  private def assignUdf(cents: Array[Array[Double]]) = udf((v: Seq[Double]) => {
+  // a UDF's Seq argument arrives as a List (v(i) walks it): both kernels
+  // index one array copy
+  private def assignUdf(cents: Array[Array[Double]]) = udf((vs: Seq[Double]) => {
+    val v = vs.toArray
     var best = 0; var bestCos = Double.MinValue
     var j = 0
     while (j < cents.length) {
@@ -381,7 +386,8 @@ object Ann {
       centroidsDf: DataFrame, posting: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
     val cents = collectCentroids(centroidsDf)
-    val probeUdf = udf((v: Seq[Double]) => {
+    val probeUdf = udf((vs: Seq[Double]) => {
+      val v = vs.toArray
       val scored = Array.tabulate(cents.length)(j => (centroidCos(cents(j), v), j))
       scored.sortBy(s => (-s._1, s._2)).take(nProbe).map(_._2)
     })

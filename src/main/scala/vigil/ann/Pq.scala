@@ -52,12 +52,14 @@ object Pq {
     * Missing trailing dims read as 0.0 — the same "fold what exists"
     * stance as the IVF kernels, but deterministic per subspace.
     */
-  private def subvectors(v: Seq[Double], dim: Int, numSub: Int): Array[Array[Double]] = {
+  private def subvectors(vs: Seq[Double], dim: Int, numSub: Int): Array[Array[Double]] = {
+    // a UDF's Seq argument arrives as a List: index an array, not the list
+    val v = vs.toArray
     val sd = dim / numSub
     Array.tabulate(numSub) { s =>
       Array.tabulate(sd) { i =>
         val j = s * sd + i
-        if (j < v.size) v(j) else 0.0
+        if (j < v.length) v(j) else 0.0
       }
     }
   }

@@ -363,6 +363,13 @@ object TurnStatsExpr {
   * thread-scaling, not just time. This expression decodes once, cleans
   * once, and feeds the SAME String to all three kernels — bit-identical
   * output to the composed path (equality-tested in QualityExprSpec).
+  *
+  * It also folds the reference keep/drop summary over the detections it
+  * already holds (contem_pii, tipos_detectados in first-occurrence order,
+  * confianca_max — null without real PII, like `array_max` of an empty
+  * array — and has_extended_pii): four interpreted higher-order functions
+  * over `detalhes` cost more per turn than the fold (QualityExprSpec
+  * locks it equal to that algebra).
   */
 case class TurnScoreExpr(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -378,10 +385,12 @@ case class TurnScoreExpr(child: Expression)
     val analysis = PiiSchema.analysisValues(u8, raw, a)
     val (lang, conf, ppl) = LangModel.scoreBoth(a.clean)
     val stats = TurnStatsExpr.computeValues(a.clean)
-    val out = new Array[Any](4 + 3 + stats.length)
+    val n = 4 + 3 + stats.length
+    val out = new Array[Any](n + 4)
     System.arraycopy(analysis, 0, out, 0, 4)
     out(4) = UTF8String.fromString(lang); out(5) = conf; out(6) = ppl
     System.arraycopy(stats, 0, out, 7, stats.length)
+    TurnScoreExpr.summarize(a.detalhes, out, n)
     new GenericInternalRow(out)
   }
 
@@ -389,9 +398,38 @@ case class TurnScoreExpr(child: Expression)
     copy(child = c)
 }
 object TurnScoreExpr {
+  private val summaryType: StructType = StructType(Seq(
+    StructField("contem_pii", BooleanType, nullable = false),
+    StructField("tipos_detectados", ArrayType(StringType, containsNull = false),
+      nullable = false),
+    StructField("confianca_max", DoubleType, nullable = true),
+    StructField("has_extended_pii", BooleanType, nullable = false)
+  ))
   val schema: StructType = StructType(
     PiiSchema.analysisType.fields ++ LangScoreExpr.schema.fields ++
-      TurnStatsExpr.schema.fields)
+      TurnStatsExpr.schema.fields ++ summaryType.fields)
+
+  /** Writes the [[summaryType]] values at out(at until at + 4): only the
+    * real types flip contem_pii (reference detector.py:330-366); the
+    * extended types count over every detection.
+    */
+  private def summarize(dets: Seq[Detection], out: Array[Any], at: Int): Unit = {
+    var tipos: List[String] = Nil
+    var maxConf = 0.0
+    var extended = false
+    dets.foreach { d =>
+      if (PiiTypes.Real.contains(d.tipo)) {
+        if (tipos.isEmpty || d.confianca > maxConf) maxConf = d.confianca
+        if (!tipos.contains(d.tipo)) tipos = d.tipo :: tipos
+      } else if (PiiTypes.Extended.contains(d.tipo)) extended = true
+    }
+    out(at) = tipos.nonEmpty
+    out(at + 1) =
+      if (tipos.isEmpty) PiiSchema.EmptyArray
+      else new GenericArrayData(tipos.reverseIterator.map(UTF8String.fromString).toArray[Any])
+    out(at + 2) = if (tipos.isEmpty) null else maxConf
+    out(at + 3) = extended
+  }
 }
 
 /** text → char-weighted word-n-gram repetition counters in ONE flat pass:
@@ -768,6 +806,95 @@ case class VectorSumAgg(
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
       cs: IndexedSeq[Expression]): VectorSumAgg = copy(child = cs.head)
+}
+
+/** Majority language as struct(cnt, lang): a string column's most frequent
+  * value and its count, from one small hash map per group. Ties go to the
+  * largest value (UTF-8 byte order, Spark's string order) and a null value
+  * ranks below every string — exactly `max(struct(cnt, lang))` over a
+  * per-value count, which needs a second sort on (group, value) to build.
+  * Null input values are counted as one value, as that `count` groups
+  * them. An empty group yields null.
+  */
+case class LangModeAgg(
+    child: Expression,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends org.apache.spark.sql.catalyst.expressions.aggregate
+      .TypedImperativeAggregate[java.util.HashMap[UTF8String, Array[Long]]] {
+  private type Counts = java.util.HashMap[UTF8String, Array[Long]]
+  override def children: Seq[Expression] = Seq(child)
+  override def nullable: Boolean = true
+  override def dataType: DataType = StructType(Seq(
+    StructField("cnt", LongType, nullable = false),
+    StructField("lang", StringType, nullable = true)))
+  override def prettyName: String = "lang_mode"
+
+  override def createAggregationBuffer(): Counts = new Counts()
+
+  private def add(buf: Counts, k: UTF8String, n: Long): Unit = {
+    val c = buf.get(k)
+    // a key read from an UnsafeRow points into reused memory: store a copy
+    if (c == null) buf.put(if (k == null) null else k.clone(), Array(n))
+    else c(0) += n
+  }
+
+  override def update(buf: Counts, input: InternalRow): Counts = {
+    add(buf, child.eval(input).asInstanceOf[UTF8String], 1L)
+    buf
+  }
+
+  override def merge(b1: Counts, b2: Counts): Counts = {
+    b2.forEach((k, c) => add(b1, k, c(0)))
+    b1
+  }
+
+  override def eval(buf: Counts): Any = {
+    var best: UTF8String = null
+    var bestCnt = 0L
+    buf.forEach { (k, c) =>
+      val n = c(0)
+      if (n > bestCnt ||
+          (n == bestCnt && k != null && (best == null || k.compareTo(best) > 0))) {
+        best = k; bestCnt = n
+      }
+    }
+    if (bestCnt == 0L) null else new GenericInternalRow(Array[Any](bestCnt, best))
+  }
+
+  override def serialize(buf: Counts): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    out.writeInt(buf.size)
+    buf.forEach { (k, c) =>
+      if (k == null) out.writeInt(-1)
+      else { val b = k.getBytes; out.writeInt(b.length); out.write(b) }
+      out.writeLong(c(0))
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): Counts = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    val buf = new Counts()
+    var i = in.readInt()
+    while (i > 0) {
+      val len = in.readInt()
+      val k =
+        if (len < 0) null
+        else { val b = new Array[Byte](len); in.readFully(b); UTF8String.fromBytes(b) }
+      buf.put(k, Array(in.readLong()))
+      i -= 1
+    }
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): LangModeAgg =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): LangModeAgg =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      cs: IndexedSeq[Expression]): LangModeAgg = copy(child = cs.head)
 }
 
 /** Flat-loop twin of [[Decontam]]'s normative gram-overlap column algebra
@@ -1369,6 +1496,11 @@ object functions {
   def vector_sum(v: Column, dim: Int): Column =
     VigilShim.column(VectorSumAgg(expr(v.cast("array<double>")), dim)
       .toAggregateExpression())
+  /** struct(cnt, lang): the column's most frequent value — see
+    * [[LangModeAgg]]; usable as an aggregate or over a window.
+    */
+  def lang_mode(c: Column): Column =
+    VigilShim.column(LangModeAgg(expr(c)).toAggregateExpression())
   def gram_overlap_count(loweredText: Column, n: Int,
       bench: org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]])
       : Column =

@@ -820,4 +820,72 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(TextStats.topNgrams(docs, "text").queryExecution
       .executedPlan.toString.contains("TakeOrderedAndProject"))
   }
+
+  test("vector kernels equal a plain-array reference: signatures, IVF assignments, PQ codes") {
+    // seeded 64-dim vectors plus a ragged one, a zero vector and an
+    // over-long one; the reference folds plain arrays in the same order
+    val dim = 64
+    val rng = new scala.util.Random(5L)
+    val gauss = (n: Int) => Array.fill(n)(rng.nextGaussian())
+    val vecs: Seq[(Long, Array[Double])] =
+      (0 until 40).map(i => i.toLong -> gauss(dim)) ++
+        Seq(40L -> gauss(37), 41L -> new Array[Double](dim), 42L -> gauss(dim + 5))
+    val df = vecs.map { case (i, v) => (i, v.toSeq) }.toDF("id", "v")
+
+    val (bandBits, bands, seed) = (6, 4, 42L)
+    val planeRng = new scala.util.Random(seed)
+    val planes = Array.fill(bandBits * bands)(Array.fill(dim)(planeRng.nextGaussian()))
+    def dot(a: Array[Double], b: Array[Double]) = {
+      var d = 0.0; var i = 0
+      while (i < math.min(a.length, b.length)) { d += a(i) * b(i); i += 1 }
+      d
+    }
+    val sigWant = vecs.map { case (i, v) =>
+      i -> (0 until bands).map { b =>
+        (0 until bandBits).foldLeft(0L) { (k, r) =>
+          if (dot(planes(b * bandBits + r), v) >= 0) k | (1L << r) else k
+        }
+      }
+    }.toMap
+    val sigGot = Ann.computeSignSignatures(df, "id", "v", bandBits, bands, dim, seed)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
+    assert(sigGot == sigWant)
+
+    val cents = (0 until 6).map(_ => gauss(dim)) :+ new Array[Double](dim)
+    def cos(c: Array[Double], v: Array[Double]) = {
+      var d = 0.0; var nv = 0.0; var nc = 0.0; var i = 0
+      while (i < math.min(c.length, v.length)) {
+        d += c(i) * v(i); nv += v(i) * v(i); nc += c(i) * c(i); i += 1
+      }
+      if (nv == 0 || nc == 0) 0.0 else d / math.sqrt(nv * nc)
+    }
+    val cidWant = vecs.map { case (i, v) =>
+      i -> cents.indices.foldLeft((0, Double.MinValue)) { case ((b, bc), j) =>
+        val c = cos(cents(j), v); if (c > bc) (j, c) else (b, bc)
+      }._1
+    }.toMap
+    val centsDf = cents.zipWithIndex.map { case (c, j) => (j, c.toSeq) }.toDF("cid", "c_vec")
+    val cidGot = Ann.ivfAssign(centsDf, df, "id", "v").collect()
+      .map(r => r.getAs[Long]("nn_id") -> r.getAs[Int]("cid")).toMap
+    assert(cidGot == cidWant)
+
+    val (numSub, kCodes) = (8, 5)
+    val sd = dim / numSub
+    val book = Array.fill(numSub, kCodes)(gauss(sd))
+    val codeWant = vecs.map { case (i, v) =>
+      i -> (0 until numSub).map { s =>
+        val sub = Array.tabulate(sd)(k => if (s * sd + k < v.length) v(s * sd + k) else 0.0)
+        (0 until kCodes).minBy { c =>
+          var d = 0.0; var k = 0
+          while (k < sd) { val t = book(s)(c)(k) - sub(k); d += t * t; k += 1 }
+          d
+        }
+      }
+    }.toMap
+    val bookDf = (for (s <- 0 until numSub; c <- 0 until kCodes)
+      yield (s, c, book(s)(c).toSeq)).toDF("sub", "cid", "c_vec")
+    val codeGot = vigil.ann.Pq.pqAssign(bookDf, df, "id", "v", dim).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
+    assert(codeGot == codeWant)
+  }
 }

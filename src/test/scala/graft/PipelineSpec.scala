@@ -156,6 +156,24 @@ class PipelineSpec extends AnyFunSuite {
     // scored columns are produced on the reduce side
     assert(!exchanges.head.toString.contains("turn_score"),
       s"scoring runs below the conv_id exchange:\n${exchanges.head}")
+    assertOneConvWindow(phys)
+  }
+
+  /** The conversation rules are one WindowExec partitioned by conv_id
+    * alone, over one sort, above the exchange (the (conv_id, lang) count
+    * window they replaced added a second sort and two more WindowExecs).
+    */
+  private def assertOneConvWindow(phys: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    val windows = phys.collect { case w: WindowExec => w }
+    assert(windows.size == 1 &&
+      windows.head.partitionSpec.flatMap(_.references.map(_.name)) == Seq("conv_id") &&
+      windows.head.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"expected one conv_id WindowExec above the exchange:\n$phys")
+    val sorts = windows.head.collect { case so: SortExec => so }
+    assert(sorts.size == 1, s"expected one sort below the window:\n$phys")
   }
 
   test("Pipeline.run view equals decideWindowed, with a 1,200-turn conversation") {
@@ -210,13 +228,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(exchanges.size == 1 && exchanges.head.shuffleOrigin == REPARTITION_BY_NUM &&
       exchanges.head.outputPartitioning.toString.contains("conv_id"),
       s"expected one repartition(conv_id) exchange in the write job:\n$phys")
-    // the (conv_id, lang) and conv_id windows, however many WindowExec
-    // nodes the planner splits them into
-    val windows = phys.collect { case w: WindowExec => w }
-    assert(windows.map(_.partitionSpec.flatMap(_.references.map(_.name))).toSet ==
-      Set(Seq("conv_id", "lang"), Seq("conv_id")) &&
-      windows.forall(_.exists(_.isInstanceOf[ShuffleExchangeLike])),
-      s"both windows sit above the exchange:\n$phys")
+    assertOneConvWindow(phys)
     assert(exchanges.head.toString.contains("turn_score"),
       s"scoring runs below the conv_id exchange:\n${exchanges.head}")
     val scores = "turn_score".r.findAllIn(qe.optimizedPlan.toString).size

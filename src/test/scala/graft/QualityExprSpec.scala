@@ -50,8 +50,14 @@ class QualityExprSpec extends AnyFunSuite {
     import vigil.{functions => vf}
     val corpus = Synth.corpusDF(spark, 150).select("text")
       .union(Seq("", " ", "Meu CPF é 123.456.789-00, idiota",
-        "json {\"k\": [1,2,3]} ### $$$", "ünïcödé tëxt høre æøå")
+        "json {\"k\": [1,2,3]} ### $$$", "ünïcödé tëxt høre æøå",
+        "Email a@b.com, depois c@d.com; CPF 123.456.789-00 e de novo a@b.com",
+        "cartão 4111 1111 1111 1111 sem dado pessoal")
         .toDF("text"))
+    // the keep/drop summary as the higher-order-function algebra over
+    // detalhes it replaced in Decide.scoreTurns
+    val reais = filter(col("pii.detalhes"),
+      d => d.getField("tipo").isin(vigil.PiiTypes.Real.toSeq: _*))
     val composed = corpus
       .withColumn("pii", vf.pii_analyze(col("text")))
       .withColumn("ls", vf.lang_score(col("pii.clean")))
@@ -62,12 +68,24 @@ class QualityExprSpec extends AnyFunSuite {
         col("ls.perplexity"), col("qs.n_words"), col("qs.n_chars"),
         col("qs.mean_word_len"), col("qs.max_word_len"),
         col("qs.alpha_word_frac"), col("qs.symbol_word_ratio"),
-        col("qs.dup_2gram_frac"), col("qs.toxic")).as("s"))
+        col("qs.dup_2gram_frac"), col("qs.toxic"),
+        (size(reais) > 0).as("contem_pii"),
+        array_distinct(transform(reais, d => d.getField("tipo"))).as("tipos_detectados"),
+        array_max(transform(reais, d => d.getField("confianca"))).as("confianca_max"),
+        exists(col("pii.detalhes"),
+          d => d.getField("tipo").isin(vigil.PiiTypes.Extended.toSeq: _*))
+          .as("has_extended_pii")).as("s"))
     val fused = corpus.select(vf.turn_score(col("text")).as("s"))
     val a = composed.collect().map(_.toString)
-    val b = fused.collect().map(_.toString)
+    val fusedRows = fused.collect()
+    val b = fusedRows.map(_.toString)
     assert(a.length == b.length)
     a.zip(b).foreach { case (x, y) => assert(x == y, s"$x != $y") }
+    // the corpus reaches every branch of the summary fold
+    val s = fusedRows.map(_.getStruct(0))
+    assert(s.exists(r => r.getAs[Boolean]("contem_pii")) &&
+      s.exists(r => r.getAs[scala.collection.Seq[String]]("tipos_detectados").size >= 2) &&
+      s.exists(r => r.getAs[Boolean]("has_extended_pii") && !r.getAs[Boolean]("contem_pii")))
   }
 
   /** Local brute-force twin of Quality.repetitionStats' normative defs. */

@@ -95,6 +95,26 @@ class TableIOEvalSpec extends AnyFunSuite {
     assert(lineageOf(dir, "snap-1") == expected)
   }
 
+  test("each writeScored call appends exactly one _lineage file") {
+    val dir = Files.createTempDirectory("vigil_lineage_files").toString
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    val scored = Decide.scoreTurns(Synth.corpusDF(spark, 60), cfg)
+    def files = Option(new java.io.File(s"$dir/_lineage")
+      .listFiles((_: java.io.File, n: String) => n.endsWith(".parquet")))
+      .map(_.length).getOrElse(0)
+    val calls = Seq(
+      "snap-1" -> scored.filter(TableIO.bucketOf(8) < 3), // a crashed run
+      "snap-1" -> scored, // its resume
+      "snap-2" -> scored)
+    calls.zipWithIndex.foreach { case ((snap, df), i) =>
+      val n = TableIO.writeScored(spark, df, dir, snap, nBuckets = 8, cfg = cfg)
+      assert(n > 1, s"call $i wrote $n buckets")
+      assert(files == i + 1, s"after call $i: $files lineage files")
+    }
+    assert(TableIO.lineage(spark, dir).get.count() ==
+      TableIO.readScored(spark, dir).select("snapshot", "bucket").distinct().count())
+  }
+
   test("Pipeline.run reads every source turn exactly once") {
     val dir = Files.createTempDirectory("vigil_reads").toString
     Synth.corpusDF(spark, 40).write.parquet(s"$dir/in")
