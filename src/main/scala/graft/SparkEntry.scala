@@ -94,6 +94,45 @@ object SparkEntry {
   }
   private val PtCfg = Decide.Default.copy(targetLang = "pt")
 
+  /** The scored-turn frame q_review_triage reviews: per document, keyword
+    * detections, a planted known-artist `nome` on every 10th doc and
+    * exactly one planted Portuguese context sentence (doc_id % 6 → family).
+    */
+  def reviewTriageInput(s: SparkSession, dir: String): DataFrame = {
+    val d = docs(s, dir)
+    val ctx = when(pmod(col("doc_id"), lit(6)) === 0,
+        lit(" A obra de arte foi restaurada."))
+      .when(pmod(col("doc_id"), lit(6)) === 1,
+        lit(" Ela concluiu o mestrado em março."))
+      .when(pmod(col("doc_id"), lit(6)) === 2,
+        lit(" Foi publicado no jornal da cidade."))
+      .when(pmod(col("doc_id"), lit(6)) === 3,
+        lit(" O prefeito Carlos anunciou a medida."))
+      .when(pmod(col("doc_id"), lit(6)) === 4,
+        lit(" O advogado Bruno apresentou o recurso."))
+      .otherwise(lit(" Texto escrito por Ana para o curso."))
+    // deterministic per-(doc, valor) score sweeping 0.70–0.99: all three
+    // bands, including the ≥0.95 not-banded slice (still reviewed when a
+    // context family fires — the reference's own semantics)
+    def sc(valor: org.apache.spark.sql.Column) = round(lit(0.70) +
+      pmod(col("doc_id") + length(valor), lit(30)) / lit(100.0), 2)
+    def det(tipo: String, valor: org.apache.spark.sql.Column) = struct(lit(tipo).as("tipo"),
+      valor.as("valor"), sc(valor).as("confianca"))
+    val nameVal = regexp_extract(col("text"), KwARe, 0)
+    val detalhes = filter(concat(
+      array(when(nameVal =!= "", det("nome", nameVal))),
+      transform(regexp_extract_all(col("text"), lit(KwBRe), lit(0)),
+        v => det("kw_sql", v)),
+      array(when(pmod(col("doc_id"), lit(10)) === 0,
+        det("nome", lit("Portinari"))))), x => x.isNotNull)
+    d.select(
+      col("doc_id").cast("string").as("conv_id"),
+      lit(0L).as("turn_idx"),
+      concat(col("text"), ctx).as("clean"),
+      detalhes.as("detalhes"))
+      .withColumn("contem_pii", size(col("detalhes")) > 0)
+  }
+
   // --- shared corpus/batch derivations for the incremental families ------
   // (build and serve queries must slice identically, so the derivations
   // live here, not inline in either query)
@@ -603,40 +642,7 @@ object SparkEntry {
     //     rule the DuckDB twin encodes — valid because the English
     //     fixture text never matches the Portuguese family regexes
     //     (oracle equality at both sf gates IS the assertion) ------------
-    "q_review_triage" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val ctx = when(pmod(col("doc_id"), lit(6)) === 0,
-          lit(" A obra de arte foi restaurada."))
-        .when(pmod(col("doc_id"), lit(6)) === 1,
-          lit(" Ela concluiu o mestrado em março."))
-        .when(pmod(col("doc_id"), lit(6)) === 2,
-          lit(" Foi publicado no jornal da cidade."))
-        .when(pmod(col("doc_id"), lit(6)) === 3,
-          lit(" O prefeito Carlos anunciou a medida."))
-        .when(pmod(col("doc_id"), lit(6)) === 4,
-          lit(" O advogado Bruno apresentou o recurso."))
-        .otherwise(lit(" Texto escrito por Ana para o curso."))
-      // deterministic per-(doc, valor) score sweeping 0.70–0.99: all three
-      // bands, including the ≥0.95 not-banded slice (still reviewed when a
-      // context family fires — the reference's own semantics)
-      def sc(valor: org.apache.spark.sql.Column) = round(lit(0.70) +
-        pmod(col("doc_id") + length(valor), lit(30)) / lit(100.0), 2)
-      def det(tipo: String, valor: org.apache.spark.sql.Column) = struct(lit(tipo).as("tipo"),
-        valor.as("valor"), sc(valor).as("confianca"))
-      val nameVal = regexp_extract(col("text"), KwARe, 0)
-      val detalhes = filter(concat(
-        array(when(nameVal =!= "", det("nome", nameVal))),
-        transform(regexp_extract_all(col("text"), lit(KwBRe), lit(0)),
-          v => det("kw_sql", v)),
-        array(when(pmod(col("doc_id"), lit(10)) === 0,
-          det("nome", lit("Portinari"))))), x => x.isNotNull)
-      Review.reviewTable(d.select(
-        col("doc_id").cast("string").as("conv_id"),
-        lit(0L).as("turn_idx"),
-        concat(col("text"), ctx).as("clean"),
-        detalhes.as("detalhes"))
-        .withColumn("contem_pii", size(col("detalhes")) > 0))
-    }),
+    "q_review_triage" -> ((s, dir) => Review.reviewTable(reviewTriageInput(s, dir))),
     // --- the same triage over real engine-scored transcripts (rows-only:
     //     detalhes come from the PII kernel's float confidences) ----------
     "q_review_triage_transcripts" -> ((s, dir) => {

@@ -1,7 +1,6 @@
 package vigil
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Human-review triage (SURVEY.md §2.12; reference
@@ -12,12 +11,16 @@ import org.apache.spark.sql.functions._
   * context families for names (H2), consolidated per (turn, value) keeping
   * the most-prioritary reason (W1), priority-sorted (W2).
   *
-  * Spark shape: context families are whole-text existence checks → one
-  * rlike mega-alternation per family, evaluated once per turn (not per
-  * detail); detail-level work happens after posexplode; consolidation is a
-  * row_number window over (conv_id, turn_idx, lower(valor)). The window
-  * shuffles on the turn key — fine at scale because cardinality is
-  * per-detail, and AQE coalesces.
+  * Review runs per row, as the reference triages each record on its own:
+  * [[ReviewItemsExpr]] bands every detail of a PII turn, runs the six
+  * family patterns only when the turn has a `nome` detail, applies the
+  * known-artist rule and folds W1 inside the row; the snippet and the
+  * explanation are column algebra over the exploded items, and the W2 sort
+  * is the only exchange. Duplicate (conv_id, turn_idx) rows are therefore
+  * reviewed separately. The earlier `(conv_id, turn_idx, lower(valor))`
+  * window, kept as the spec twin `vigil.ColumnReview`, consolidated such
+  * duplicates together and broke their `arrival` ties arbitrarily; it also
+  * shuffled every detection with its turn's full text.
   */
 object Review {
 
@@ -93,6 +96,27 @@ object Review {
     "tarsila do amaral", "alfredo volpi", "marianne peretti", "gugon"
   )
 
+  /** An H2 context family: its pattern and the (motivo, prioridade) it
+    * gives a name in a text it matches. */
+  final case class ContextFamily(pattern: String, reason: (String, String))
+
+  /** The six families in reference emission order (human_review.py:314-343).
+    * The known-artist rule emits the artistic family's reason right after
+    * the artistic family itself.
+    */
+  val ContextFamilies: Seq[ContextFamily] = Seq(
+    ContextFamily(ArtisticRe, "contexto_artistico" -> "alta"),
+    ContextFamily(AcademicRe, "contexto_academico" -> "media"),
+    ContextFamily(JournalisticRe, "contexto_jornalistico" -> "media"),
+    ContextFamily(PublicOfficialRe, "contexto_cargo_publico" -> "baixa"),
+    ContextFamily(LegalRe, "contexto_juridico" -> "baixa"),
+    ContextFamily(AuthorshipRe, "contexto_autoria" -> "baixa"))
+
+  /** H1 reasons (human_review.py:305-312): below the low threshold, and
+    * between the low and the high one. */
+  val ScoreLow: (String, String) = "score_baixo" -> "alta"
+  val ScoreMid: (String, String) = "score_medio" -> "baixa"
+
   /** Reason-consolidation rank (human_review.py:262-273). */
   val ReasonRank: Map[String, Int] = Map(
     "contexto_artistico" -> 1, "contexto_academico" -> 2,
@@ -135,20 +159,19 @@ object Review {
   )
   val Default: Config = Config()
 
-  private def reasonStruct(motivo: Column, prioridade: Column): Column =
-    struct(motivo.as("motivo"), prioridade.as("prioridade"))
+  private def reasonStruct(reason: (String, String)): Column =
+    struct(lit(reason._1).as("motivo"), lit(reason._2).as("prioridade"))
 
   /** H1 confidence banding as a (motivo, prioridade) struct, null when the
     * score is high-confidence (≥ highConfidenceThreshold — such detections
     * are NOT reviewed; human_review.py:305-312): score < low →
-    * score_baixo/alta, low ≤ score < high → score_medio/baixa. Shared by
-    * [[reviewTable]] and the oracle-paired q_review_bands slice.
+    * score_baixo/alta, low ≤ score < high → score_medio/baixa. The column
+    * form of the oracle-paired q_review_bands slice; [[ReviewItemsExpr]]'s
+    * banding is locked to it in ReviewKernelSpec.
     */
   def scoreBandReason(score: Column, cfg: Config = Default): Column =
-    when(score < cfg.lowConfidenceThreshold,
-      reasonStruct(lit("score_baixo"), lit("alta")))
-      .when(score < cfg.highConfidenceThreshold,
-        reasonStruct(lit("score_medio"), lit("baixa")))
+    when(score < cfg.lowConfidenceThreshold, reasonStruct(ScoreLow))
+      .when(score < cfg.highConfidenceThreshold, reasonStruct(ScoreMid))
 
   /** H4 snippet extraction (human_review.py:388-410): ±window characters
     * around the FIRST case-insensitive occurrence of `valor` in `text`,
@@ -178,96 +201,26 @@ object Review {
   /** From a Decide.scoreTurns frame, produce the consolidated review table:
     * (conv_id, turn_idx, prioridade, tipo_pii, valor_detectado, score,
     * motivo, texto_trecho, explicacao), sorted alta→media→baixa, stable.
+    *
+    * Every detail type is reviewed (the reference reviews its 5 real
+    * types; extended card/ssn/api_key join them under this engine). The
+    * plan has no window and one exchange, the W2 sort's, which carries the
+    * snippet rather than the turn's text.
     */
   def reviewTable(scored: DataFrame, cfg: Config = Default): DataFrame = {
-    // H3 gate + per-turn context-family booleans (evaluated once per turn)
-    val gated = scored
+    val trecho = snippetExpr(col("clean"), col("valor_detectado"), cfg.contextWindow)
+    scored
       .filter(col("contem_pii"))
-      .withColumn("f_artistic", col("clean").rlike(ArtisticRe))
-      .withColumn("f_academic", col("clean").rlike(AcademicRe))
-      .withColumn("f_journalistic", col("clean").rlike(JournalisticRe))
-      .withColumn("f_public", col("clean").rlike(PublicOfficialRe))
-      .withColumn("f_legal", col("clean").rlike(LegalRe))
-      .withColumn("f_authorship", col("clean").rlike(AuthorshipRe))
-
-    // explode details (all scrub-grade types; the reference reviews its 5
-    // real types — extended card/ssn/api_key join them under this engine)
-    val det = gated.select(
-      col("conv_id"), col("turn_idx"), col("clean"),
-      col("f_artistic"), col("f_academic"), col("f_journalistic"),
-      col("f_public"), col("f_legal"), col("f_authorship"),
-      posexplode(col("detalhes")).as(Seq("det_idx", "d")))
-      .select(col("*"),
-        col("d.tipo").as("tipo_pii"),
-        col("d.valor").as("valor_detectado"),
-        col("d.confianca").as("score"))
-      .drop("d")
-
-    val isName = col("tipo_pii") === "nome"
-    val lowerValor = lower(col("valor_detectado"))
-    // bidirectional substring match against the known-artist list
-    val knownArtist = KnownArtists
-      .map(a => lowerValor.contains(a) || lit(a).contains(lowerValor))
-      .reduce(_ || _)
-
-    // reasons in reference emission order (human_review.py:305-343):
-    // score band first, then artistic (context + known artist), academic,
-    // journalistic, public-official, legal, authorship
-    val reasons = array(
-      // the two score-band whens are mutually exclusive, so hosting them in
-      // one array slot keeps the filtered emission order identical
-      scoreBandReason(col("score"), cfg),
-      when(isName && col("f_artistic"),
-        reasonStruct(lit("contexto_artistico"), lit("alta"))),
-      when(isName && knownArtist,
-        reasonStruct(lit("contexto_artistico"), lit("alta"))),
-      when(isName && col("f_academic"),
-        reasonStruct(lit("contexto_academico"), lit("media"))),
-      when(isName && col("f_journalistic"),
-        reasonStruct(lit("contexto_jornalistico"), lit("media"))),
-      when(isName && col("f_public"),
-        reasonStruct(lit("contexto_cargo_publico"), lit("baixa"))),
-      when(isName && col("f_legal"),
-        reasonStruct(lit("contexto_juridico"), lit("baixa"))),
-      when(isName && col("f_authorship"),
-        reasonStruct(lit("contexto_autoria"), lit("baixa")))
-    )
-
-    val items = det
-      .withColumn("reasons", filter(reasons, r => r.isNotNull))
-      .select(col("*"), posexplode(col("reasons")).as(Seq("reason_idx", "r")))
-      .withColumn("motivo", col("r.motivo"))
-      .withColumn("prioridade", col("r.prioridade"))
-      .withColumn("arrival", col("det_idx") * 16 + col("reason_idx"))
-      .drop("reasons", "r")
-
-    // W1 consolidation: per (turn, lower(valor)) keep the item whose motivo
-    // has the smallest rank; strict '<' ⇒ first-seen wins ties
-    val rankMap = typedLit(ReasonRank)
-    val prioMap = typedLit(PriorityRank)
-    val w = Window
-      .partitionBy(col("conv_id"), col("turn_idx"), lowerValor)
-      .orderBy(coalesce(element_at(rankMap, col("motivo")), lit(99)).asc,
-        col("arrival").asc)
-    val consolidated = items
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-
-    // H4 snippet: ±window chars around first case-insensitive occurrence
-    val trecho = snippetExpr(col("clean"), col("valor_detectado"),
-      cfg.contextWindow)
-
-    consolidated
-      .withColumn("texto_trecho", regexp_replace(trecho, "\n", " "))
-      .withColumn("explicacao",
+      .select(col("conv_id"), col("turn_idx"), col("clean"),
+        inline(vigil.functions.review_items(col("clean"), col("detalhes"), cfg)))
+      .select(col("conv_id"), col("turn_idx"), col("prioridade"), col("tipo_pii"),
+        col("valor_detectado"), col("score"), col("motivo"),
+        regexp_replace(trecho, "\n", " ").as("texto_trecho"),
         coalesce(element_at(typedLit(Explanations), col("motivo")),
-          lit("Verificação manual recomendada.")))
-      .select("conv_id", "turn_idx", "prioridade", "tipo_pii",
-        "valor_detectado", "score", "motivo", "texto_trecho", "explicacao",
-        "arrival")
+          lit("Verificação manual recomendada.")).as("explicacao"),
+        col("arrival"))
       // W2 export sort: alta → media → baixa, stable by arrival within turn
-      .orderBy(coalesce(element_at(prioMap, col("prioridade")), lit(9)).asc,
+      .orderBy(coalesce(element_at(typedLit(PriorityRank), col("prioridade")), lit(9)).asc,
         col("conv_id").asc, col("turn_idx").asc, col("arrival").asc)
       .drop("arrival")
   }

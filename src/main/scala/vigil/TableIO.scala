@@ -1,7 +1,9 @@
 package vigil
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Partition-granular table IO with per-partition lineage and
   * checkpoint-resume (north rule S11; SURVEY.md §2.1).
@@ -131,18 +133,35 @@ object TableIO {
       .withColumn("written_at", lit(snapshotId)) // deterministic: snapshot-scoped
     // at most nBuckets rows: collect once, append them from the driver
     val rows = lin.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), lin.schema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), LineageSchema)
       .coalesce(1)
       .write.mode(SaveMode.Append).parquet(s"$path/_lineage")
     rows.length.toLong
   }
 
+  /** The `_lineage` columns, one row per (bucket, run). */
+  val LineageSchema: StructType = StructType(Seq(
+    StructField("bucket", IntegerType),
+    StructField("n_turns", LongType),
+    StructField("kept", LongType),
+    StructField("dropped", LongType),
+    StructField("scrubbed", LongType),
+    StructField("input_snapshot_id", StringType),
+    StructField("rule_version_hash", StringType),
+    StructField("written_at", StringType)))
+
+  /** The `_lineage` table, if any run wrote one, read with its fixed
+    * [[LineageSchema]]: building the frame submits no schema-inference job,
+    * and rows from files written before the `scrubbed` counter existed read
+    * it as null, whichever file lists first.
+    */
   def lineage(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_lineage")
+    val p = new Path(s"$path/_lineage")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(s"$path/_lineage")) else None
+    if (fs.exists(p)) Some(spark.read.schema(LineageSchema).parquet(p.toString)) else None
   }
 
+  /** Every snapshot's scored turns, schema inferred by Spark. */
   def readScored(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/data")
 
@@ -150,9 +169,50 @@ object TableIO {
     * [[Pipeline.run]] returns this — the unscoped read returns every
     * snapshot ever written (asserted in TableIOEvalSpec), which would
     * duplicate turns across snapshots.
+    *
+    * The data schema comes from the Spark schema in the footer of one of
+    * this snapshot's own files, read on the driver: an inferred read takes
+    * it from whichever file lists first, possibly an older snapshot's with
+    * other columns, and submits a Spark job to read that one footer. Only
+    * the data columns are given, so `snapshot` and `bucket` keep the types
+    * Spark infers from the partition paths. A snapshot with no
+    * Spark-written file falls back to the inferred read.
     */
-  def readScored(spark: SparkSession, path: String, snapshotId: String): DataFrame =
-    readScored(spark, path).filter(col("snapshot") === snapshotId)
+  def readScored(spark: SparkSession, path: String, snapshotId: String): DataFrame = {
+    val reader = snapshotSchema(spark, path, snapshotId) match {
+      case Some(schema) => spark.read.schema(schema)
+      case None => spark.read
+    }
+    reader.parquet(s"$path/data").filter(col("snapshot") === snapshotId)
+  }
+
+  /** The Spark schema stored in the footer of the first data file under
+    * the snapshot's partition directory, if there is one. */
+  private def snapshotSchema(
+      spark: SparkSession, path: String, snapshotId: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(s"$path/data/snapshot=" +
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(snapshotId))
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) return None
+    val files = fs.listFiles(dir, true)
+    var schema: Option[StructType] = None
+    while (schema.isEmpty && files.hasNext) {
+      val f = files.next().getPath
+      val hidden = f.getName.startsWith("_") || f.getName.startsWith(".")
+      if (!hidden && f.getName.endsWith(".parquet")) {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(SparkSchemaKey) finally reader.close()
+        schema = Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+      }
+    }
+    schema
+  }
+
+  /** The footer key under which Spark's Parquet writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Catalog-registered bucketed table of scored turns: `bucketBy(conv_id)`
     * records the hash-bucket layout in the catalog, so every later

@@ -432,6 +432,169 @@ object TurnScoreExpr {
   }
 }
 
+/** (clean, detalhes) → the turn's consolidated human-review items, in
+  * arrival order: array of struct(tipo_pii, valor_detectado, score, motivo,
+  * prioridade, arrival): a detail's `tipo` and `valor` as typed in the
+  * detail struct, its double `confianca` as the score. One row's fold of what
+  * [[Review.reviewTable]] used to spread over six `rlike` columns, two
+  * posexplodes and a `(conv_id, turn_idx, lower(valor))` window:
+  *  - H1: each detail's score against `low`/`high` ([[Review.ScoreLow]],
+  *    [[Review.ScoreMid]]; a null or NaN score gives no band, as the
+  *    column comparisons do);
+  *  - H2: for a `nome` detail, the [[Review.ContextFamilies]] that `find()`
+  *    in `clean` (as `rlike` does) and the bidirectional substring match of
+  *    its lowercased value against [[Review.KnownArtists]]. The family
+  *    patterns run at most once per turn, and only if it has a `nome`
+  *    detail;
+  *  - W1: per lowercased value (null values form one group), the item with
+  *    the smallest ([[Review.ReasonRank]], arrival), where arrival =
+  *    det_idx·16 + reason_idx, det_idx counting every element (nulls
+  *    included) and reason_idx the detail's emitted reasons.
+  *
+  * Values are lowercased by the code Spark's `Lower` runs
+  * (`CollationSupport.Lower` under the session's ICU case-mapping flag),
+  * so the consolidation key is `lower(valor)` byte for byte; substring and
+  * key comparisons are binary, as under the default collation.
+  */
+case class ReviewItemsExpr(
+    clean: Expression,
+    detalhes: Expression,
+    low: Double = Review.Default.lowConfidenceThreshold,
+    high: Double = Review.Default.highConfidenceThreshold)
+    extends BinaryExpression with CodegenFallback {
+  import ReviewItemsExpr._
+
+  override def left: Expression = clean
+  override def right: Expression = detalhes
+  override def nullable: Boolean = false
+  override def prettyName: String = "review_items"
+
+  private def detail: StructType = detalhes.dataType match {
+    case ArrayType(s: StructType, _)
+        if s.fields.exists(f => f.name == "confianca" && f.dataType == DoubleType) => s
+    case t => throw new IllegalArgumentException(
+      s"review_items: detalhes is $t, not an array of struct<tipo, valor, confianca: double>")
+  }
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("tipo_pii", detail("tipo").dataType),
+    StructField("valor_detectado", detail("valor").dataType),
+    StructField("score", DoubleType),
+    StructField("motivo", StringType, nullable = false),
+    StructField("prioridade", StringType, nullable = false),
+    StructField("arrival", IntegerType, nullable = false))), containsNull = false)
+
+  @transient private lazy val nFields = detail.length
+  @transient private lazy val tipoAt = detail.fieldIndex("tipo")
+  @transient private lazy val valorAt = detail.fieldIndex("valor")
+  @transient private lazy val scoreAt = detail.fieldIndex("confianca")
+  @transient private lazy val collationId =
+    detail("valor").dataType.asInstanceOf[StringType].collationId
+  @transient private lazy val useICU = org.apache.spark.sql.internal.SQLConf.get
+    .getConf(org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def eval(input: InternalRow): Any = {
+    val d = detalhes.eval(input)
+    if (d == null) return PiiSchema.EmptyArray
+    val dets = d.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val n = dets.numElements()
+    var families: Array[Boolean] = null
+    // W1 groups: lowercased value → index of its current winner in `items`
+    val groups = new java.util.HashMap[UTF8String, Integer]()
+    var nullGroup = -1
+    val items = scala.collection.mutable.ArrayBuffer.empty[Item]
+    var i = 0
+    while (i < n) {
+      if (!dets.isNullAt(i)) {
+        val e = dets.getStruct(i, nFields)
+        val valor = if (e.isNullAt(valorAt)) null else e.getUTF8String(valorAt)
+        var key: UTF8String = null
+        var emitted = 0
+        def emit(reason: Int): Unit = {
+          if (key == null && valor != null) key = lowerOf(valor)
+          val it = Item(e, reason, i * 16 + emitted)
+          emitted += 1
+          val at = if (valor == null) nullGroup else {
+            val g = groups.get(key); if (g == null) -1 else g.intValue
+          }
+          // arrival grows with i and emitted: a strictly smaller rank is
+          // the only way a later item wins, so the first-seen wins ties
+          if (at < 0) {
+            if (valor == null) nullGroup = items.length
+            else groups.put(key, items.length)
+            items += it
+          } else if (Rank(reason) < Rank(items(at).reason)) items(at) = it
+        }
+        if (!e.isNullAt(scoreAt)) {
+          val s = e.getDouble(scoreAt)
+          if (s < low) emit(ScoreLowAt) else if (s < high) emit(ScoreMidAt)
+        }
+        if (!e.isNullAt(tipoAt) && e.getUTF8String(tipoAt) == Nome) {
+          if (families == null) families = familiesIn(clean.eval(input))
+          if (families(0)) emit(FamilyAt)
+          if (valor != null) {
+            if (key == null) key = lowerOf(valor)
+            if (isKnownArtist(key)) emit(FamilyAt)
+          }
+          var f = 1
+          while (f < families.length) {
+            if (families(f)) emit(FamilyAt + f)
+            f += 1
+          }
+        }
+      }
+      i += 1
+    }
+    if (items.isEmpty) PiiSchema.EmptyArray
+    else new GenericArrayData(items.sortBy(_.arrival).map { it =>
+      val e = it.detail
+      new GenericInternalRow(Array[Any](
+        if (e.isNullAt(tipoAt)) null else e.getUTF8String(tipoAt).copy(),
+        if (e.isNullAt(valorAt)) null else e.getUTF8String(valorAt).copy(),
+        if (e.isNullAt(scoreAt)) null else e.getDouble(scoreAt),
+        Motivo(it.reason), Prioridade(it.reason), it.arrival))
+    }.toArray[Any])
+  }
+
+  private def lowerOf(v: UTF8String): UTF8String =
+    org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(v, collationId, useICU)
+
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): ReviewItemsExpr = copy(clean = l, detalhes = r)
+}
+
+object ReviewItemsExpr {
+  /** One emitted reason of a detail; `reason` indexes [[Reasons]]. */
+  private final case class Item(detail: InternalRow, reason: Int, arrival: Int)
+
+  /** H1's two reasons, then the six families' (the order of
+    * [[Review.ContextFamilies]]). */
+  private val Reasons: IndexedSeq[(String, String)] =
+    (Review.ScoreLow +: Review.ScoreMid +: Review.ContextFamilies.map(_.reason)).toIndexedSeq
+  private val ScoreLowAt = 0
+  private val ScoreMidAt = 1
+  private val FamilyAt = 2
+  private val Motivo: Array[UTF8String] = Reasons.map(r => UTF8String.fromString(r._1)).toArray
+  private val Prioridade: Array[UTF8String] =
+    Reasons.map(r => UTF8String.fromString(r._2)).toArray
+  private val Rank: Array[Int] = Reasons.map(r => Review.ReasonRank.getOrElse(r._1, 99)).toArray
+
+  private val Nome = UTF8String.fromString("nome")
+  private val Families: Array[java.util.regex.Pattern] =
+    Review.ContextFamilies.map(f => java.util.regex.Pattern.compile(f.pattern)).toArray
+  private val KnownArtists: Array[UTF8String] =
+    Review.KnownArtists.map(UTF8String.fromString).toArray
+
+  private def familiesIn(clean: Any): Array[Boolean] =
+    if (clean == null) new Array[Boolean](Families.length)
+    else {
+      val text = clean.toString
+      Families.map(_.matcher(text).find(0))
+    }
+
+  private def isKnownArtist(lowered: UTF8String): Boolean =
+    KnownArtists.exists(a => lowered.contains(a) || a.contains(lowered))
+}
+
 /** text → char-weighted word-n-gram repetition counters in ONE flat pass:
   * for each n in `ns`, (top{n}_chars, dup{n}_chars, tot{n}_chars) plus the
   * text's code-point count — the numerators/denominators of
@@ -1478,6 +1641,11 @@ object functions {
   def repetition_stats(c: Column, ns: Seq[Int]): Column =
     VigilShim.column(RepetitionStatsExpr(expr(c), ns))
   def turn_score(c: Column): Column = VigilShim.column(TurnScoreExpr(expr(c)))
+  /** A PII turn's consolidated review items — see [[ReviewItemsExpr]]. */
+  def review_items(clean: Column, detalhes: Column,
+      cfg: Review.Config = Review.Default): Column =
+    VigilShim.column(ReviewItemsExpr(expr(clean), expr(detalhes),
+      cfg.lowConfidenceThreshold, cfg.highConfidenceThreshold))
   def cosine_sim(a: Column, b: Column): Column =
     VigilShim.column(CosineSimExpr(expr(a.cast("array<double>")),
       expr(b.cast("array<double>"))))

@@ -6,12 +6,14 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Result lock for the flagship `SparkEntry` query `pipeline_transcripts`, which
-  * no oracle pairs: an order-independent row hash at sf0.01 that must equal
-  * a constant recorded before the conversation-decision refactor, at one
-  * core and at four.
+/** Result locks for `SparkEntry` queries that no oracle pairs: an
+  * order-independent row hash at sf0.01 that must equal a constant recorded
+  * before the refactor that touched the query, at one core and at four.
+  * `pipeline_transcripts` (the flagship) was recorded before the
+  * conversation-decision refactor, `q_review_triage_transcripts` before the
+  * per-turn review kernel.
   *
-  * The query reads no file: `SparkEntry.transcripts` takes its scale from
+  * Both queries read no file: `SparkEntry.transcripts` takes its scale from
   * the directory name alone (sf0.01 → 2,000 Synth conversations).
   *
   * The suites share one local[4] SparkContext, and a JVM holds only one, so
@@ -23,8 +25,8 @@ class FlagshipLockSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = session("local[4]")
 
-  /** `main` in a child JVM; returns the hash it prints. */
-  private def hashInChildJvm(master: String): String = {
+  /** `main` in a child JVM; returns the hashes it prints, by query. */
+  private def hashesInChildJvm(master: String): Map[String, String] = {
     val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
     val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val jvmArgs = rt.getInputArguments.asScala.filter(a =>
@@ -34,21 +36,36 @@ class FlagshipLockSpec extends AnyFunSuite {
     val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
     val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").getLines().toList
     assert(proc.waitFor() == 0, out.takeRight(20).mkString("\n"))
-    out.collectFirst { case l if l.startsWith(Prefix) => l.stripPrefix(Prefix) }
-      .getOrElse(fail(out.takeRight(20).mkString("\n")))
+    val got = out.collect { case l if l.startsWith(Prefix) =>
+      val Array(q, h) = l.stripPrefix(Prefix).split(" ", 2)
+      q -> h
+    }.toMap
+    assert(got.keySet == Locked.map(_._1).toSet, out.takeRight(20).mkString("\n"))
+    got
   }
 
-  test("pipeline_transcripts row hash is locked at local[1] and local[4]") {
-    assert(hash(spark) == PipelineTranscripts, "pipeline_transcripts at local[4]")
-    assert(hashInChildJvm("local[1]") == PipelineTranscripts, "pipeline_transcripts at local[1]")
+  private lazy val local1 = hashesInChildJvm("local[1]")
+
+  Locked.foreach { case (query, expected) =>
+    test(s"$query row hash is locked at local[1] and local[4]") {
+      assert(hash(spark, query) == expected, s"$query at local[4]")
+      assert(local1(query) == expected, s"$query at local[1]")
+    }
   }
 }
 
 object FlagshipLockSpec {
   /** `rows:sum of xxhash64` of `pipeline_transcripts` at sf0.01. */
   val PipelineTranscripts = "4256:238196791668216167642"
+  /** `rows:sum of xxhash64` of `q_review_triage_transcripts` at sf0.01. */
+  val ReviewTriageTranscripts = "331:21941937658985251946"
 
-  private val Prefix = "pipeline_transcripts hash: "
+  /** The locked queries and their hashes, in test order. */
+  val Locked: Seq[(String, String)] = Seq(
+    "pipeline_transcripts" -> PipelineTranscripts,
+    "q_review_triage_transcripts" -> ReviewTriageTranscripts)
+
+  private val Prefix = "row hash: "
 
   def session(master: String): SparkSession = SparkSession.builder()
     .master(master)
@@ -57,8 +74,8 @@ object FlagshipLockSpec {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def hash(spark: SparkSession): String =
-    rowHash(SparkEntry.queries("pipeline_transcripts")(spark, "sf0.01"))
+  def hash(spark: SparkSession, query: String): String =
+    rowHash(SparkEntry.queries(query)(spark, "sf0.01"))
 
   /** Row count and the sum of each row's xxhash64 over its columns in name
     * order, doubles rounded to float first so that neither summation order
@@ -77,10 +94,12 @@ object FlagshipLockSpec {
     s"${r.getLong(0)}:${r.getDecimal(1)}"
   }
 
-  /** Prints the hash at the master given as the only argument. */
+  /** Prints each locked query's hash at the master given as the only
+    * argument, one `row hash: <query> <hash>` line per query. */
   def main(args: Array[String]): Unit = {
     val spark = session(args(0))
     spark.sparkContext.setLogLevel("ERROR")
-    try println(Prefix + hash(spark)) finally spark.stop()
+    try Locked.foreach { case (q, _) => println(s"$Prefix$q ${hash(spark, q)}") }
+    finally spark.stop()
   }
 }

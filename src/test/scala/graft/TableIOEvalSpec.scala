@@ -31,6 +31,20 @@ class TableIOEvalSpec extends AnyFunSuite {
     rows.toMap
   }
 
+  /** Spark jobs started while `body` runs. */
+  private def jobsWhile(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.VigilSparkShim.waitListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.VigilSparkShim.waitListenerBusEmpty(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
   /** The lineage counters by their defining formulas, straight from a
     * decided frame per bucket: `keep` and `scrubbed_text =!= clean`. */
   private def countersOf(decided: DataFrame, nBuckets: Int): Map[Int, Counters] = {
@@ -87,12 +101,68 @@ class TableIOEvalSpec extends AnyFunSuite {
     assert(nPart > 0 && nPart <= 3)
     val expected = countersOf(Decide.decideWindowed(input, cfg), 8)
     assert(lineageOf(dir, "snap-1") == expected.filter(_._1 < 3))
+    // a lineage file written before the `scrubbed` counter existed, named
+    // to list first: its rows read `scrubbed` as null, and the column
+    // stays in the schema whichever file lists first
+    val old = s"$dir/old_lineage"
+    Seq((0, 5L, 4L, 1L, "snap-0", TableIO.ruleVersionHash, "snap-0"))
+      .toDF("bucket", "n_turns", "kept", "dropped", "input_snapshot_id",
+        "rule_version_hash", "written_at")
+      .coalesce(1).write.parquet(old)
+    val oldFile = new java.io.File(old).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(oldFile.toPath, java.nio.file.Paths.get(s"$dir/_lineage/a-pre-scrubbed.parquet"))
     // resume with the FULL input: already-done buckets must be skipped
     val nRest = TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8, cfg = cfg)
     assert(nRest > 0)
     assert(TableIO.readScored(spark, dir).count() == scored.count(),
       "after resume the table holds exactly one copy of every turn")
     assert(lineageOf(dir, "snap-1") == expected)
+    val pre = TableIO.lineage(spark, dir).get.filter(col("input_snapshot_id") === "snap-0")
+      .select("bucket", "n_turns", "scrubbed").collect()
+    assert(pre.length == 1 && pre(0).getInt(0) == 0 && pre(0).getLong(1) == 5L &&
+      pre(0).isNullAt(2), pre.mkString)
+    assert(jobsWhile(TableIO.lineage(spark, dir)) == 0, "lineage infers no schema")
+  }
+
+  test("a scoped view takes its schema from its own snapshot") {
+    val dir = Files.createTempDirectory("vigil_scoped_schema").toString
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    val corpus = Synth.corpusDF(spark, 30)
+    // an older, narrower snapshot (no conversation decisions) that lists
+    // before the one Pipeline.run writes
+    Decide.scoreTurns(corpus, cfg)
+      .withColumn("snapshot", lit("a-old")).withColumn("bucket", TableIO.bucketOf(4))
+      .write.partitionBy("snapshot", "bucket").parquet(s"$dir/data")
+    val view = vigil.Pipeline.run(spark, corpus, dir, "snap-1", cfg, nBuckets = 4)
+    val stored = spark.read.parquet(s"$dir/data/snapshot=snap-1").drop("bucket").schema
+    assert(stored.fieldNames.contains("keep") && stored.fieldNames.contains("majority_lang"))
+    assert(view.drop("snapshot", "bucket").schema == stored,
+      s"scoped view schema:\n${view.schema.treeString}")
+    assert(view.filter(col("keep").isNotNull).count() == corpus.count())
+
+    // a numeric snapshot id keeps the partition type Spark infers from paths
+    val num = Files.createTempDirectory("vigil_numeric_snapshot").toString
+    val numView = vigil.Pipeline.run(spark, corpus, num, "20260101", cfg, nBuckets = 4)
+    val inferred = spark.read.parquet(s"$num/data").schema
+    assert(numView.schema("snapshot").dataType == inferred("snapshot").dataType)
+    assert(numView.schema("snapshot").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(numView.schema("bucket").dataType == inferred("bucket").dataType)
+    assert(numView.count() == corpus.count())
+  }
+
+  test("readScored builds a snapshot's view from its footer, with no job") {
+    val dir = Files.createTempDirectory("vigil_footer_schema").toString
+    val cfg = Decide.Default.copy(targetLang = "pt")
+    vigil.Pipeline.run(spark, Synth.corpusDF(spark, 30), dir, "snap-1", cfg, nBuckets = 4)
+    val inferred = spark.read.parquet(s"$dir/data").filter(col("snapshot") === "snap-1")
+    var view: DataFrame = null
+    assert(jobsWhile { view = TableIO.readScored(spark, dir, "snap-1") } == 0)
+    assert(view.schema.treeString == inferred.schema.treeString)
+    def rows(df: DataFrame) =
+      df.orderBy("conv_id", "turn_idx").collect().map(_.toSeq.map(String.valueOf)).toSeq
+    assert(rows(view) == rows(inferred))
+    // a snapshot with no file falls back to the inferred read: empty
+    assert(TableIO.readScored(spark, dir, "no-such-snapshot").count() == 0)
   }
 
   test("each writeScored call appends exactly one _lineage file") {
