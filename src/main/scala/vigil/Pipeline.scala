@@ -148,17 +148,30 @@ object Decide {
         "__m" -> functions.lang_mode(col("lang")).over(w),
         "__n_turns" -> count(lit(1)).over(w),
         "__density" -> avg(col("contem_pii").cast("int")).over(w)))
-      .withColumns(ListMap(
-        "majority_lang" -> col("__m.lang"),
-        "pii_density" -> col("__density"),
-        "drop_conversation" ->
-          ((col("__m.lang") =!= lit(cfg.targetLang) &&
-            (col("__m.cnt").cast("double") / col("__n_turns")) >=
-              lit(cfg.minMajorityFrac)) ||
-            col("__density") > lit(cfg.maxConvPiiDensity))))
+      .withColumns(convRule(col("__m.lang"), col("__m.cnt"), col("__n_turns"),
+        col("__density"), cfg))
       .withColumn("keep", col("keep_turn") && !col("drop_conversation"))
       .drop("__m", "__n_turns", "__density")
   }
+
+  /** The conversation rule over one conversation's stats: its majority
+    * language and that language's turn count, its turn count and its PII
+    * density. Returns majority_lang, pii_density and drop_conversation: a
+    * conversation drops when a language other than the target holds at
+    * least `minMajorityFrac` of its turns, or when its PII density exceeds
+    * `maxConvPiiDensity`. A null majority language leaves the language
+    * half null, as SQL's `=!=` does. [[convWindows]] and
+    * [[vigil.streaming.StreamPipeline.convDecisionsStream]] both apply it.
+    */
+  private[vigil] def convRule(majorityLang: Column, majorityCnt: Column,
+      nTurns: Column, density: Column, cfg: Config): ListMap[String, Column] =
+    ListMap(
+      "majority_lang" -> majorityLang,
+      "pii_density" -> density,
+      "drop_conversation" ->
+        ((majorityLang =!= lit(cfg.targetLang) &&
+          (majorityCnt.cast("double") / nTurns) >= lit(cfg.minMajorityFrac)) ||
+          density > lit(cfg.maxConvPiiDensity)))
 }
 
 /** Conversation assembly (north rule W4): document-shaped rollups of each

@@ -161,14 +161,10 @@ object TableIO {
     if (fs.exists(p)) Some(spark.read.schema(LineageSchema).parquet(p.toString)) else None
   }
 
-  /** Every snapshot's scored turns, schema inferred by Spark. */
-  def readScored(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/data")
-
-  /** Snapshot-scoped read: partition-prunes to ONE snapshot's directories.
-    * [[Pipeline.run]] returns this — the unscoped read returns every
-    * snapshot ever written (asserted in TableIOEvalSpec), which would
-    * duplicate turns across snapshots.
+  /** Snapshot-scoped read of the scored turns: partition-prunes to ONE
+    * snapshot's directories. [[Pipeline.run]] returns this — `$path/data`
+    * holds every snapshot ever written (asserted in TableIOEvalSpec), so
+    * reading it whole would duplicate turns across snapshots.
     *
     * The data schema comes from the Spark schema in the footer of one of
     * this snapshot's own files, read on the driver: an inferred read takes
@@ -213,22 +209,4 @@ object TableIO {
 
   /** The footer key under which Spark's Parquet writer stores the row schema. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
-  /** Catalog-registered bucketed table of scored turns: `bucketBy(conv_id)`
-    * records the hash-bucket layout in the catalog, so every later
-    * conv_id-keyed aggregation or join reads co-located buckets and plans
-    * WITHOUT a shuffle exchange on this side (asserted in TableIOEvalSpec).
-    * This is the Spark-native analog of the Iceberg bucket(conv_id)
-    * transform the directory layout above emulates — at 10^12-turn scale,
-    * pre-bucketing the scored table converts every downstream
-    * conversation-level pass from a full shuffle into a local scan.
-    */
-  def writeScoredBucketedTable(
-      scored: DataFrame, table: String, nBuckets: Int = 64): Unit =
-    scored.write
-      .mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(nBuckets, "conv_id")
-      .sortBy("conv_id")
-      .saveAsTable(table)
 }

@@ -1015,11 +1015,7 @@ case class LangModeAgg(
     var best: UTF8String = null
     var bestCnt = 0L
     buf.forEach { (k, c) =>
-      val n = c(0)
-      if (n > bestCnt ||
-          (n == bestCnt && k != null && (best == null || k.compareTo(best) > 0))) {
-        best = k; bestCnt = n
-      }
+      if (LangModeAgg.beats(k, c(0), best, bestCnt)) { best = k; bestCnt = c(0) }
     }
     if (bestCnt == 0L) null else new GenericInternalRow(Array[Any](bestCnt, best))
   }
@@ -1058,6 +1054,17 @@ case class LangModeAgg(
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
       cs: IndexedSeq[Expression]): LangModeAgg = copy(child = cs.head)
+}
+
+object LangModeAgg {
+  /** The mode's order: whether `lang` seen `n` times beats the best so
+    * far, `best` seen `bestCnt` times. A higher count wins; on equal counts
+    * the larger lang in UTF-8 byte order wins, and a null lang is lowest.
+    * `LangModeAgg` and the streaming conversation state both pick with it.
+    */
+  def beats(lang: UTF8String, n: Long, best: UTF8String, bestCnt: Long): Boolean =
+    n > bestCnt ||
+      (n == bestCnt && lang != null && (best == null || lang.compareTo(best) > 0))
 }
 
 /** Flat-loop twin of [[Decontam]]'s normative gram-overlap column algebra

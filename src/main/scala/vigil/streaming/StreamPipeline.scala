@@ -1,132 +1,108 @@
 package vigil.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
-import vigil.Decide
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout}
+import org.apache.spark.unsafe.types.UTF8String
+import vigil.{Decide, LangModeAgg}
 
-/** Structured Streaming face of the engine.
+/** Structured Streaming faces of the engine. Each one computes its batch
+  * counterpart's result incrementally and keeps no copy of its rule.
   *
-  * The per-turn scoring stage is stateless and narrow (one deterministic
-  * expression pipeline), so it applies to a streaming DataFrame unchanged —
-  * readStream → scoreTurns → writeStream. Conversation-level decisions are
-  * the stateful part: a KeyValueGroupedDataset.mapGroupsWithState keyed by
-  * conv_id folds per-language counts / PII density incrementally and emits
-  * the updated decision per micro-batch (Update mode). State size is O(1)
-  * per live conversation (a bounded lang-count map), so executor state
-  * stores scale with active conversations, not turns.
+  * - Per-turn scoring is stateless and narrow, so [[vigil.Decide.scoreTurns]]
+  *   applies to a streaming frame unchanged.
+  * - [[convDecisionsStream]] folds each conversation's turn count, PII
+  *   count and per-language counts in event-time-evicted state, and turns
+  *   them into decisions with the batch rule ([[vigil.Decide.convRule]]),
+  *   the majority language picked in [[vigil.LangModeAgg]]'s order.
+  * - [[piiRateWindows]] and [[dedupStream]] are watermarked Spark
+  *   operators with bounded state.
+  * - The stored-table faces ([[neardupStreamExact]], [[docFilterStreamExact]],
+  *   [[lineDedupStreamExact]], [[spanDedupStreamExact]],
+  *   [[searchIndexStream]]) run a batch family's incremental operator once
+  *   per micro-batch against tables under `storedBase`, through one
+  *   skeleton ([[microBatches]]).
   */
 object StreamPipeline {
 
-  final case class ConvState(
-      n: Long, pii: Long, tox: Long, langCounts: Map[String, Long])
+  /** One conversation's folded turns: turn count, PII turns, and the turn
+    * count of each language (a null lang included, which a map key cannot
+    * hold).
+    */
+  private[streaming] final case class ConvState(n: Long, pii: Long, langCounts: Seq[(String, Long)])
 
-  final case class ConvUpdate(
-      conv_id: String,
-      n_turns: Long,
-      majority_lang: String,
-      pii_density: Double,
-      drop_conversation: Boolean)
-
-  /** Stateless streaming scoring: identical semantics to the batch path. */
-  def scoreStream(turns: DataFrame, cfg: Decide.Config = Decide.Default): DataFrame =
-    Decide.scoreTurns(turns, cfg)
-
-  private def fold(s0: ConvState,
-      turns: Iterator[(String, String, Int, Int)]): ConvState = {
-    var s = s0
-    turns.foreach { case (_, lang, pii, tox) =>
-      s = ConvState(
-        s.n + 1, s.pii + pii, s.tox + tox,
-        s.langCounts.updated(lang, s.langCounts.getOrElse(lang, 0L) + 1))
+  /** (conv_id, n_turns, PII turns, majority lang, its turn count), the
+    * majority picked as [[vigil.LangModeAgg]] picks it.
+    */
+  private def convStats(convId: String, s: ConvState): (String, Long, Long, String, Long) = {
+    var best: String = null
+    var bestCnt = 0L
+    s.langCounts.foreach { case (lang, n) =>
+      if (LangModeAgg.beats(UTF8String.fromString(lang), n,
+          UTF8String.fromString(best), bestCnt)) { best = lang; bestCnt = n }
     }
-    s
+    (convId, s.n, s.pii, best, bestCnt)
   }
 
-  private def decision(convId: String, s: ConvState,
-      cfg: Decide.Config): ConvUpdate = {
-    val (mLang, mCnt) =
-      if (s.langCounts.isEmpty) ("und", 0L)
-      else s.langCounts.maxBy { case (l, c) => (c, l) }
-    val density = if (s.n == 0) 0.0 else s.pii.toDouble / s.n
-    val drop =
-      (mLang != cfg.targetLang &&
-        s.n > 0 && mCnt.toDouble / s.n >= cfg.minMajorityFrac) ||
-        density > cfg.maxConvPiiDensity
-    ConvUpdate(convId, s.n, mLang, density, drop)
-  }
-
-  /** Stateful conversation decisions over a scored stream (Update mode),
-    * NO state eviction: state lives for every conversation ever seen.
-    * Right for bounded replays and tests (any late turn is still folded);
-    * WRONG as the always-on production shape at transcript scale — use
-    * [[convDecisionsStreamEvicting]] there, which bounds the state store
-    * to conversations active within the watermark horizon.
+  /** Conversation decisions over a scored stream (`conv_id`, `lang`,
+    * `contem_pii` and event-time `ts`), in Update mode: each micro-batch
+    * emits `(conv_id, n_turns, majority_lang, pii_density,
+    * drop_conversation)` for every conversation it touched, decided by the
+    * rule [[vigil.Decide.decideWindowed]] applies to the same turns.
+    *
+    * State is evicted by event time. A conversation idle past
+    * max(last event time, watermark) + idleGapMs is finalized: its decision
+    * is emitted one last time and its state removed, so the state store
+    * holds the conversations live inside the horizon, not every one ever
+    * seen. A turn arriving after eviction (but above the watermark) re-keys
+    * the conversation with fresh state; rows below the watermark are
+    * dropped before the stateful operator, as in [[piiRateWindows]]. A
+    * bounded replay decides whole conversations by passing horizons longer
+    * than its event-time span.
     */
   def convDecisionsStream(
-      scored: DataFrame, cfg: Decide.Config = Decide.Default): Dataset[ConvUpdate] = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    scored
-      .select(col("conv_id"), col("lang"),
-        col("contem_pii").cast("int"), col("toxic").cast("int"))
-      .as[(String, String, Int, Int)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[ConvState, ConvUpdate](GroupStateTimeout.NoTimeout) {
-        case (convId, turns, state: GroupState[ConvState]) =>
-          val s = fold(state.getOption.getOrElse(ConvState(0, 0, 0, Map.empty)), turns)
-          state.update(s)
-          decision(convId, s, cfg)
-      }
-  }
-
-  /** The production shape of [[convDecisionsStream]]: event-time state
-    * eviction keyed to the watermark. A conversation idle past
-    * max(last event time, watermark) + idleGapMs is finalized — its
-    * decision is emitted one last time and its state REMOVED, so the
-    * state store scales with conversations live inside the horizon, not
-    * with every conversation ever seen (the r2 `weak` finding: NoTimeout
-    * state grows unboundedly at 10^12-turn scale). A turn arriving after
-    * eviction (but above the watermark) re-keys the conversation with
-    * FRESH state — the documented trade-off of bounded state; rows below
-    * the watermark are dropped by the engine before the stateful
-    * operator, exactly as in [[piiRateWindows]].
-    */
-  def convDecisionsStreamEvicting(
       scored: DataFrame, cfg: Decide.Config = Decide.Default,
       watermarkDelay: String = "10 minutes",
-      idleGapMs: Long = 30L * 60 * 1000): Dataset[ConvUpdate] = {
+      idleGapMs: Long = 30L * 60 * 1000): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    scored
+    val stats = scored
       .withWatermark("ts", watermarkDelay)
-      .select(col("conv_id"), col("lang"),
-        col("contem_pii").cast("int"), col("toxic").cast("int"), col("ts"))
-      .as[(String, String, Int, Int, java.sql.Timestamp)]
+      .select(col("conv_id"), col("lang"), col("contem_pii").cast("int"), col("ts"))
+      .as[(String, String, Int, java.sql.Timestamp)]
       .groupByKey(_._1)
-      .mapGroupsWithState[ConvState, ConvUpdate](GroupStateTimeout.EventTimeTimeout) {
+      .mapGroupsWithState[ConvState, (String, Long, Long, String, Long)](
+        GroupStateTimeout.EventTimeTimeout) {
         case (convId, turns, state: GroupState[ConvState]) =>
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            decision(convId, s, cfg) // final emission; state evicted
+            convStats(convId, s) // final emission; state evicted
           } else {
-            var maxTs = Long.MinValue
-            val s = fold(
-              state.getOption.getOrElse(ConvState(0, 0, 0, Map.empty)),
-              turns.map { case (cid, lang, pii, tox, ts) =>
-                maxTs = math.max(maxTs, ts.getTime)
-                (cid, lang, pii, tox)
-              })
+            val s0 = state.getOption.getOrElse(ConvState(0L, 0L, Seq.empty))
+            val counts = scala.collection.mutable.LinkedHashMap.from(s0.langCounts)
+            var (n, pii, maxTs) = (s0.n, s0.pii, Long.MinValue)
+            turns.foreach { case (_, lang, p, ts) =>
+              n += 1; pii += p; maxTs = math.max(maxTs, ts.getTime)
+              counts(lang) = counts.getOrElse(lang, 0L) + 1
+            }
+            val s = ConvState(n, pii, counts.toSeq)
             state.update(s)
-            // idle horizon rides the LATER of last-seen event time and the
-            // current watermark (setTimeoutTimestamp must exceed the
+            // the idle horizon rides the later of last-seen event time and
+            // the current watermark (setTimeoutTimestamp must exceed the
             // watermark or the engine rejects it)
             state.setTimeoutTimestamp(
               math.max(maxTs, state.getCurrentWatermarkMs()) + idleGapMs)
-            decision(convId, s, cfg)
+            convStats(convId, s)
           }
       }
+      .toDF("conv_id", "n_turns", "__pii", "__lang", "__cnt")
+    val rule = Decide.convRule(col("__lang"), col("__cnt"), col("n_turns"),
+      col("__pii").cast("double") / col("n_turns"), cfg)
+    stats.select(col("conv_id") +: col("n_turns") +:
+      rule.map { case (name, c) => c.as(name) }.toSeq: _*)
   }
 
   /** Watermarked event-time windowed aggregation over a scored stream:
@@ -155,8 +131,7 @@ object StreamPipeline {
     * `dropDuplicatesWithinWatermark` keeps one row per key and EVICTS the
     * key's state once the watermark passes its last-seen event time plus
     * the delay, so state scales with keys live inside the horizon — the
-    * plain streaming `dropDuplicates` keeps every key forever (the same
-    * unbounded-state trap as NoTimeout conversation state). Duplicates
+    * plain streaming `dropDuplicates` keeps every key forever. Duplicates
     * arriving within the horizon dedupe exactly; a duplicate replayed
     * AFTER its key was evicted re-emits (the documented at-least-once →
     * approximately-exactly-once trade of bounded state; size the delay to
@@ -169,119 +144,88 @@ object StreamPipeline {
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** Streaming near-dup suppression — the streaming face of the MinHash
-    * dedup family: each row's full MinHash signature (same kernel and
-    * parameters as `Dedup.minhashLsh`/`Dedup.computeSignatures`) becomes
-    * the dedup key, so a document whose shingle set matches one already
-    * seen within the watermark horizon is dropped even when the raw bytes
-    * differ (reordered words at shingleK = 1, re-encoded whitespace after
-    * cleaning — the re-post shape an ingest stream actually sees).
-    * Signature equality is the J ≈ 1 point of the S-curve: strictly
-    * stronger than one-band LSH collision, so no false suppression beyond
-    * the signature collision rate. State is the signature key only (the
-    * array, not the text) and is EVICTED once the watermark passes its
-    * last-seen event time plus the delay — same bounded-state contract,
-    * and the same approximately-exactly-once trade, as [[dedupStream]].
-    * First arrival within the horizon wins; the emitted schema is the
-    * input schema unchanged. This is the PER-ROW-LATENCY rung of the
-    * streaming dedup ladder: it only suppresses at J ≈ 1, while the batch
-    * family drops at J ≥ minJaccard — for the exact batch contract at
-    * micro-batch granularity use [[neardupStreamExact]].
-    */
-  def neardupStream(
-      turns: DataFrame, textCol: String,
-      watermarkDelay: String = "10 minutes",
-      bands: Int = 16, rowsPerBand: Int = 8, shingleK: Int = 3,
-      seed: Long = 42L): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val sigUdf = udf((t: String) =>
-      vigil.dedup.Dedup.MinHash.signature(
-        if (t == null) "" else t, numHashes, shingleK, seed))
-    turns
-      .withColumn("__minhash_sig", sigUdf(col(textCol)))
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("__minhash_sig")
-      .drop("__minhash_sig")
-  }
-
-  /** Streaming face of [[vigil.DocFilter]] — the kept-document ingest
-    * stream. The batch cascade's stateless prefix (language → quality →
-    * repetition → toxicity) applies to a stream unchanged: the scoring
-    * spine is one narrow fused expression and `RepetitionStatsExpr` is
-    * strictly per-row, so no stage before dedup needs state. Both dedup
-    * stages collapse into ONE watermarked suppression keyed on the
-    * MinHash signature at shingleK = 1: byte-equal text ⇒ token-set-equal
-    * ⇒ signature-equal, so exact duplicates are subsumed by the near-dup
-    * key, and one stateful operator carries the whole dedup face
-    * (bounded-state contract and at-least-once trade exactly as
-    * [[neardupStream]]).
+  /** The skeleton of the stored-table faces: one `foreachBatch` that, for
+    * each micro-batch of `docs`,
+    *  1. selects `(idCol, textCol)` and, once `$storedBase/$guard` exists,
+    *     drops the rows whose id its `guardId` column already holds (the
+    *     replay guard: at-least-once sources redeliver, and a replayed row
+    *     would otherwise match itself in the stored state);
+    *  2. persists and counts that remainder (`fresh`) and skips the batch
+    *     if it is empty;
+    *  3. calls `body(fresh, stored, pin)`, where `stored` reads a table
+    *     under `storedBase` (None before the first batch has stored one),
+    *     and takes back the `(table, frame)` pairs to append and the frame
+    *     to emit;
+    *  4. materializes every one of those frames, appends each under
+    *     `$storedBase/$table` in order, then calls `emit`.
     *
-    * Semantics vs batch [[vigil.DocFilter.filterDocs]], documented
-    * honestly: (1) only KEPT documents are emitted — suppression removes
-    * rows, it cannot label them, so the audit shape with `drop_reason`
-    * per document is the batch filter; (2) near-dup suppression fires on
-    * signature equality (the J ≈ 1 point), not the batch LSH-verified
-    * J ≥ minJaccard — a streaming J ∈ [0.9, 1) pair passes here and is
-    * caught by the nightly batch pass; (3) the survivor of a dup group is
-    * the FIRST arrival within the horizon, where batch keeps the smallest
-    * id. All three gaps are closed by [[docFilterStreamExact]] at
-    * micro-batch granularity; this per-row variant remains the
-    * low-latency rung of the ladder.
+    * Step 4 avoids the path-cache trap. Appending to a stored table
+    * refreshes Spark's caches for that path and invalidates every plan that
+    * reads it, `fresh` included. A frame still lazy at that point is
+    * re-evaluated against the grown table and silently loses the batch. So
+    * all appended and emitted frames are materialized (`localCheckpoint`)
+    * before the first append. `pin` does it, once per frame; a frame built
+    * only on pinned frames is already materialized and is written as is. A
+    * body pins a frame itself only to derive several tables from it.
+    *
+    * Whether stored state exists is asked of the path's Hadoop
+    * `FileSystem`, so a `file:` URI or a remote base keeps its guard and
+    * its cross-batch state. `foreachBatch` may re-run a batch on recovery,
+    * so `emit` must be idempotent (overwrite by batch id, keyed upsert) for
+    * end-to-end exactly-once.
     */
-  def docFilterStream(
-      docs: DataFrame, // must carry (`text`, event-time `ts`)
-      cfg: vigil.DocFilter.Config = vigil.DocFilter.Default,
-      watermarkDelay: String = "10 minutes",
-      bands: Int = 16, rowsPerBand: Int = 8,
-      seed: Long = 42L): DataFrame = {
-    import vigil.Quality
-    val textCol = "text"
-    val decideCfg = Decide.Default.copy(
-      targetLang = cfg.targetLang, quality = cfg.quality)
-    val numHashes = bands * rowsPerBand
-    val sigUdf = udf((t: String) =>
-      vigil.dedup.Dedup.MinHash.signature(
-        if (t == null) "" else t, numHashes, k = 1, seed))
-    val scored = Decide.scoreTurns(docs, decideCfg)
-      .withColumn("stopword_frac",
-        Quality.stopwordFrac(Quality.words(col(textCol))))
-      .withColumn("__r", vigil.functions.repetition_stats(col(textCol), Seq(2)))
-    val withFracs = Quality.repetitionFracs(col("__r"), Seq(2))
-      .foldLeft(scored) { case (df, (n, c)) => df.withColumn(n, c) }
-    withFracs
-      .withColumn("repetition_pass", Quality.repetitionPasses(cfg.repetition))
-      .filter(col("lang") === cfg.targetLang && col("quality_pass") &&
-        col("repetition_pass") && !col("toxic"))
-      .withColumn("__minhash_sig", sigUdf(col(textCol)))
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("__minhash_sig")
-      .drop("__minhash_sig", "__r")
-  }
+  private def microBatches(
+      docs: DataFrame, idCol: String, textCol: String,
+      storedBase: String, guard: String, guardId: String)(
+      body: (DataFrame, Option[String => DataFrame], DataFrame => DataFrame) =>
+        (Seq[(String, DataFrame)], DataFrame))(
+      emit: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      val spark = batch.sparkSession
+      val read = (table: String) => spark.read.parquet(s"$storedBase/$table")
+      val marker = new Path(s"$storedBase/$guard/_SUCCESS")
+      val have = marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
+      val in = batch.select(col(idCol), col(textCol))
+      val fresh = (if (have)
+        in.join(read(guard).select(col(guardId).as(idCol)), Seq(idCol), "left_anti")
+      else in).persist()
+      try {
+        if (fresh.count() > 0) {
+          // the RDDs of this batch's checkpoints; `batch` itself is a
+          // LogicalRDD too, but one that recomputes its source
+          val checkpoints = scala.collection.mutable.Set[Int]()
+          def leafRdds(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
+            .map { case l: LogicalRDD => l.rdd.id; case _ => -1 }
+          val pinned = new java.util.IdentityHashMap[DataFrame, DataFrame]()
+          val pin = (df: DataFrame) => pinned.computeIfAbsent(df, _ =>
+            if (leafRdds(df).forall(checkpoints)) df
+            else {
+              val c = df.localCheckpoint(true)
+              checkpoints ++= leafRdds(c)
+              c
+            })
+          val (appends, out) = body(fresh, if (have) Some(read) else None, pin)
+          val tables = appends.map { case (table, df) => table -> pin(df) }
+          val emitted = pin(out)
+          tables.foreach { case (table, df) =>
+            df.write.mode("append").parquet(s"$storedBase/$table")
+          }
+          emit(emitted, batchId)
+        }
+      } finally fresh.unpersist()
+    }
 
-  /** EXACT streaming near-dup — closes [[neardupStream]]'s semantic gap
-    * (batch drops at J ≥ minJaccard; signature-equality suppression only
-    * at J ≈ 1, so a streamed J ∈ [0.9, 1) re-post used to survive until
-    * the nightly batch). Each micro-batch runs the BATCH incremental
+  /** Exact streaming near-dup: each micro-batch runs the batch incremental
     * verifier ([[vigil.dedup.Dedup.neardupVerifiedIncremental]]: LSH
-    * candidates → exact Jaccard) against a STORED kept-corpus pair of
-    * tables (`$storedBase/corpus` = (id, text), `$storedBase/sigs` =
-    * its MinHash signature table), then appends the batch's survivors —
-    * so the streamed kept set satisfies exactly the batch contract: no
-    * kept doc is within J ≥ minJaccard of an EARLIER kept doc (earlier
-    * batch wins; within a batch the canonical smaller id wins). The price
-    * is micro-batch granularity — which Structured Streaming pays anyway —
-    * and durable state = the same stored tables the batch incremental
-    * family serves from (shared with a nightly batch job; bounded by the
-    * kept corpus, not the stream history). The per-row-latency
-    * signature-equality suppression and this exact micro-batch face are
-    * the two rungs of the streaming dedup ladder; pick per use.
-    *
-    * At-least-once semantics: a replayed row whose id is already in the
-    * stored corpus is removed by an id anti-join BEFORE verification
-    * (it would otherwise near-dup-match itself and be mislabeled);
-    * foreachBatch may re-run a batch on recovery, so `emit` must be
-    * idempotent (overwrite-by-batch-id, keyed upsert) for end-to-end
-    * exactly-once. Empty (fully replayed) batches are not emitted.
+    * candidates, then exact Jaccard) against the stored kept corpus
+    * (`$storedBase/corpus` = (id, text), `$storedBase/sigs` = its MinHash
+    * signature table), then appends the batch's survivors. The streamed
+    * kept set satisfies the batch contract: no kept doc is within
+    * J ≥ minJaccard of an EARLIER kept doc (an earlier batch wins; within a
+    * batch the smaller id wins). Durable state is the same stored tables
+    * the batch incremental family serves from, bounded by the kept corpus,
+    * not the stream history. Replays, materialization and `emit`'s
+    * idempotency: [[microBatches]]; the corpus is the replay guard.
     */
   def neardupStreamExact(
       docs: DataFrame, textCol: String, idCol: String,
@@ -289,123 +233,75 @@ object StreamPipeline {
       bands: Int = 24, rowsPerBand: Int = 6, shingleK: Int = 1,
       seed: Long = 42L)(
       emit: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      import vigil.dedup.Dedup
-      val spark = batch.sparkSession
-      val corpusPath = s"$storedBase/corpus"
-      val sigsPath = s"$storedBase/sigs"
-      val have = new java.io.File(s"$corpusPath/_SUCCESS").exists()
-      val fresh = (if (have)
-        batch.select(col(idCol), col(textCol))
-          .join(spark.read.parquet(corpusPath).select(col(idCol)),
-            Seq(idCol), "left_anti")
-      else batch.select(col(idCol), col(textCol))).persist()
-      try {
-        if (fresh.count() > 0) {
-          val (cSigs, cText) =
-            if (have)
-              (spark.read.parquet(sigsPath), spark.read.parquet(corpusPath))
-            else
-              (Dedup.computeSignatures(fresh.limit(0), textCol, idCol,
-                bands, rowsPerBand, shingleK, seed), fresh.limit(0))
-          val pairs = Dedup.neardupVerifiedIncremental(cSigs, cText, fresh,
-            textCol, idCol, minJaccard, bands, rowsPerBand, seed,
-            shingleK = shingleK)
-          // batch side of mixed pairs drops (corpus is canonical); larger
-          // id of batch×batch pairs drops (id_a < id_b by construction)
-          val batchIds = fresh.select(col(idCol).as("__bid"))
-          val dropB = pairs
-            .join(batchIds, pairs("id_b") === col("__bid"), "leftsemi")
-            .select(col("id_b").as(idCol))
-          val dropA = pairs
-            .join(batchIds, pairs("id_a") === col("__bid"), "leftsemi")
-            .join(batchIds, pairs("id_b") === col("__bid"), "leftanti")
-            .select(col("id_a").as(idCol))
-          // localCheckpoint BEFORE any stored-table write: appending to
-          // corpusPath/sigsPath refreshes Spark's path caches and
-          // invalidates every plan that READS those paths — a lazy `kept`
-          // would re-evaluate its anti-join against the just-appended
-          // corpus and silently lose the batch (caught by spec)
-          val kept = fresh
-            .join(dropB.unionByName(dropA).distinct(), Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          kept.write.mode("append").parquet(corpusPath)
-          Dedup.computeSignatures(kept, textCol, idCol,
-            bands, rowsPerBand, shingleK, seed)
-            .write.mode("append").parquet(sigsPath)
-          emit(kept, batchId)
-          ()
+    microBatches(docs, idCol, textCol, storedBase, "corpus", idCol) {
+      (fresh, stored, pin) =>
+        import vigil.dedup.Dedup
+        val (cSigs, cText) = stored match {
+          case Some(read) => (read("sigs"), read("corpus"))
+          case None =>
+            (Dedup.computeSignatures(fresh.limit(0), textCol, idCol,
+              bands, rowsPerBand, shingleK, seed), fresh.limit(0))
         }
-      } finally fresh.unpersist()
-    }
+        val pairs = Dedup.neardupVerifiedIncremental(cSigs, cText, fresh,
+          textCol, idCol, minJaccard, bands, rowsPerBand, seed,
+          shingleK = shingleK)
+        // batch side of mixed pairs drops (corpus is canonical); larger
+        // id of batch×batch pairs drops (id_a < id_b by construction)
+        val batchIds = fresh.select(col(idCol).as("__bid"))
+        val dropB = pairs
+          .join(batchIds, pairs("id_b") === col("__bid"), "leftsemi")
+          .select(col("id_b").as(idCol))
+        val dropA = pairs
+          .join(batchIds, pairs("id_a") === col("__bid"), "leftsemi")
+          .join(batchIds, pairs("id_b") === col("__bid"), "leftanti")
+          .select(col("id_a").as(idCol))
+        val kept = pin(fresh
+          .join(dropB.unionByName(dropA).distinct(), Seq(idCol), "left_anti"))
+        (Seq("corpus" -> kept,
+          "sigs" -> Dedup.computeSignatures(kept, textCol, idCol,
+            bands, rowsPerBand, shingleK, seed)), kept)
+    }(emit)
 
-  /** EXACT streaming corpus filter — [[docFilterStream]]'s documented
-    * semantic gaps closed by running the BATCH incremental cascade per
-    * micro-batch against the stored kept-corpus tables
-    * ([[vigil.DocFilter.filterDocsIncremental]]; bootstrap batch =
-    * [[vigil.DocFilter.filterDocs]]) and appending each batch's kept docs
-    * to `$storedBase/{kept,hashes,sigs}`: (1) the full AUDIT frame (keep +
-    * drop_reason per doc) is emitted, not just survivors; (2) near-dup
-    * drops at exactly J ≥ cfg.minJaccard (LSH-verified), not signature
-    * equality; (3) the dup-group survivor is the stored-corpus canonical.
-    * Replay handling, emit idempotency contract, and the state =
-    * stored-tables trade exactly as [[neardupStreamExact]]. The stored
-    * sigs table uses the incremental filter's banding (24×6) at
-    * cfg.shingleK.
+  /** Exact streaming corpus filter: each micro-batch runs the batch
+    * incremental cascade ([[vigil.DocFilter.filterDocsIncremental]]; the
+    * first batch runs [[vigil.DocFilter.filterDocs]]) against the stored
+    * kept-corpus tables and appends its kept docs to
+    * `$storedBase/{kept,hashes,sigs}`. The full audit frame (keep +
+    * drop_reason per doc) is emitted; near-dup drops at J ≥ cfg.minJaccard
+    * (LSH-verified); a dup group's survivor is the stored-corpus canonical.
+    * The stored sigs table uses the incremental filter's banding (24×6) at
+    * cfg.shingleK. Replays, materialization and `emit`'s idempotency:
+    * [[microBatches]]; the kept table is the replay guard.
     */
   def docFilterStreamExact(
       docs: DataFrame, storedBase: String,
       idCol: String = "doc_id", textCol: String = "text",
       cfg: vigil.DocFilter.Config = vigil.DocFilter.Default)(
       emit: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      import vigil.dedup.Dedup
-      val spark = batch.sparkSession
-      val keptPath = s"$storedBase/kept"
-      val hashesPath = s"$storedBase/hashes"
-      val sigsPath = s"$storedBase/sigs"
-      val have = new java.io.File(s"$keptPath/_SUCCESS").exists()
-      val fresh = (if (have)
-        batch.select(col(idCol), col(textCol))
-          .join(spark.read.parquet(keptPath).select(col(idCol)),
-            Seq(idCol), "left_anti")
-      else batch.select(col(idCol), col(textCol))).persist()
-      try {
-        if (fresh.count() > 0) {
-          // localCheckpoint BEFORE the stored-table writes (see
-          // [[neardupStreamExact]]): the appends refresh the paths these
-          // plans read, and a lazy frame would re-evaluate against the
-          // updated tables and lose the batch
-          val out = (if (have)
-            vigil.DocFilter.filterDocsIncremental(
-              spark.read.parquet(sigsPath), spark.read.parquet(hashesPath),
-              spark.read.parquet(keptPath), fresh, idCol, textCol, cfg)
-          else vigil.DocFilter.filterDocs(fresh, idCol, textCol, cfg))
-            .localCheckpoint(true)
-          val kept = fresh.join(
-            out.filter(col("keep")).select(col(idCol)), Seq(idCol), "leftsemi")
-            .localCheckpoint(true)
-          kept.write.mode("append").parquet(keptPath)
-          kept.select(col(idCol), md5(col(textCol)).as("__h"))
-            .write.mode("append").parquet(hashesPath)
-          Dedup.computeSignatures(kept, textCol, idCol,
-            bands = 24, rowsPerBand = 6, shingleK = cfg.shingleK)
-            .write.mode("append").parquet(sigsPath)
-          emit(out, batchId)
-          ()
-        }
-      } finally fresh.unpersist()
-    }
+    microBatches(docs, idCol, textCol, storedBase, "kept", idCol) {
+      (fresh, stored, pin) =>
+        val out = pin(stored match {
+          case Some(read) =>
+            vigil.DocFilter.filterDocsIncremental(read("sigs"), read("hashes"),
+              read("kept"), fresh, idCol, textCol, cfg)
+          case None => vigil.DocFilter.filterDocs(fresh, idCol, textCol, cfg)
+        })
+        val kept = pin(fresh.join(
+          out.filter(col("keep")).select(col(idCol)), Seq(idCol), "leftsemi"))
+        (Seq("kept" -> kept,
+          "hashes" -> kept.select(col(idCol), md5(col(textCol)).as("__h")),
+          "sigs" -> vigil.dedup.Dedup.computeSignatures(kept, textCol, idCol,
+            bands = 24, rowsPerBand = 6, shingleK = cfg.shingleK)), out)
+    }(emit)
 
-  /** EXACT streaming line dedup — the line-dedup family's micro-batch
-    * face, same contract shape as [[neardupStreamExact]]: each batch is
-    * deduped against the stored corpus line-stats table with the BATCH
-    * semantics ([[vigil.dedup.LineDedup.dedupLinesIncremental]] — joint
-    * occurrence threshold, corpus-presence keep-first), so after n
-    * batches the emitted outputs equal the per-batch slices of one big
-    * [[vigil.dedup.LineDedup.dedupLines]] over everything seen, in
-    * arrival order (ids must sort by arrival — the ingest reality;
-    * spec-asserted).
+  /** Exact streaming line dedup — the line-dedup family's micro-batch
+    * face: each batch is deduped against the stored corpus line-stats
+    * table with the BATCH semantics
+    * ([[vigil.dedup.LineDedup.dedupLinesIncremental]] — joint occurrence
+    * threshold, corpus-presence keep-first), so after n batches the
+    * emitted outputs equal the per-batch slices of one big
+    * [[vigil.dedup.LineDedup.dedupLines]] over everything seen, in arrival
+    * order (ids must sort by arrival — the ingest reality; spec-asserted).
     *
     * Stored state (`storedBase`): `docs` = the deduped outputs (also the
     * replay guard — a re-posted id emits nothing); `linestats` = RAW
@@ -415,8 +311,6 @@ object StreamPipeline {
     * threshold-dropped banner's count and let later batches keep it.
     * The stats table grows one row per batch per distinct line; compact
     * it offline (same re-aggregation) when fragment count matters.
-    * Batch results are `localCheckpoint`ed BEFORE the appends (the
-    * path-cache refresh trap — see [[neardupStreamExact]]).
     */
   def lineDedupStreamExact(
       docs: DataFrame, idCol: String, textCol: String,
@@ -424,37 +318,21 @@ object StreamPipeline {
       keepFirst: Boolean = true,
       dropAtOrAbove: Long = Long.MaxValue)(
       emit: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      import vigil.dedup.LineDedup
-      val spark = batch.sparkSession
-      val docsPath = s"$storedBase/docs"
-      val statsPath = s"$storedBase/linestats"
-      val have = new java.io.File(s"$docsPath/_SUCCESS").exists()
-      val fresh = (if (have)
-        batch.select(col(idCol), col(textCol))
-          .join(spark.read.parquet(docsPath).select(col("id").as(idCol)),
-            Seq(idCol), "left_anti")
-      else batch.select(col(idCol), col(textCol))).persist()
-      try {
-        if (fresh.count() > 0) {
-          val stats = (if (have)
-            spark.read.parquet(statsPath)
-              .groupBy("k").agg(sum(col("cnt")).as("cnt"))
-          else LineDedup.computeLineStats(fresh.limit(0), idCol, textCol))
-          val out = LineDedup.dedupLinesIncremental(
-            stats, fresh, idCol, textCol, keepFirst, dropAtOrAbove)
-            .localCheckpoint(true)
-          val freshStats = LineDedup.computeLineStats(fresh, idCol, textCol)
-            .localCheckpoint(true)
-          out.write.mode("append").parquet(docsPath)
-          freshStats.write.mode("append").parquet(statsPath)
-          emit(out, batchId)
-          ()
+    microBatches(docs, idCol, textCol, storedBase, "docs", "id") {
+      (fresh, stored, _) =>
+        import vigil.dedup.LineDedup
+        val stats = stored match {
+          case Some(read) =>
+            read("linestats").groupBy("k").agg(sum(col("cnt")).as("cnt"))
+          case None => LineDedup.computeLineStats(fresh.limit(0), idCol, textCol)
         }
-      } finally fresh.unpersist()
-    }
+        val out = LineDedup.dedupLinesIncremental(
+          stats, fresh, idCol, textCol, keepFirst, dropAtOrAbove)
+        (Seq("docs" -> out,
+          "linestats" -> LineDedup.computeLineStats(fresh, idCol, textCol)), out)
+    }(emit)
 
-  /** EXACT streaming repeated-span scrub — the ExactSubstr family's
+  /** Exact streaming repeated-span scrub — the ExactSubstr family's
     * micro-batch face, same contract shape as [[lineDedupStreamExact]]:
     * each batch is scrubbed against the stored corpus window-stats table
     * ([[vigil.dedup.SpanDedup.scrubRepeatedSpansIncremental]]). Because
@@ -472,42 +350,24 @@ object StreamPipeline {
     * on read (`groupBy(h1, h2).sum(cnt)`) — RAW, not post-scrub, because
     * the threshold counts corpus OCCURRENCES: storing survivors' windows
     * would zero a scrubbed span's count and let later batches keep it.
-    * Batch results are `localCheckpoint`ed BEFORE the appends (the
-    * path-cache refresh trap — see [[neardupStreamExact]]).
     */
   def spanDedupStreamExact(
       docs: DataFrame, idCol: String, textCol: String,
       storedBase: String, L: Int = 50, minCount: Long = 2L)(
       emit: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      import vigil.dedup.SpanDedup
-      val spark = batch.sparkSession
-      val docsPath = s"$storedBase/docs"
-      val statsPath = s"$storedBase/spanstats"
-      val have = new java.io.File(s"$docsPath/_SUCCESS").exists()
-      val fresh = (if (have)
-        batch.select(col(idCol), col(textCol))
-          .join(spark.read.parquet(docsPath).select(col("id").as(idCol)),
-            Seq(idCol), "left_anti")
-      else batch.select(col(idCol), col(textCol))).persist()
-      try {
-        if (fresh.count() > 0) {
-          val stats = (if (have)
-            spark.read.parquet(statsPath)
-              .groupBy("h1", "h2").agg(sum(col("cnt")).as("cnt"))
-          else SpanDedup.computeSpanStats(fresh.limit(0), idCol, textCol, L))
-          val out = SpanDedup.scrubRepeatedSpansIncremental(
-            stats, fresh, idCol, textCol, L, minCount)
-            .localCheckpoint(true)
-          val freshStats = SpanDedup.computeSpanStats(fresh, idCol, textCol, L)
-            .localCheckpoint(true)
-          out.write.mode("append").parquet(docsPath)
-          freshStats.write.mode("append").parquet(statsPath)
-          emit(out, batchId)
-          ()
+    microBatches(docs, idCol, textCol, storedBase, "docs", "id") {
+      (fresh, stored, _) =>
+        import vigil.dedup.SpanDedup
+        val stats = stored match {
+          case Some(read) =>
+            read("spanstats").groupBy("h1", "h2").agg(sum(col("cnt")).as("cnt"))
+          case None => SpanDedup.computeSpanStats(fresh.limit(0), idCol, textCol, L)
         }
-      } finally fresh.unpersist()
-    }
+        val out = SpanDedup.scrubRepeatedSpansIncremental(
+          stats, fresh, idCol, textCol, L, minCount)
+        (Seq("docs" -> out,
+          "spanstats" -> SpanDedup.computeSpanStats(fresh, idCol, textCol, L)), out)
+    }(emit)
 
   /** Streaming search-index maintenance — the lexical-retrieval family's
     * micro-batch face: each batch's NEW documents (replay-suppressed by
@@ -517,39 +377,21 @@ object StreamPipeline {
     * stored row is ever read back or rewritten, so a batch costs one
     * narrow tokenize pass + three appends regardless of index size).
     * Serve anytime via [[readSearchIndex]], which re-aggregates the
-    * per-batch stats rows. Batch artifacts are `localCheckpoint`ed
-    * BEFORE the appends (the path-cache refresh trap — see
-    * [[neardupStreamExact]]).
+    * per-batch stats rows.
     */
   def searchIndexStream(
       docs: DataFrame, idCol: String, textCol: String,
       storedBase: String)(
       emit: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      import vigil.search.Search
-      val spark = batch.sparkSession
-      val idsPath = s"$storedBase/ids"
-      val have = new java.io.File(s"$idsPath/_SUCCESS").exists()
-      val fresh = (if (have)
-        batch.select(col(idCol), col(textCol))
-          .join(spark.read.parquet(idsPath), Seq(idCol), "left_anti")
-      else batch.select(col(idCol), col(textCol))).persist()
-      try {
-        if (fresh.count() > 0) {
-          val p = Search.buildPostings(fresh, idCol, textCol)
-            .sortWithinPartitions("term", "doc_id") // row-group term stats
-            .localCheckpoint(true)
-          val st = Search.corpusStats(fresh, idCol, textCol)
-            .localCheckpoint(true)
-          val ids = fresh.select(col(idCol)).localCheckpoint(true)
-          p.write.mode("append").parquet(s"$storedBase/postings")
-          st.write.mode("append").parquet(s"$storedBase/stats")
-          ids.write.mode("append").parquet(idsPath)
-          emit(p, batchId)
-          ()
-        }
-      } finally fresh.unpersist()
-    }
+    microBatches(docs, idCol, textCol, storedBase, "ids", idCol) {
+      (fresh, _, _) =>
+        import vigil.search.Search
+        val postings = Search.buildPostings(fresh, idCol, textCol)
+          .sortWithinPartitions("term", "doc_id") // row-group term stats
+        (Seq("postings" -> postings,
+          "stats" -> Search.corpusStats(fresh, idCol, textCol),
+          "ids" -> fresh.select(col(idCol))), postings)
+    }(emit)
 
   /** Serve-time view of a [[searchIndexStream]] index: the postings scan
     * plus the stats rows folded back to one row (exact long sums — the
@@ -560,16 +402,4 @@ object StreamPipeline {
     spark.read.parquet(s"$storedBase/postings"),
     spark.read.parquet(s"$storedBase/stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
-
-  /** Convenience: start a memory-sink scoring stream (used by tests and
-    * local smoke-runs).
-    */
-  def startMemoryScoring(
-      turns: DataFrame, queryName: String,
-      cfg: Decide.Config = Decide.Default): org.apache.spark.sql.streaming.StreamingQuery =
-    scoreStream(turns, cfg)
-      .select("conv_id", "turn_idx", "contem_pii", "scrubbed_text", "lang",
-        "quality_pass", "toxic", "keep_turn")
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append).start()
 }

@@ -11,10 +11,13 @@ import scala.jdk.CollectionConverters._
   * before the refactor that touched the query, at one core and at four.
   * `pipeline_transcripts` (the flagship) was recorded before the
   * conversation-decision refactor, `q_review_triage_transcripts` before the
-  * per-turn review kernel.
+  * per-turn review kernel, and `q_conv_assembly`, `q_pii_scrub` and
+  * `q_lang_score` before the streaming refactor.
   *
-  * Both queries read no file: `SparkEntry.transcripts` takes its scale from
-  * the directory name alone (sf0.01 → 2,000 Synth conversations).
+  * The transcript queries read no file: `SparkEntry.transcripts` takes its
+  * scale from the directory name alone (sf0.01 → 2,000 Synth
+  * conversations). `q_pii_scrub` and `q_lang_score` read the sf0.01
+  * documents table.
   *
   * The suites share one local[4] SparkContext, and a JVM holds only one, so
   * the local[1] hash comes from a child JVM running [[FlagshipLockSpec.main]]
@@ -59,11 +62,23 @@ object FlagshipLockSpec {
   val PipelineTranscripts = "4256:238196791668216167642"
   /** `rows:sum of xxhash64` of `q_review_triage_transcripts` at sf0.01. */
   val ReviewTriageTranscripts = "331:21941937658985251946"
+  /** `rows:sum of xxhash64` of `q_conv_assembly` at sf0.01. */
+  val ConvAssembly = "2000:-153581073347702666747"
+  /** `rows:sum of xxhash64` of `q_pii_scrub` at sf0.01. */
+  val PiiScrub = "500:13563538109353928269"
+  /** `rows:sum of xxhash64` of `q_lang_score` at sf0.01. */
+  val LangScore = "500:115193367542508361719"
+
+  /** The sf0.01 test-data directory the locked queries run over. */
+  val SfDir = "/root/testdata/sf0.01"
 
   /** The locked queries and their hashes, in test order. */
   val Locked: Seq[(String, String)] = Seq(
     "pipeline_transcripts" -> PipelineTranscripts,
-    "q_review_triage_transcripts" -> ReviewTriageTranscripts)
+    "q_review_triage_transcripts" -> ReviewTriageTranscripts,
+    "q_conv_assembly" -> ConvAssembly,
+    "q_pii_scrub" -> PiiScrub,
+    "q_lang_score" -> LangScore)
 
   private val Prefix = "row hash: "
 
@@ -75,7 +90,7 @@ object FlagshipLockSpec {
     .getOrCreate()
 
   def hash(spark: SparkSession, query: String): String =
-    rowHash(SparkEntry.queries(query)(spark, "sf0.01"))
+    rowHash(SparkEntry.queries(query)(spark, SfDir))
 
   /** Row count and the sum of each row's xxhash64 over its columns in name
     * order, doubles rounded to float first so that neither summation order

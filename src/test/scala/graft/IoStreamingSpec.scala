@@ -1,9 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 import vigil.{Decide, Review, SaltedDecide, Synth}
 import vigil.io.{Sinks, Sources}
@@ -21,6 +21,29 @@ class IoStreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val cfg = Decide.Default.copy(targetLang = "pt")
+
+  /** Horizons longer than any fixture's event-time span: no turn falls
+    * below the watermark and no conversation is evicted, so the last update
+    * per conversation decides all of its turns. */
+  private val LongWatermark = "36500 days"
+  private val LongIdleGapMs = 36500L * 24 * 3600 * 1000
+
+  /** A memory-sink scoring stream of `turns` under `queryName`. */
+  private def startMemoryScoring(turns: DataFrame, queryName: String): StreamingQuery =
+    Decide.scoreTurns(turns, cfg)
+      .select("conv_id", "turn_idx", "contem_pii", "scrubbed_text", "lang",
+        "quality_pass", "toxic", "keep_turn")
+      .writeStream.format("memory").queryName(queryName)
+      .outputMode(OutputMode.Append).start()
+
+  /** The last update per conversation of a [[StreamPipeline.convDecisionsStream]]
+    * output: n_turns only grows while a conversation's state lives. */
+  private def lastDecisions(updates: DataFrame): DataFrame =
+    updates.groupBy("conv_id")
+      .agg(max(struct(col("n_turns"), col("majority_lang"),
+        col("pii_density"), col("drop_conversation"))).as("l"))
+      .select(col("conv_id"), col("l.n_turns"), col("l.majority_lang"),
+        col("l.pii_density"), col("l.drop_conversation"))
 
   /** Minimal real xlsx (zip of XML) — what openpyxl/Excel emit, reduced to
     * the entries the reader touches plus a content-types decoy it must
@@ -251,7 +274,7 @@ class IoStreamingSpec extends AnyFunSuite {
       .schema(corpus.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
-    val q = StreamPipeline.startMemoryScoring(stream, "scored_stream", cfg)
+    val q = startMemoryScoring(stream, "scored_stream")
     q.processAllAvailable()
     q.stop()
     val streamed = spark.table("scored_stream")
@@ -264,18 +287,17 @@ class IoStreamingSpec extends AnyFunSuite {
 
     // stateful conversation decisions over the same stream
     val q2 = StreamPipeline
-      .convDecisionsStream(StreamPipeline.scoreStream(stream, cfg), cfg)
+      .convDecisionsStream(Decide.scoreTurns(stream, cfg), cfg,
+        LongWatermark, LongIdleGapMs)
       .writeStream.format("memory").queryName("conv_stream")
       .outputMode(OutputMode.Update).start()
     q2.processAllAvailable()
     q2.stop()
-    val convStream = spark.table("conv_stream")
-      .groupBy("conv_id")
-      .agg(max(struct(col("n_turns"), col("drop_conversation"))).as("last"))
-      .select(col("conv_id"), col("last.n_turns"),
-        col("last.drop_conversation"))
+    val convStream = lastDecisions(spark.table("conv_stream"))
     val convBatch = SaltedDecide.convDecisions(Decide.scoreTurns(corpus, cfg), cfg)
-      .select("conv_id", "n_turns", "drop_conversation")
+      .select("conv_id", "n_turns", "majority_lang", "pii_density",
+        "drop_conversation")
+    assert(convStream.count() == convBatch.count())
     assert(convStream.except(convBatch).isEmpty &&
       convBatch.except(convStream).isEmpty,
       "final streamed conversation decisions must equal the batch decisions")
@@ -305,7 +327,7 @@ class IoStreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val q = StreamPipeline
-      .piiRateWindows(StreamPipeline.scoreStream(stream, cfg))
+      .piiRateWindows(Decide.scoreTurns(stream, cfg))
       .writeStream.format("memory").queryName("wm_windows")
       .outputMode(OutputMode.Append).start()
     q.processAllAvailable()
@@ -350,13 +372,14 @@ class IoStreamingSpec extends AnyFunSuite {
 
     def startQuery() = StreamPipeline
       .convDecisionsStream(
-        StreamPipeline.scoreStream(
+        Decide.scoreTurns(
           spark.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", "2").parquet(srcDir), cfg), cfg)
+            .option("maxFilesPerTrigger", "2").parquet(srcDir), cfg), cfg,
+        LongWatermark, LongIdleGapMs)
       .writeStream
       // foreachBatch parquet-append: a fault-tolerant sink (memory sink
       // cannot recover), so the query restarts from the checkpoint
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[StreamPipeline.ConvUpdate], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.write.mode("append").parquet(outDir); ()
       }
       .option("checkpointLocation", ckptDir)
@@ -374,12 +397,7 @@ class IoStreamingSpec extends AnyFunSuite {
     // last update per conversation must reflect ALL turns — if state were
     // lost on restart, n_turns for continued conversations would count
     // only the post-restart half
-    val last = spark.read.parquet(outDir)
-      .groupBy("conv_id")
-      .agg(max(struct(col("n_turns"), col("majority_lang"),
-        col("pii_density"), col("drop_conversation"))).as("l"))
-      .select(col("conv_id"), col("l.n_turns"), col("l.majority_lang"),
-        col("l.pii_density"), col("l.drop_conversation"))
+    val last = lastDecisions(spark.read.parquet(outDir))
     val batch = SaltedDecide.convDecisions(Decide.scoreTurns(corpus, cfg), cfg)
       .select("conv_id", "n_turns", "majority_lang", "pii_density",
         "drop_conversation")
@@ -404,7 +422,7 @@ class IoStreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val q = StreamPipeline
-      .convDecisionsStreamEvicting(StreamPipeline.scoreStream(stream, cfg), cfg,
+      .convDecisionsStream(Decide.scoreTurns(stream, cfg), cfg,
         watermarkDelay = "10 minutes", idleGapMs = 30L * 60 * 1000)
       .writeStream.format("memory").queryName("evict_stream")
       .outputMode(OutputMode.Update).start()
@@ -466,193 +484,70 @@ class IoStreamingSpec extends AnyFunSuite {
       s"each key must be emitted exactly once within the horizon, got $ids")
   }
 
-  test("streaming near-dup: signature-equal re-posts within the horizon dedupe like batch") {
-    val srcDir = Files.createTempDirectory("vigil_snd_src").toString
-    def turn(id: Int, ts: String, text: String) =
-      vigil.Turn("c", id, "user", text, "", java.sql.Timestamp.valueOf(ts))
-    def write(rows: Seq[vigil.Turn]): Unit = {
-      import spark.implicits._
-      rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
-    }
-    // doc 3 and doc 5 are word-reordered re-posts of doc 1: at shingleK=1
-    // the shingle SET is identical, so the full MinHash signature matches
-    // even though the raw text differs (exact dedupStream would keep them)
-    val all = Seq(
-      Seq(turn(1, "2026-01-01 10:00:00", "solicito os prazos do processo"),
-        turn(2, "2026-01-01 10:00:10", "outra coisa totalmente diferente")),
-      Seq(turn(3, "2026-01-01 10:01:00", "processo do prazos os solicito"),
-        turn(4, "2026-01-01 10:01:10", "um texto novo e distinto")),
-      Seq(turn(5, "2026-01-01 10:02:00", "os prazos do processo solicito")))
-    write(all.head)
+  // planted J ∈ [0.9, 1): B replaces 2 of A's 40 distinct words →
+  // token-set J = 38/42 ≈ 0.905 — above the batch drop threshold 0.9
+  // but NOT signature-equal, the exact r4-verdict gap band
+  private val aWords = (1 to 40).map(i => s"word$i")
+  private val bWords = aWords.dropRight(2) ++ Seq("fresh", "tokens")
+  private def gapTurn(id: Int, ts: String, text: String) =
+    vigil.Turn("c", id, "user", text, "", java.sql.Timestamp.valueOf(ts))
+  /** Two micro-batches: A and an unrelated doc, then B and another. */
+  private val gapBatches = Seq(
+    Seq(gapTurn(1, "2026-01-01 10:00:00", aWords.mkString(" ")),
+      gapTurn(2, "2026-01-01 10:00:10", "totally different other content")),
+    Seq(gapTurn(3, "2026-01-01 10:01:00", bWords.mkString(" ")),
+      gapTurn(4, "2026-01-01 10:01:10", "yet more unrelated material here")))
 
-    val schema = { import spark.implicits._; all.head.toDF().schema }
+  /** Streams `batches` through the query `mk` starts, one file and one
+    * micro-batch each. */
+  private def runStream(mk: DataFrame => StreamingQuery,
+      batches: Seq[Seq[vigil.Turn]]): Unit = {
+    val srcDir = Files.createTempDirectory("vigil_gap_src").toString
+    def write(rows: Seq[vigil.Turn]): Unit =
+      rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
+    write(batches.head)
+    val schema = batches.head.toDF().schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = StreamPipeline
-      .neardupStream(stream, "text", watermarkDelay = "10 minutes",
-        shingleK = 1)
-      .writeStream.format("memory").queryName("snd_stream")
-      .outputMode(OutputMode.Append).start()
+    val q = mk(stream)
     q.processAllAvailable()
-    all.tail.foreach { b => write(b); q.processAllAvailable() }
+    batches.tail.foreach { b => write(b); q.processAllAvailable() }
     q.stop()
-
-    val got = spark.table("snd_stream")
-      .select("turn_idx").collect().map(_.getInt(0)).toSeq.sorted
-    // batch equivalence: one survivor per signature group of the union,
-    // first arrival winning — exactly {1, 2, 4}
-    val sigsPerDoc = {
-      import spark.implicits._
-      vigil.dedup.Dedup.computeSignatures(
-        all.flatten.toDF(), "text", "turn_idx",
-        bands = 16, rowsPerBand = 8, shingleK = 1)
-        .collect().map(r => r.getInt(0).toLong -> r.getSeq[Long](2)).toMap
-    }
-    val expected = all.flatten.map(_.turn_idx)
-      .groupBy(id => sigsPerDoc(id.toLong)).values.map(_.min).toSeq.sorted
-    assert(got == expected && got == Seq(1, 2, 4),
-      s"streamed survivors $got must equal batch one-per-signature $expected")
-    // the output schema is the input schema unchanged (up to the engine's
-    // watermark metadata on ts and source nullability)
-    assert(spark.table("snd_stream").schema.map(f => (f.name, f.dataType)) ==
-      schema.map(f => (f.name, f.dataType)))
   }
 
-  test("streaming doc filter: stateless cascade + signature suppression match the batch filter's kept set") {
-    val srcDir = Files.createTempDirectory("vigil_sdf_src").toString
-    val keeper =
-      "the quick brown fox jumps over a lazy dog while the sun rises in " +
-      "the east and workers walk to the office for another busy day of " +
-      "work as the city wakes up and birds sing in the old green park"
-    val keeper2 =
-      "a group of young students reads many books in the big city library " +
-      "and the teacher shows hard ideas with simple clear examples so " +
-      "that all of them can learn more every single day of the school year"
-    // rotate keeper's words by 9: token SET identical (signature-equal at
-    // shingleK = 1) but every adjacent pair is new — passes the stateless
-    // cascade, so only suppression can remove it
-    val keeperWords = keeper.split(" ")
-    val reordered = (keeperWords.drop(9) ++ keeperWords.take(9)).mkString(" ")
-    val toxWord = vigil.Toxicity.Lexicon.head
-
-    def doc(id: Int, ts: String, text: String) =
-      vigil.Turn("c", id, "user", text, "", java.sql.Timestamp.valueOf(ts))
-    def write(rows: Seq[vigil.Turn]): Unit = {
-      import spark.implicits._
-      rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
-    }
-    val all = Seq(
-      Seq(
-        doc(1, "2026-01-01 10:00:00", keeper),
-        doc(2, "2026-01-01 10:00:05", "Solicito acesso aos documentos " +
-          "referentes ao processo da obra na quadra norte conforme " +
-          "previsto pela lei de transparência"),
-        doc(3, "2026-01-01 10:00:10", "the cost is $$$ and the code has " +
-          "### marks with !!! and %%% plus @@@ everywhere in the file " +
-          "$$$ ### !!! %%% @@@ &&& *** ^^^")),
-      Seq(
-        doc(4, "2026-01-01 10:01:00", "the cat sat near the cat and then " +
-          "the cat chased the cat while another the cat watched birds " +
-          "trees rivers mountains valleys clouds stars oceans deserts " +
-          "forests meadows"),
-        doc(5, "2026-01-01 10:01:05", s"$keeper you $toxWord again this " +
-          "very morning"),
-        doc(6, "2026-01-01 10:01:10", keeper)), // exact re-post of 1
-      Seq(
-        doc(7, "2026-01-01 10:02:00", reordered), // sig-equal re-post of 1
-        doc(8, "2026-01-01 10:02:05", keeper2)))
-    write(all.head)
-
-    val schema = { import spark.implicits._; all.head.toDF().schema }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = StreamPipeline.docFilterStream(stream)
-      .writeStream.format("memory").queryName("sdf_stream")
-      .outputMode(OutputMode.Append).start()
-    q.processAllAvailable()
-    all.tail.foreach { b => write(b); q.processAllAvailable() }
-    q.stop()
-
-    val kept = spark.table("sdf_stream")
-      .select("turn_idx").collect().map(_.getInt(0)).toSeq.sorted
-    assert(kept == Seq(1, 8), s"streamed kept set: $kept")
-
-    // batch equivalence on the union: filterDocs keeps exactly the same
-    // ids (smallest-id survivor aligns with first arrival here; the
-    // reordered re-post has token-set Jaccard 1 ≥ 0.9 so the batch
-    // near-dup verifier drops it too)
-    val union = { import spark.implicits._; all.flatten.toDF() }
-    val batchKept = vigil.DocFilter
-      .filterDocs(union, "turn_idx", "text")
-      .filter(col("keep")).select("turn_idx")
-      .collect().map(_.getInt(0)).toSeq.sorted
-    assert(batchKept == kept,
-      s"batch kept $batchKept must equal streamed kept $kept")
-  }
-
-  test("streaming near-dup gap quantified: J∈[0.9,1) survives sig-equality but not the exact face") {
-    // planted J ∈ [0.9, 1): B replaces 2 of A's 40 distinct words →
-    // token-set J = 38/42 ≈ 0.905 — above the batch drop threshold 0.9
-    // but NOT signature-equal, the exact r4-verdict gap band
-    val aWords = (1 to 40).map(i => s"word$i")
-    val bWords = aWords.dropRight(2) ++ Seq("fresh", "tokens")
-    val jAB = {
-      val (sa, sb) = (aWords.toSet, bWords.toSet)
-      sa.intersect(sb).size.toDouble / sa.union(sb).size
-    }
-    assert(jAB >= 0.9 && jAB < 1.0, s"planted J must be in [0.9,1): $jAB")
-    def turn(id: Int, ts: String, text: String) =
-      vigil.Turn("c", id, "user", text, "", java.sql.Timestamp.valueOf(ts))
-    val all = Seq(
-      Seq(turn(1, "2026-01-01 10:00:00", aWords.mkString(" ")),
-        turn(2, "2026-01-01 10:00:10", "totally different other content")),
-      Seq(turn(3, "2026-01-01 10:01:00", bWords.mkString(" ")),
-        turn(4, "2026-01-01 10:01:10", "yet more unrelated material here")))
-    // the gap is real: the signatures of A and B differ, so the per-row
-    // sig-equality rung cannot suppress B
-    val sigs = vigil.dedup.Dedup.computeSignatures(
-      all.flatten.toDF(), "text", "turn_idx",
-      bands = 24, rowsPerBand = 6, shingleK = 1)
-      .collect().map(r => r.getInt(0) -> r.getSeq[Long](2)).toMap
-    assert(sigs(1) != sigs(3), "planted pair must NOT be signature-equal")
-
-    def runStream(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.streaming.StreamingQuery,
-        batches: Seq[Seq[vigil.Turn]]): Unit = {
-      val srcDir = Files.createTempDirectory("vigil_gap_src").toString
-      def write(rows: Seq[vigil.Turn]): Unit =
-        rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
-      write(batches.head)
-      val schema = batches.head.toDF().schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = mk(stream)
-      q.processAllAvailable()
-      batches.tail.foreach { b => write(b); q.processAllAvailable() }
-      q.stop()
-    }
-
-    // rung 1 (per-row latency, sig equality): doc 3 SURVIVES — the gap
-    runStream(s => StreamPipeline
-      .neardupStream(s, "text", watermarkDelay = "10 minutes", shingleK = 1)
-      .writeStream.format("memory").queryName("gap_sig")
-      .outputMode(OutputMode.Append).start(), all)
-    val sigKept = spark.table("gap_sig")
-      .select("turn_idx").collect().map(_.getInt(0)).toSeq.sorted
-    assert(sigKept == Seq(1, 2, 3, 4),
-      s"sig-equality rung must pass the J=$jAB re-post: $sigKept")
-
-    // rung 2 (exact micro-batch face): doc 3 dropped at J ≥ 0.9, and a
-    // replayed batch emits nothing (id anti-join vs the stored corpus)
-    val base = Files.createTempDirectory("vigil_gap_store").toString
+  /** The ids the exact near-dup face emits over the gap batches, the
+    * second one replayed, with its stored tables under `base`. */
+  private def neardupExactKept(base: String): Seq[Int] = {
     val buf = scala.collection.mutable.ArrayBuffer[Int]()
     runStream(s => StreamPipeline
       .neardupStreamExact(s, "text", "turn_idx", base)(
         (kept, _) => buf.synchronized {
           buf ++= kept.select("turn_idx").collect().map(_.getInt(0))
-        }).start(), all :+ all.last)
-    assert(buf.sorted == Seq(1, 2, 4),
+        }).start(), gapBatches :+ gapBatches.last)
+    buf.sorted.toSeq
+  }
+
+  test("streaming near-dup gap quantified: J∈[0.9,1) survives sig-equality but not the exact face") {
+    val jAB = {
+      val (sa, sb) = (aWords.toSet, bWords.toSet)
+      sa.intersect(sb).size.toDouble / sa.union(sb).size
+    }
+    assert(jAB >= 0.9 && jAB < 1.0, s"planted J must be in [0.9,1): $jAB")
+    // the gap is real: the signatures of A and B differ, so suppression
+    // keyed on signature equality cannot drop B
+    val sigs = vigil.dedup.Dedup.computeSignatures(
+      gapBatches.flatten.toDF(), "text", "turn_idx",
+      bands = 24, rowsPerBand = 6, shingleK = 1)
+      .collect().map(r => r.getInt(0) -> r.getSeq[Long](2)).toMap
+    assert(sigs(1) != sigs(3), "planted pair must NOT be signature-equal")
+
+    // the exact micro-batch face: doc 3 dropped at J ≥ 0.9, and a
+    // replayed batch emits nothing (id anti-join vs the stored corpus)
+    val base = Files.createTempDirectory("vigil_gap_store").toString
+    val kept = neardupExactKept(base)
+    assert(kept == Seq(1, 2, 4),
       s"exact face must drop the J=$jAB re-post and ignore the replay: " +
-        buf.sorted.mkString(","))
+        kept.mkString(","))
     // stored corpus = exactly the kept set (the batch family's tables)
     val stored = spark.read.parquet(s"$base/corpus")
       .select("turn_idx").collect().map(_.getInt(0)).toSeq.sorted
@@ -662,6 +557,16 @@ class IoStreamingSpec extends AnyFunSuite {
     val storedSigs = spark.read.parquet(s"$base/sigs")
       .select("id").collect().map(_.getInt(0)).toSeq.sorted
     assert(storedSigs == Seq(1, 2, 4), s"stored sigs: $storedSigs")
+  }
+
+  test("exact near-dup face finds its stored state under a file: URI base") {
+    // a `file:` URI names no local path, so stored state must be found
+    // through the path's FileSystem; missing it, every batch would run as
+    // the first one — the re-post and the replay would both be kept
+    val base = Files.createTempDirectory("vigil_gap_uri").toUri.toString
+    assert(base.startsWith("file:"), base)
+    val kept = neardupExactKept(base)
+    assert(kept == Seq(1, 2, 4), s"kept under $base: ${kept.mkString(",")}")
   }
 
   test("exact streaming doc filter: audit frame per batch equals the batch cascade on the union") {

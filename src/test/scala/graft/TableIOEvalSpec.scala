@@ -66,7 +66,7 @@ class TableIOEvalSpec extends AnyFunSuite {
     val n1 = TableIO.writeScored(spark, scored, dir, snapshotId = "snap-1",
       nBuckets = 8, cfg = cfg)
     assert(n1 > 0)
-    val total = TableIO.readScored(spark, dir).count()
+    val total = TableIO.readScored(spark, dir, "snap-1").count()
     assert(total == scored.count())
     val lin = TableIO.lineage(spark, dir).get
     assert(lin.count() == n1)
@@ -80,7 +80,7 @@ class TableIOEvalSpec extends AnyFunSuite {
     val n2 = TableIO.writeScored(spark, scored, dir, snapshotId = "snap-1",
       nBuckets = 8, cfg = cfg)
     assert(n2 == 0, "second run with identical snapshot must skip all buckets")
-    assert(TableIO.readScored(spark, dir).count() == total, "no duplicate rows")
+    assert(TableIO.readScored(spark, dir, "snap-1").count() == total, "no duplicate rows")
 
     // a new snapshot processes again (append semantics per snapshot)
     val n3 = TableIO.writeScored(spark, scored, dir, snapshotId = "snap-2",
@@ -114,7 +114,7 @@ class TableIOEvalSpec extends AnyFunSuite {
     // resume with the FULL input: already-done buckets must be skipped
     val nRest = TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8, cfg = cfg)
     assert(nRest > 0)
-    assert(TableIO.readScored(spark, dir).count() == scored.count(),
+    assert(TableIO.readScored(spark, dir, "snap-1").count() == scored.count(),
       "after resume the table holds exactly one copy of every turn")
     assert(lineageOf(dir, "snap-1") == expected)
     val pre = TableIO.lineage(spark, dir).get.filter(col("input_snapshot_id") === "snap-0")
@@ -182,7 +182,7 @@ class TableIOEvalSpec extends AnyFunSuite {
       assert(files == i + 1, s"after call $i: $files lineage files")
     }
     assert(TableIO.lineage(spark, dir).get.count() ==
-      TableIO.readScored(spark, dir).select("snapshot", "bucket").distinct().count())
+      spark.read.parquet(s"$dir/data").select("snapshot", "bucket").distinct().count())
   }
 
   test("Pipeline.run reads every source turn exactly once") {
@@ -265,7 +265,7 @@ class TableIOEvalSpec extends AnyFunSuite {
     val cfg = Decide.Default.copy(targetLang = "pt")
     val scored = Decide.scoreTurns(Synth.corpusDF(spark, 60), cfg)
     TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8, cfg = cfg)
-    val total = TableIO.readScored(spark, dir).count()
+    val total = TableIO.readScored(spark, dir, "snap-1").count()
     // simulate a crash between the data commit and the lineage append:
     // the data is on disk but no lineage row records it
     val linPath = new org.apache.hadoop.fs.Path(s"$dir/_lineage")
@@ -274,36 +274,13 @@ class TableIOEvalSpec extends AnyFunSuite {
     // resume recomputes the "unfinished" buckets; dynamic partition
     // overwrite must REPLACE the orphan data (append would double it)
     TableIO.writeScored(spark, scored, dir, "snap-1", nBuckets = 8, cfg = cfg)
-    assert(TableIO.readScored(spark, dir).count() == total,
+    assert(TableIO.readScored(spark, dir, "snap-1").count() == total,
       "orphan bucket data must not be duplicated on resume")
     // and a different snapshot must NOT clobber snap-1's partitions
     TableIO.writeScored(spark, scored, dir, "snap-2", nBuckets = 8, cfg = cfg)
-    assert(TableIO.readScored(spark, dir).count() == 2 * total,
+    assert(spark.read.parquet(s"$dir/data").count() == 2 * total,
       "a new snapshot lands in its own partitions")
-    assert(TableIO.readScored(spark, dir)
-      .filter(col("snapshot") === "snap-1").count() == total)
-  }
-
-  test("bucketed scored table: conv-keyed aggregation plans without a shuffle") {
-    val scored = Decide.scoreTurns(
-      Synth.corpusDF(spark, 40), Decide.Default.copy(targetLang = "pt"))
-    TableIO.writeScoredBucketedTable(scored, "scored_bucketed", nBuckets = 4)
-    try {
-      val agg = spark.table("scored_bucketed")
-        .groupBy("conv_id")
-        .agg(count(lit(1)).as("n"), sum(col("contem_pii").cast("long")).as("p"))
-      val plan = agg.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed aggregation must not shuffle:\n$plan")
-      // and the numbers are right
-      val viaBucket = agg.orderBy("conv_id").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val direct = scored.groupBy("conv_id")
-        .agg(count(lit(1)).as("n"), sum(col("contem_pii").cast("long")).as("p"))
-        .orderBy("conv_id").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      assert(viaBucket.toSeq == direct.toSeq)
-    } finally spark.sql("DROP TABLE IF EXISTS scored_bucketed")
+    assert(TableIO.readScored(spark, dir, "snap-1").count() == total)
   }
 
   test("rule version hash is stable and sensitive") {
