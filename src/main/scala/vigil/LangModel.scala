@@ -11,9 +11,12 @@ import scala.collection.mutable
   * Joulin et al. 2016 "Bag of Tricks"; CCNet, Wenzek et al. 2019, uses the
   * same langid-then-LM-perplexity recipe). Weights are derived
   * deterministically at class-init from small seed corpora embedded below —
-  * no external data, no files, no wall-clock. The whole model is a few
-  * hundred KB of primitive hash maps; it is JVM-static, so at cluster scale
-  * each executor pays one classload, with zero broadcast or shuffle traffic.
+  * no external data, no files, no wall-clock. Scoring holds one
+  * open-addressing table of every trigram either model knows (its 5
+  * language log-probs and its LM ln p: one probe per trigram) plus the LM's
+  * bigram and unigram counts for the backoff of unseen trigrams; a few
+  * hundred KB, JVM-static, so at cluster scale each executor pays one
+  * classload, with zero broadcast or shuffle traffic.
   *
   * Perplexity: order-3 char LM with stupid backoff (Brants et al. 2007)
   * trained on the en+pt seed text (the pipeline's "target" distribution);
@@ -82,7 +85,7 @@ object LangModel {
     () => new java.lang.StringBuilder(256))
 
   /** Returns a thread-confined buffer — consume before the next call. */
-  private def normForNgrams(text: String): CharSequence = {
+  private[vigil] def normForNgrams(text: String): CharSequence = {
     val capped =
       if (text.length <= 3000) text
       else text.substring(0, 1500) + " " + text.substring(text.length - 1500)
@@ -103,7 +106,7 @@ object LangModel {
   }
 
   /** Pack a char trigram into a Long key (chars are BMP after lowercase). */
-  @inline private def key3(a: Char, b: Char, c: Char): Long =
+  @inline private[vigil] def key3(a: Char, b: Char, c: Char): Long =
     (a.toLong << 32) | (b.toLong << 16) | c.toLong
   @inline private def key2(a: Char, b: Char): Long = (a.toLong << 16) | b.toLong
 
@@ -118,11 +121,11 @@ object LangModel {
     m
   }
 
-  // --- language ID model: per-lang log P(trigram | lang), add-k smoothed.
-  // Stored as ONE LongMap[Array[Double]] (trigram → 5 log-probs) so the
-  // scoring loop does a single hash probe per trigram instead of five —
-  // this is the profiled hot path.
-  private val (langLogProb, langLogUnk) = {
+  /** Language ID model: per-lang log P(trigram | lang), add-k smoothed, as
+    * (trigram → 5 log-probs, the 5 log-probs of an unseen trigram). Built
+    * once into the scoring table; specs rebuild it to check that table.
+    */
+  private[vigil] def langTables(): (mutable.LongMap[Array[Double]], Array[Double]) = {
     val unk = new Array[Double](Langs.length)
     val k = 0.5
     val perLang = Array.tabulate(Langs.length) { li =>
@@ -146,8 +149,11 @@ object LangModel {
     (combined, unk)
   }
 
-  // --- perplexity LM: stupid-backoff char trigram LM on en+pt seed -------
-  private val (lmTri, lmBi, lmUni, lmUniform) = {
+  /** Perplexity LM: stupid-backoff char trigram LM on the en+pt seed, as
+    * (trigram, bigram and unigram counts, uniform probability).
+    */
+  private[vigil] def lmCounts()
+      : (mutable.LongMap[Int], mutable.LongMap[Int], mutable.LongMap[Int], Double) = {
     val norm = normForNgrams(seeds("en")).toString + normForNgrams(seeds("pt")).toString
     val tri = mutable.LongMap.empty[Int]
     val bi = mutable.LongMap.empty[Int]
@@ -166,22 +172,81 @@ object LangModel {
     }
     (tri, bi, uni, 1.0 / (uni.size + 1))
   }
-  private val lmUniTotal: Double = lmUni.values.sum.toDouble
-  private val Backoff = 0.4
+  private[vigil] val Backoff = 0.4
 
-  /** ln p(c | a, b) with stupid backoff. */
-  @inline private def lnProb(a: Char, b: Char, c: Char): Double = {
-    val biAB = lmBi.getOrElse(key2(a, b), 0)
-    if (biAB > 0) {
-      val t = lmTri.getOrElse(key3(a, b, c), 0)
-      if (t > 0) return math.log(t.toDouble / biAB)
-    }
+  // the LM's bigram and unigram levels, which score trigrams the LM has
+  // not seen
+  private val (lmBi, lmUni, lmUniform, lmUniTotal) = {
+    val (_, bi, uni, uniform) = lmCounts()
+    (bi, uni, uniform, uni.values.sum.toDouble)
+  }
+
+  /** ln p(c | a, b) for a trigram the LM has not seen: stupid backoff to
+    * the bigram (b, c), then the unigram c, then uniform.
+    */
+  private def lnBackoff(b: Char, c: Char): Double = {
     val biBC = lmBi.getOrElse(key2(b, c), 0)
     val uniB = lmUni.getOrElse(b.toLong, 0)
     if (uniB > 0 && biBC > 0) return math.log(Backoff * biBC / uniB)
     val uniC = lmUni.getOrElse(c.toLong, 0)
     if (uniC > 0) return math.log(Backoff * Backoff * uniC / lmUniTotal)
     math.log(Backoff * Backoff * lmUniform)
+  }
+
+  /** Every trigram either model knows, in one open-addressing table: its
+    * 5 language log-probs and its LM ln p (the same double expressions the
+    * stupid backoff evaluates), so scoring probes once per trigram. Slot
+    * `s` holds key `tableKeys(s)` (0 = empty: no trigram key is 0, since
+    * every char of a normalized text is a space or a letter) and values
+    * `tableVals(s * Width until (s + 1) * Width)`, ln p last.
+    */
+  private val Width = Langs.length + 1
+  private val (tableKeys, tableVals, langUnk) = {
+    val (lang, unk) = langTables()
+    val (tri, bi, _, _) = lmCounts()
+    val all = (lang.keySet ++ tri.keySet).toArray.sorted
+    var cap = 16
+    while (cap < all.length * 2) cap <<= 1
+    val ks = new Array[Long](cap)
+    val vs = new Array[Double](cap * Width)
+    all.foreach { g =>
+      var s = slot(g, cap - 1)
+      while (ks(s) != 0L) s = (s + 1) & (cap - 1)
+      ks(s) = g
+      System.arraycopy(lang.getOrElse(g, unk), 0, vs, s * Width, Langs.length)
+      val (a, b, c) = ((g >>> 32).toChar, (g >>> 16).toChar, g.toChar)
+      val t = tri.getOrElse(g, 0)
+      vs(s * Width + Langs.length) =
+        if (t > 0) math.log(t.toDouble / bi(key2(a, b))) else lnBackoff(b, c)
+    }
+    (ks, vs, unk)
+  }
+  private val tableMask = tableKeys.length - 1
+
+  @inline private def slot(g: Long, mask: Int): Int = {
+    val h = g * 0x9E3779B97F4A7C15L
+    (h ^ (h >>> 32)).toInt & mask
+  }
+
+  /** Adds trigram (a, b, c)'s 5 language log-probs into `scores` and
+    * returns its LM ln p: one table probe, and for a trigram neither model
+    * has seen, the unseen log-probs and [[lnBackoff]].
+    */
+  private[vigil] def addTrigram(a: Char, b: Char, c: Char,
+      scores: Array[Double]): Double = {
+    val g = key3(a, b, c)
+    var s = slot(g, tableMask)
+    var k = tableKeys(s)
+    while (k != g && k != 0L) { s = (s + 1) & tableMask; k = tableKeys(s) }
+    var li = 0
+    if (k != 0L) {
+      val at = s * Width
+      while (li < Langs.length) { scores(li) += tableVals(at + li); li += 1 }
+      tableVals(at + Langs.length)
+    } else {
+      while (li < Langs.length) { scores(li) += langUnk(li); li += 1 }
+      lnBackoff(b, c)
+    }
   }
 
   /** (lang, confidence, perplexity) in one trigram pass.
@@ -196,15 +261,7 @@ object LangModel {
     var lnSum = 0.0
     var i = 0
     while (i + 2 < norm.length) {
-      val a = norm.charAt(i); val b = norm.charAt(i + 1); val c = norm.charAt(i + 2)
-      val g = key3(a, b, c)
-      val arr = langLogProb.getOrElse(g, langLogUnk)
-      var li = 0
-      while (li < Langs.length) {
-        scores(li) += arr(li)
-        li += 1
-      }
-      lnSum += lnProb(a, b, c)
+      lnSum += addTrigram(norm.charAt(i), norm.charAt(i + 1), norm.charAt(i + 2), scores)
       i += 1
     }
     var best = 0

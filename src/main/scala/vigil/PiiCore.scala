@@ -23,7 +23,8 @@ import scala.collection.mutable
   *   - a count of `\d` code points (`Character.isDigit(int)`, exactly the
   *     `\d` of `UNICODE_CHARACTER_CLASS`): CPF ≥ 11, phone ≥ 10, card ≥ 13,
   *     SSN ≥ 9, the `\d` each pattern's shortest match holds;
-  *   - a keyword every match contains, tested case-folded. Under
+  *   - a keyword every match contains, tested case-folded; the same pass
+  *     finds all of them at once, by first char, into a bit mask. Under
   *     `CASE_INSENSITIVE|UNICODE_CASE` U+0130/U+0131 match `i`, U+017F
   *     matches `s` and U+212A matches `k`, which a lowercase substring test
   *     misses; a text holding one of them opens every keyword gate.
@@ -138,52 +139,70 @@ object PiiCore {
     words >= 2 && words <= 6 && !Exclusions.isInstitutional(n)
   }
 
-  /** ASCII-case-folded substring scan: `text.toLowerCase.contains(kw)`
-    * without materializing the lowercase copy, SOUND ONLY when `text` is
-    * pure ASCII (for ASCII, Locale.ROOT toLowerCase is exactly the
-    * A-Z → a-z fold; non-ASCII chars can case-fold INTO ascii — e.g.
-    * U+212A KELVIN → 'k' — so non-ASCII texts must take the real
-    * toLowerCase path). Keywords are lowercase by construction; a keyword
-    * with a non-ASCII char (e.g. "nome é") can never occur in an
-    * all-ASCII text.
+  /** Every keyword a [[PreScan]] gate tests, lowercase; bit `k` of a
+    * scan's keyword mask stands for `Keywords(k)`. Each starts with an
+    * ASCII letter.
     */
-  def asciiFoldedContains(text: String, kw: String): Boolean = {
-    val n = text.length
+  private[vigil] val Keywords: Array[String] = Array(
+    "fone", "tel", "cel", "contato", "what", "zap", "whats",
+    "meu", "nome", "chamo", "cpf", "portador", "cidad", "requerente",
+    "solicitante", "servidor", "funcion", "rg", "sk-", "akia", "ghp_", "xox",
+    "minha", "sou ", "nome é", "moro", "resid", "rua", "avenida", "quadra",
+    "conjunto", "bloco", "lote", "apartamento", "apt", "cep")
+  require(Keywords.length <= 64 && Keywords.distinct.length == Keywords.length)
+
+  private def kwMask(kws: String*): Long = kws.foldLeft(0L) { (m, kw) =>
+    val k = Keywords.indexOf(kw)
+    require(k >= 0, s"not a PreScan keyword: $kw")
+    m | (1L << k)
+  }
+  /** Keyword indices by first char, for the ASCII chars that start one. */
+  private val KeywordsByFirst: Array[Array[Int]] = Array.tabulate(128) { c =>
+    Keywords.indices.filter(k => Keywords(k).charAt(0) == c).toArray
+  }
+  // the gates' keyword sets: any one of them opens the gate
+  private val PhoneContextKw = kwMask("fone", "tel", "cel", "contato", "what", "zap")
+  private val MeuNomeKw = kwMask("meu", "nome")
+  private val NameKw: Array[Long] = Array(MeuNomeKw, kwMask("nome"),
+    kwMask("chamo"), kwMask("cpf"), kwMask("cpf", "portador"),
+    kwMask("cidad", "requerente", "solicitante"), kwMask("servidor", "funcion"))
+  private val RgKw = kwMask("rg")
+  private val KeyKw = kwMask("sk-", "akia", "ghp_", "xox")
+  private val FirstPersonKw = kwMask("meu", "minha", "sou ", "chamo", "nome é")
+  private val AddressKw = kwMask("moro", "resid", "rua", "avenida", "quadra",
+    "conjunto", "bloco", "lote", "apartamento", "apt", "cep")
+  private val ContactKw = kwMask("contato", "whats", "zap", "fone", "cel")
+
+  /** `c` as `String.toLowerCase(Locale.ROOT)` maps it, for a char that
+    * maps to one char: every char but U+0130 İ, a fold char that opens every
+    * gate anyway.
+    */
+  @inline private def lowerChar(c: Char): Char =
+    if (c < 128) { if (c >= 'A' && c <= 'Z') (c + 32).toChar else c }
+    else Character.toLowerCase(c)
+
+  /** Whether `kw` occurs case-folded at `i` of `text` (its first char is
+    * already known to match).
+    */
+  private def keywordAt(text: String, i: Int, kw: String): Boolean = {
     val m = kw.length
-    if (m == 0) return true
-    var j = 0
-    while (j < m) { if (kw.charAt(j) > 127) return false; j += 1 }
-    var i = 0
-    val limit = n - m
-    val k0 = kw.charAt(0)
-    while (i <= limit) {
-      var c = text.charAt(i)
-      if (c >= 'A' && c <= 'Z') c = (c + 32).toChar
-      if (c == k0) {
-        var k = 1
-        var ok = true
-        while (ok && k < m) {
-          var t = text.charAt(i + k)
-          if (t >= 'A' && t <= 'Z') t = (t + 32).toChar
-          ok = t == kw.charAt(k)
-          k += 1
-        }
-        if (ok) return true
-      }
-      i += 1
+    if (i + m > text.length) return false
+    var k = 1
+    while (k < m) {
+      if (lowerChar(text.charAt(i + k)) != kw.charAt(k)) return false
+      k += 1
     }
-    false
+    true
   }
 
-  /** One O(n) pre-scan replacing up to ~15 full regex scans on the common
-    * (PII-free) turn: how many digits and which keywords exist at all; each
-    * gate is a necessary condition of the patterns it guards (PropertySpec
-    * checks each gate against its patterns).
-    * The flag loop also detects pure-ASCII texts (the dominant case), for
-    * which the keyword gates run as allocation-free case-folded scans over
-    * the original text instead of materializing a full `toLowerCase` copy
-    * — the largest per-turn allocation left after the r4 zero-copy clean
-    * path (equivalence for ASCII is exact; see [[asciiFoldedContains]]).
+  /** One O(n) pass that decides every gate before any pattern runs: how
+    * many digits the text holds, whether it has an '@', and which
+    * [[Keywords]] it contains, as `toLowerCase(Locale.ROOT).contains(kw)`
+    * would say. Keywords are found by first-char dispatch at each ASCII
+    * position into a bit mask, with no lowercase copy of the text. A gate
+    * is a necessary condition of the patterns it guards (PropertySpec
+    * checks each gate against its patterns, and the mask against a
+    * per-keyword `contains`).
     */
   private[vigil] final class PreScan(text: String) {
     /** `\d` code points: `Character.isDigit(int)` (Nd), not ASCII '0'-'9' —
@@ -193,19 +212,16 @@ object PiiCore {
       */
     var digits = 0
     var hasAt = false
-    var isAscii = true
     /** U+0130 İ, U+0131 ı, U+017F ſ or U+212A K: chars that `UNICODE_CASE`
       * matches against an ASCII keyword letter (i, s, k) where
       * `toLowerCase(ROOT).contains` does not find it.
       */
     var hasFoldChar = false
-    private lazy val lower = text.toLowerCase(java.util.Locale.ROOT)
+    private var found = 0L
     var i = 0
-    // full scan (no early break): isAscii and digits need every char
     while (i < text.length) {
       val c = text.charAt(i)
       if (c > 127) {
-        isAscii = false
         val cp = text.codePointAt(i)
         if (Character.isDigit(cp)) digits += 1
         else if (cp == 0x130 || cp == 0x131 || cp == 0x17F || cp == 0x212A) hasFoldChar = true
@@ -213,14 +229,23 @@ object PiiCore {
       } else {
         if (c >= '0' && c <= '9') digits += 1
         else if (c == '@') hasAt = true
+        else {
+          val cands = KeywordsByFirst(lowerChar(c))
+          var j = 0
+          while (j < cands.length) {
+            val k = cands(j)
+            if ((found & (1L << k)) == 0L && keywordAt(text, i, Keywords(k)))
+              found |= 1L << k
+            j += 1
+          }
+        }
         i += 1
       }
     }
-    // keyword gates (substring scan on the lowercased text is far cheaper
-    // than running the full alternation patterns; allocation-free for
-    // ASCII texts)
-    def has(kw: String): Boolean =
-      hasFoldChar || (if (isAscii) asciiFoldedContains(text, kw) else lower.contains(kw))
+    /** Bit k set: the text holds `Keywords(k)`, case-folded. */
+    def keywordMask: Long = found
+    private def any(mask: Long): Boolean = hasFoldChar || (found & mask) != 0L
+
     // the fewest `\d` a match holds: \d{3}.\d{3}.\d{3}-\d{2} / \d{9}-\d{2} /
     // \d{11}; (\d{2}) \d{4}\d{4} in every phone variant; \d([ -]?\d){12,};
     // \d{3}-\d{2}-\d{4}
@@ -229,33 +254,21 @@ object PiiCore {
     def cardPossible: Boolean = digits >= 13
     def ssnPossible: Boolean = digits >= 9
     // PhoneWithContext's alternation; keywords kept free of i/k/s
-    lazy val phoneContextPossible: Boolean =
-      has("fone") || has("tel") || has("cel") || has("contato") ||
-        has("what") || has("zap")
+    def phoneContextPossible: Boolean = any(PhoneContextKw)
     /** Per [[Patterns.StrongNameContexts]] pattern, in list order: whether
-      * the text holds a keyword every match of that pattern contains.
+      * the text holds a keyword every match of that pattern contains (the
+      * first one needs both "meu" and "nome").
       */
-    lazy val nameGates: Array[Boolean] = {
-      val nome = has("nome")
-      val cpf = has("cpf")
-      Array(has("meu") && nome, nome, has("chamo"), cpf, cpf || has("portador"),
-        has("cidad") || has("requerente") || has("solicitante"),
-        has("servidor") || has("funcion"))
+    val nameGates: Array[Boolean] = Array.tabulate(NameKw.length) { k =>
+      if (k == 0) hasFoldChar || (found & MeuNomeKw) == MeuNomeKw else any(NameKw(k))
     }
     // no digit requirement: the RG charset [\d.-]+ matches dots/dashes
     // alone, so "rg" presence is the only safe gate
-    lazy val rgPossible: Boolean = has("rg")
-    lazy val keyPossible: Boolean =
-      has("sk-") || has("akia") || has("ghp_") || has("xox")
-    lazy val firstPersonPossible: Boolean =
-      has("meu") || has("minha") || has("sou ") || has("chamo") || has("nome é")
-    lazy val addressPossible: Boolean =
-      has("moro") || has("resid") || has("rua") || has("avenida") ||
-        has("quadra") || has("conjunto") || has("bloco") || has("lote") ||
-        has("apartamento") || has("apt") || has("cep")
-    lazy val contactPossible: Boolean =
-      (has("contato") || has("whats") || has("zap") || has("fone") ||
-        has("cel")) && digits > 0
+    def rgPossible: Boolean = any(RgKw)
+    def keyPossible: Boolean = any(KeyKw)
+    def firstPersonPossible: Boolean = any(FirstPersonKw)
+    def addressPossible: Boolean = any(AddressKw)
+    def contactPossible: Boolean = any(ContactKw) && digits > 0
   }
 
   /** Chars of [[Patterns.NameSpanChar]], over the BMP: no supplementary

@@ -20,26 +20,51 @@ object TextClean {
     Pattern.compile("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]")
   private val MultiSpace =
     Pattern.compile("\\s+", Pattern.UNICODE_CHARACTER_CLASS)
-  // whitespace that actually needs collapsing/trimming: any whitespace
-  // char other than plain space, a double space, or a leading/trailing
-  // space. When this does NOT occur, every \s+ run is a single interior
-  // ' ' and replaceAll(" ") + strip() is the identity — but replaceAll
-  // would still REBUILD the whole string (each single space is a match),
-  // a full-text DRAM write per turn that also breaks the reference
-  // identity the zero-copy UTF8String reuse downstream keys on
-  // (PiiSchema.analysisValues: `a.clean eq raw`). One short-circuiting
-  // find() replaces that rebuild for the overwhelmingly common
-  // already-collapsed text.
-  private val NeedsWsWork =
-    Pattern.compile("[\\s&&[^ ]]|\\x20{2}|^\\x20|\\x20$",
-      Pattern.UNICODE_CHARACTER_CLASS)
   // thread-confined matcher reuse (hot path: one clean() per row)
   private val tlCtl = ThreadLocal.withInitial[java.util.regex.Matcher](
     () => ControlChars.matcher(""))
   private val tlWs = ThreadLocal.withInitial[java.util.regex.Matcher](
     () => MultiSpace.matcher(""))
-  private val tlNeeds = ThreadLocal.withInitial[java.util.regex.Matcher](
-    () => NeedsWsWork.matcher(""))
+
+  /** Chars `MultiSpace` matches, over the BMP: no supplementary code point
+    * is Unicode whitespace (PropertySpec checks it), so a char walk sees
+    * every one.
+    */
+  private val WsChars: java.util.BitSet = {
+    val bs = new java.util.BitSet(0x10000)
+    val m = MultiSpace.matcher("")
+    (0 until 0x10000).foreach { c => if (m.reset(c.toChar.toString).matches()) bs.set(c) }
+    bs
+  }
+
+  /** Whether either regex step can change `s`: it holds a control char, a
+    * whitespace char other than ' ', a double space, or a leading or
+    * trailing space. When it does not, every `\s+` run is a single interior
+    * ' ', so the control strip finds nothing and collapse + `strip()` is the
+    * identity; `clean` then returns its input by reference (the identity
+    * `PiiSchema.analysisValues` keys its zero-copy UTF8String reuse on)
+    * instead of rebuilding it. One char walk, no regex.
+    */
+  private def needsWork(s: String): Boolean = {
+    val n = s.length
+    if (n == 0) return false
+    if (s.charAt(0) == ' ' || s.charAt(n - 1) == ' ') return true
+    var prevSpace = false
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c == ' ') {
+        if (prevSpace) return true
+        prevSpace = true
+      } else {
+        // below 0x20 every char is a control char or \t \n \v \f \r
+        if (c < 0x20 || c == 0x7F || (c > 0x7F && WsChars.get(c))) return true
+        prevSpace = false
+      }
+      i += 1
+    }
+    false
+  }
 
   def clean(text: String): String = {
     if (text == null || text.isEmpty) return ""
@@ -48,10 +73,9 @@ object TextClean {
     val nfkc =
       if (Normalizer.isNormalized(text, Normalizer.Form.NFKC)) text
       else Normalizer.normalize(text, Normalizer.Form.NFKC)
-    // Matcher.replaceAll returns the input unchanged (no copy) when the
-    // pattern does not occur, so the no-op path allocates nothing
+    if (!needsWork(nfkc)) return nfkc
     val noCtl = tlCtl.get().reset(nfkc).replaceAll("")
-    if (tlNeeds.get().reset(noCtl).find())
+    if (needsWork(noCtl))
       tlWs.get().reset(noCtl).replaceAll(" ").strip()
     else noCtl
   }

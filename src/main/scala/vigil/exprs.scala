@@ -249,104 +249,207 @@ object TurnStatsExpr {
     StructField("toxic", BooleanType, nullable = false)
   ))
 
-  private val EdgePunct = java.util.regex.Pattern.compile("^\\p{P}+|\\p{P}+$")
-  private val tlEdge = ThreadLocal.withInitial[java.util.regex.Matcher](
-    () => EdgePunct.matcher(""))
+  /** `Character.getType` bits of the 7 Unicode P categories, the
+    * categories `\p{P}` matches.
+    */
+  private val PunctTypes: Int = Seq(Character.CONNECTOR_PUNCTUATION,
+    Character.DASH_PUNCTUATION, Character.START_PUNCTUATION,
+    Character.END_PUNCTUATION, Character.INITIAL_QUOTE_PUNCTUATION,
+    Character.FINAL_QUOTE_PUNCTUATION, Character.OTHER_PUNCTUATION)
+    .foldLeft(0)((m, t) => m | (1 << t))
+  @inline private def isPunct(cp: Int): Boolean =
+    ((1 << Character.getType(cp)) & PunctTypes) != 0
+
+  /** `s` without its leading and trailing runs of `\p{P}` code points:
+    * what `s.replaceAll("^\\p{P}+|\\p{P}+$", "")` returns, in one walk
+    * from each end. As that `$` does, the trailing run may also end just
+    * before a line terminator (`\n`, `\r\n`, `\r`, U+0085, U+2028,
+    * U+2029) that ends `s`; the terminator stays. Returns `s` itself when
+    * nothing is stripped.
+    */
+  private[vigil] def stripEdgePunct(s: String): String = {
+    val n = s.length
+    if (n == 0) return s
+    var b = 0
+    var more = true
+    while (more && b < n) {
+      val cp = s.codePointAt(b)
+      if (isPunct(cp)) b += Character.charCount(cp) else more = false
+    }
+    val last = s.charAt(n - 1)
+    val e =
+      if (last == '\n') { if (n >= 2 && s.charAt(n - 2) == '\r') n - 2 else n - 1 }
+      else if (last == '\r' || last == '\u0085' || last == '\u2028' || last == '\u2029') n - 1
+      else n
+    var t = e
+    more = true
+    while (more && t > b) {
+      val cp = s.codePointBefore(t)
+      if (isPunct(cp)) t -= Character.charCount(cp) else more = false
+    }
+    if (b == 0 && t == e) s
+    else if (e == n) s.substring(b, t)
+    else s.substring(b, t) + s.substring(e)
+  }
   private val ToxicSet: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String]()
     Toxicity.Lexicon.foreach(s.add)
     s
   }
+  private val LetterTypes: Int = Seq(Character.UPPERCASE_LETTER,
+    Character.LOWERCASE_LETTER, Character.TITLECASE_LETTER,
+    Character.MODIFIER_LETTER, Character.OTHER_LETTER).foldLeft(0)((m, t) => m | (1 << t))
   // \p{N} = Nd | Nl | No
-  @inline private def isNumberCat(cp: Int): Boolean = {
-    val t = Character.getType(cp)
-    t == Character.DECIMAL_DIGIT_NUMBER || t == Character.LETTER_NUMBER ||
-      t == Character.OTHER_NUMBER
+  private val NumberTypes: Int = (1 << Character.DECIMAL_DIGIT_NUMBER) |
+    (1 << Character.LETTER_NUMBER) | (1 << Character.OTHER_NUMBER)
+
+  /** Whether `word`, lowercased and edge-stripped, is in the lexicon. */
+  private def isToxicWord(word: String): Boolean = {
+    val t = stripEdgePunct(word.toLowerCase(java.util.Locale.ROOT))
+    t.nonEmpty && ToxicSet.contains(t)
+  }
+
+  /** Scratch of [[computeValues]]: each word's bounds and hash, its
+    * number (the index of the first equal word), and the open-addressing
+    * tables that number words and count distinct 2-grams.
+    */
+  private final class Words {
+    var start = new Array[Int](64)
+    var end = new Array[Int](64)
+    var hash = new Array[Int](64)
+    var id = new Array[Int](64)
+    var n = 0
+    var slots = new Array[Int](128)
+    var pairs = new Array[Long](128)
+    def add(s: Int, e: Int, h: Int): Unit = {
+      if (n == start.length) {
+        start = java.util.Arrays.copyOf(start, 2 * n)
+        end = java.util.Arrays.copyOf(end, 2 * n)
+        hash = java.util.Arrays.copyOf(hash, 2 * n)
+        id = java.util.Arrays.copyOf(id, 2 * n)
+      }
+      start(n) = s; end(n) = e; hash(n) = h; n += 1
+    }
+  }
+  /** Texts up to this many chars (≤ 2^13 words) use the per-thread
+    * scratch, so it stays at most ~0.3 MB; a longer text (a whole document)
+    * gets its own.
+    */
+  private[vigil] val PooledChars = 1 << 14
+  private val tlWords = ThreadLocal.withInitial[Words](() => new Words)
+  /** Words the current thread's scratch holds room for. */
+  private[vigil] def pooledWordCapacity: Int = tlWords.get().start.length
+  @inline private def mix(h: Long): Int = {
+    val x = h * 0x9E3779B97F4A7C15L
+    (x ^ (x >>> 32)).toInt
+  }
+
+  /** 1 - distinct/total over the adjacent word pairs of `text`, words as
+    * `ws` holds them; equal pairs are equal `w1 + " " + w2` strings, as
+    * words hold no ' '.
+    */
+  private def dup2gramFrac(text: String, ws: Words): Double = {
+    val nWords = ws.n
+    var cap = 16
+    while (cap < 2 * nWords) cap <<= 1
+    if (ws.slots.length < cap) ws.slots = new Array[Int](cap)
+    else java.util.Arrays.fill(ws.slots, 0, cap, 0)
+    if (ws.pairs.length < cap) ws.pairs = new Array[Long](cap)
+    else java.util.Arrays.fill(ws.pairs, 0, cap, 0L)
+    val mask = cap - 1
+    // number each word: slots hold word index + 1, 0 = empty
+    var w = 0
+    while (w < nWords) {
+      val len = ws.end(w) - ws.start(w)
+      var sl = mix(ws.hash(w)) & mask
+      var id = -1
+      while (id < 0 && ws.slots(sl) != 0) {
+        val o = ws.slots(sl) - 1
+        if (ws.hash(o) == ws.hash(w) && ws.end(o) - ws.start(o) == len &&
+            text.regionMatches(ws.start(o), text, ws.start(w), len)) id = ws.id(o)
+        else sl = (sl + 1) & mask
+      }
+      if (id < 0) { ws.slots(sl) = w + 1; id = w }
+      ws.id(w) = id
+      w += 1
+    }
+    // distinct (id, next id) pairs: key (id1 + 1, id2 + 1), 0 = empty
+    val total = nWords - 1
+    var distinct = 0
+    var g = 0
+    while (g < total) {
+      val key = ((ws.id(g) + 1).toLong << 32) | (ws.id(g + 1) + 1).toLong
+      var sl = mix(key) & mask
+      while (ws.pairs(sl) != 0L && ws.pairs(sl) != key) sl = (sl + 1) & mask
+      if (ws.pairs(sl) == 0L) { ws.pairs(sl) = key; distinct += 1 }
+      g += 1
+    }
+    1.0 - distinct.toDouble / total
   }
 
   def compute(text: String): InternalRow =
     new GenericInternalRow(computeValues(text))
 
+  /** The 8 stats in one walk over `text`'s code points. Words are the
+    * maximal runs of chars other than ' ' (`split(" ")` without the
+    * empties; clean text is already whitespace-collapsed); lengths count
+    * code points (Spark `length()`). A symbol is a code point that is
+    * neither a letter, a number (N*) nor ' '. The toxic check looks at a
+    * word's lowercased, edge-`\p{P}`-stripped token; a word of ASCII
+    * lowercase letters is its own token.
+    */
   private[vigil] def computeValues(text: String): Array[Any] = {
-    // words: split on single space, drop empties (clean text is already
-    // whitespace-collapsed). Lengths in code points (Spark length()).
-    val words = text.split(" ").filter(_.nonEmpty)
-    val nWords = words.length
-    val nChars = text.codePointCount(0, text.length)
-
+    val ws = if (text.length > PooledChars) new Words else tlWords.get()
+    ws.n = 0
+    val n = text.length
+    var nChars = 0
     var sumLen = 0
     var maxLen = 0
     var alphaWords = 0
+    var symbols = 0
+    var toxic = false
     var i = 0
-    while (i < nWords) {
-      val w = words(i)
-      val wl = w.codePointCount(0, w.length)
-      sumLen += wl
-      if (wl > maxLen) maxLen = wl
-      var hasLetter = false
-      var j = 0
-      while (j < w.length && !hasLetter) {
-        val cp = w.codePointAt(j)
-        if (Character.isLetter(cp)) hasLetter = true
-        j += Character.charCount(cp)
+    while (i < n) {
+      if (text.charAt(i) == ' ') { nChars += 1; i += 1 }
+      else {
+        // one word: [s, i)
+        val s = i
+        var wl = 0
+        var h = 0
+        var hasLetter = false
+        var lower = true
+        while (i < n && text.charAt(i) != ' ') {
+          val c = text.charAt(i)
+          h = 31 * h + c
+          if (c < 'a' || c > 'z') lower = false
+          val cp =
+            if (Character.isHighSurrogate(c) && i + 1 < n &&
+                Character.isLowSurrogate(text.charAt(i + 1))) {
+              h = 31 * h + text.charAt(i + 1)
+              i += 2
+              Character.toCodePoint(c, text.charAt(i - 1))
+            } else { i += 1; c.toInt }
+          val t = 1 << Character.getType(cp)
+          if ((t & LetterTypes) != 0) hasLetter = true
+          else if ((t & NumberTypes) == 0) symbols += 1
+          wl += 1
+        }
+        ws.add(s, i, h)
+        nChars += wl
+        sumLen += wl
+        if (wl > maxLen) maxLen = wl
+        if (hasLetter) alphaWords += 1
+        if (!toxic) {
+          val w = text.substring(s, i)
+          toxic = if (lower) ToxicSet.contains(w) else isToxicWord(w)
+        }
       }
-      if (hasLetter) alphaWords += 1
-      i += 1
     }
+    val nWords = ws.n
     val meanWordLen = if (nWords > 0) sumLen.toDouble / nWords else 0.0
     val alphaFrac = if (nWords > 0) alphaWords.toDouble / nWords else 0.0
-
-    // symbols: code points that are neither letter, number (N*) nor ' '
-    var symbols = 0
-    var ci = 0
-    while (ci < text.length) {
-      val cp = text.codePointAt(ci)
-      if (cp != ' ' && !Character.isLetter(cp) && !isNumberCat(cp)) symbols += 1
-      ci += Character.charCount(cp)
-    }
     val symbolRatio = if (nWords > 0) symbols.toDouble / nWords else 0.0
-
-    // 2-gram duplication: 1 - distinct/total over adjacent word pairs
-    val dup2 =
-      if (nWords >= 2) {
-        val total = nWords - 1
-        val seen = new java.util.HashSet[String](total * 2)
-        var g = 0
-        var distinct = 0
-        while (g < total) {
-          if (seen.add(words(g) + " " + words(g + 1))) distinct += 1
-          g += 1
-        }
-        1.0 - distinct.toDouble / total
-      } else 0.0
-
-    // toxicity: lowercased tokens, edge punctuation stripped, set lookup.
-    // Fast path: a word that is already all ASCII lowercase letters IS its
-    // own stripped lowercase form (edge \p{P} can't match a letter), so it
-    // goes straight to the set — no per-word String allocation on the
-    // common case.
-    var toxic = false
-    val edge = tlEdge.get()
-    i = 0
-    while (i < nWords && !toxic) {
-      val w = words(i)
-      var allLower = true
-      var j = 0
-      while (j < w.length && allLower) {
-        val ch = w.charAt(j)
-        if (ch < 'a' || ch > 'z') allLower = false
-        j += 1
-      }
-      if (allLower) {
-        if (ToxicSet.contains(w)) toxic = true
-      } else {
-        val t = edge.reset(w.toLowerCase(java.util.Locale.ROOT))
-          .replaceAll("")
-        if (t.nonEmpty && ToxicSet.contains(t)) toxic = true
-      }
-      i += 1
-    }
-
+    val dup2 = if (nWords >= 2) dup2gramFrac(text, ws) else 0.0
     Array[Any](
       nWords, nChars, meanWordLen, maxLen, alphaFrac, symbolRatio, dup2, toxic)
   }

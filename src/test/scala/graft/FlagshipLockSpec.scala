@@ -11,13 +11,14 @@ import scala.jdk.CollectionConverters._
   * before the refactor that touched the query, at one core and at four.
   * `pipeline_transcripts` (the flagship) was recorded before the
   * conversation-decision refactor, `q_review_triage_transcripts` before the
-  * per-turn review kernel, and `q_conv_assembly`, `q_pii_scrub` and
-  * `q_lang_score` before the streaming refactor.
+  * per-turn review kernel, `q_conv_assembly`, `q_pii_scrub` and
+  * `q_lang_score` before the streaming refactor, and `q_ppl_buckets`,
+  * `q_lm_buckets` and `q_quality_classifier` before the single-pass turn
+  * kernel.
   *
   * The transcript queries read no file: `SparkEntry.transcripts` takes its
   * scale from the directory name alone (sf0.01 → 2,000 Synth
-  * conversations). `q_pii_scrub` and `q_lang_score` read the sf0.01
-  * documents table.
+  * conversations). The other queries read the sf0.01 documents table.
   *
   * The suites share one local[4] SparkContext, and a JVM holds only one, so
   * the local[1] hash comes from a child JVM running [[FlagshipLockSpec.main]]
@@ -69,6 +70,13 @@ object FlagshipLockSpec {
   /** `rows:sum of xxhash64` of `q_lang_score` at sf0.01. */
   val LangScore = "500:115193367542508361719"
 
+  /** `rows:sum of xxhash64` of `q_ppl_buckets` at sf0.01. */
+  val PplBuckets = "500:-114957020942900159054"
+  /** `rows:sum of xxhash64` of `q_lm_buckets` at sf0.01. */
+  val LmBuckets = "500:62415029671063645927"
+  /** `rows:sum of xxhash64` of `q_quality_classifier` at sf0.01. */
+  val QualityClassifier = "500:84982561720998424686"
+
   /** The sf0.01 test-data directory the locked queries run over. */
   val SfDir = "/root/testdata/sf0.01"
 
@@ -78,7 +86,10 @@ object FlagshipLockSpec {
     "q_review_triage_transcripts" -> ReviewTriageTranscripts,
     "q_conv_assembly" -> ConvAssembly,
     "q_pii_scrub" -> PiiScrub,
-    "q_lang_score" -> LangScore)
+    "q_lang_score" -> LangScore,
+    "q_ppl_buckets" -> PplBuckets,
+    "q_lm_buckets" -> LmBuckets,
+    "q_quality_classifier" -> QualityClassifier)
 
   private val Prefix = "row hash: "
 

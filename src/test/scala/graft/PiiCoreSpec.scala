@@ -287,4 +287,34 @@ class PiiCoreSpec extends AnyFunSuite {
     assert(kernelOutputHash(1) == "b6902ed6d0939564")
     assert(kernelOutputHash(3) == "c7acdcca4b5a3e1a")
   }
+
+  /** SHA-256 (first 16 hex digits) over the rest of the `turn_score` row on
+    * the same 20,000 turns: `clean`, `lang`, the raw bits of `lang_conf` and
+    * `perplexity`, and the 8 TurnStats values (doubles as raw bits). It
+    * covers what the lock above does not: TextClean, LangModel and
+    * TurnStats on accented Portuguese text.
+    */
+  private def turnScoreHash(repeat: Int): String = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val expr = vigil.TurnScoreExpr(BoundReference(0, StringType, nullable = true))
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def bits(d: Double) = java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+    Synth.corpus(10000, 42L, maxLen = 2, repeat = repeat).take(20000).foreach { t =>
+      val r = expr.eval(InternalRow(UTF8String.fromString(t.text))).asInstanceOf[InternalRow]
+      val row = Seq(r.getUTF8String(0).toString, r.getUTF8String(4).toString,
+        bits(r.getDouble(5)), bits(r.getDouble(6)),
+        r.getInt(7), r.getInt(8), bits(r.getDouble(9)), r.getInt(10),
+        bits(r.getDouble(11)), bits(r.getDouble(12)), bits(r.getDouble(13)),
+        r.getBoolean(14)).mkString("|") + "\n"
+      md.update(row.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    md.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+  test("kernel output lock: turn_score clean, lang, perplexity and stats at repeat 1 and 3") {
+    assert(turnScoreHash(1) == "f688524668b51514")
+    assert(turnScoreHash(3) == "d6c5a68832162801")
+  }
 }

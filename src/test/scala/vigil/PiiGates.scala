@@ -3,15 +3,16 @@ package vigil
 import java.util.regex.{Matcher, Pattern}
 
 /** Test-side view of `PiiCore`'s `private[vigil]` gates and trailer loop,
-  * for the specs in `graft`.
+  * for the specs in `graft` and `vigil.tools.CleanPathStats`.
   */
 object PiiGates {
   private type Gate = PiiCore.PreScan => Boolean
 
-  /** Every pattern `PiiCore.analyze` runs over the whole text, with the
-    * gate (the conjunction of the gates it is nested under) it runs behind.
+  /** Every pattern `PiiCore.analyze` runs over the whole text, by name,
+    * with the gate (the conjunction of the gates it is nested under) it
+    * runs behind.
     */
-  private val gated: Seq[(String, Pattern, Gate)] = {
+  val gatedPatterns: Seq[(String, Pattern, Gate)] = {
     val names = Patterns.StrongNameContexts.zipWithIndex.map { case (p, k) =>
       (s"StrongNameContexts($k)", p, (g: PiiCore.PreScan) => g.nameGates(k))
     }
@@ -40,8 +41,36 @@ object PiiGates {
   /** Names of the patterns that match `text` while their gate is closed. */
   def unsoundGates(text: String): Seq[String] = {
     val pre = new PiiCore.PreScan(text)
-    gated.collect { case (n, p, g) if p.matcher(text).find() && !g(pre) => n }
+    gatedPatterns.collect { case (n, p, g) if p.matcher(text).find() && !g(pre) => n }
   }
+
+  /** The keyword gates of `text`'s [[PiiCore.PreScan]], in
+    * [[ContainsKeywordGates.gates]] order, the contact gate without its
+    * digit condition.
+    */
+  def keywordGates(text: String): Seq[Boolean] = {
+    val g = new PiiCore.PreScan(text)
+    Seq(g.phoneContextPossible) ++ g.nameGates ++ Seq(g.rgPossible,
+      g.keyPossible, g.firstPersonPossible, g.addressPossible,
+      new PiiCore.PreScan(text + "0").contactPossible)
+  }
+
+  /** Whether `text`'s [[PiiCore.PreScan]] holds `kw`, one of [[keywords]]
+    * (a fold char holds every one). */
+  def has(text: String, kw: String): Boolean = hasEach(text, Seq(kw)).head
+
+  /** The same, for each of `kws`, from one scan. */
+  def hasEach(text: String, kws: Seq[String]): Seq[Boolean] = {
+    val g = new PiiCore.PreScan(text)
+    kws.map { kw =>
+      val k = PiiCore.Keywords.indexOf(kw)
+      require(k >= 0, s"not a PreScan keyword: $kw")
+      g.hasFoldChar || (g.keywordMask & (1L << k)) != 0L
+    }
+  }
+
+  /** Every keyword a gate tests. */
+  def keywords: Seq[String] = PiiCore.Keywords.toSeq
 
   private def trailerPattern = Patterns.StrongNameContexts(Patterns.TrailerNameIndex)
   private def spans(m: Matcher) = (m.start, m.end, m.group(1))
