@@ -805,16 +805,11 @@ object SparkEntry {
     //     q_neardup_verified's candidate stage and the suite's
     //     LSH ≡ brute exactness gates) ----------------------------------
     "q_minhash_dedup" -> ((s, dir) => {
-      // explicit-count rebalance before the sort (r7): with the no-op
-      // pair-dedup exchange elided, orderBy's range-sampling pass would
-      // otherwise re-execute the whole est pipeline (no shuffle files to
-      // re-read below the sort); one narrow 24-byte-row exchange restores
-      // the reuse. Rows identical — physical plan only.
+      // the pairs arrive through the core's explicit-count id_a rebalance,
+      // so orderBy's range-sampling pass re-reads its shuffle files instead
+      // of re-running the est pipeline
       Dedup.minhashLsh(taggedCopyCorpus(s, dir), "ttext", "doc_id",
         minEst = 0.8)
-        .repartition(
-          s.conf.get("spark.sql.shuffle.partitions", "200").toInt,
-          col("id_a"))
         .orderBy("id_a", "id_b")
     }),
     // --- SimHash near-dup pairs (oracle-paired, same playbook: exact

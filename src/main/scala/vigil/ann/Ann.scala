@@ -154,13 +154,11 @@ object Ann {
   }
 
   private def withBandKeys(df: DataFrame, vecCol: String, bandBits: Int,
-      bands: Int, dim: Int, seed: Long, keepSig: Boolean = false): DataFrame = {
+      bands: Int, dim: Int, seed: Long): DataFrame = {
     val keysUdf = signKeysUdf(bandBits, bands, dim, seed)
-    val exploded = df
-      .withColumn("__keys", keysUdf(col(vecCol).cast("array<double>")))
+    df.withColumn("__keys", keysUdf(col(vecCol).cast("array<double>")))
       .select(col("*"), posexplode(col("__keys")).as(Seq("band", "bkey")))
-    if (keepSig) exploded.withColumnRenamed("__keys", "sig")
-    else exploded.drop("__keys")
+      .drop("__keys")
   }
 
   /** Stable sign-LSH signature frame for [[cosineNearDupPairsIncremental]]:
@@ -415,13 +413,51 @@ object Ann {
     */
   private def verifyCos(
       pairIds: DataFrame, vecs: DataFrame, minCos: Double): DataFrame =
-    pairIds
+    pairIds.select("id_a", "id_b")
       .join(vecs.select(col("vid").as("id_a"), col("v").as("va")), Seq("id_a"))
       .join(vecs.select(col("vid").as("id_b"), col("v").as("vb")), Seq("id_b"))
       .withColumn("cos", vigil.functions.eval_once(
         cosine(col("va"), col("vb"))))
       .filter(col("cos") >= minCos)
       .select("id_a", "id_b", "cos")
+
+  /** The sign-LSH pair stage of both near-dup faces: the sign-signature
+    * frame `sigs` (id, sig, is_new) through `Dedup.bandedPairs` — band b's
+    * key is `sig(b)`, and the in-bucket test is the full-signature
+    * hamming prefilter (≤ [[maxDisagreeFor]] disagreeing bits) — then the
+    * exact-cosine verify against `vecs` (vid, v).
+    */
+  private def signNearDupPairs(
+      sigs: DataFrame, vecs: DataFrame, minCos: Double, bandBits: Int,
+      bands: Int, designCos: Double, targetMiss: Double,
+      maxBucketSize: Int): DataFrame = {
+    val maxDis = maxDisagreeFor(bands * bandBits, designCos, targetMiss)
+    val pairIds = vigil.dedup.Dedup.bandedPairs(
+      sigs.withColumn("blk", lit("")), bands, bands, maxBucketSize)(
+      (sig, b) => sig(b),
+      (sa, sb) => {
+        var dis = 0; var b = 0
+        while (b < sa.length && dis <= maxDis) {
+          dis += java.lang.Long.bitCount(sa(b) ^ sb(b)); b += 1
+        }
+        if (dis <= maxDis) dis.toDouble else -1.0
+      })
+    verifyCos(pairIds, vecs, minCos)
+  }
+
+  /** The recall guarantee of both near-dup faces holds at designCos, NOT
+    * at minCos: pairs in (minCos, designCos) ride the LSH S-curve down.
+    * The scaladoc says so, but minCos reads like a completeness threshold,
+    * so the design point is surfaced at RUN time too.
+    */
+  private def warnBelowDesign(
+      face: String, minCos: Double, designCos: Double, targetMiss: Double): Unit =
+    if (designCos > minCos)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        f"$face: recall is designed at cos=$designCos%.4f " +
+          f"(miss ≤ ${2 * targetMiss}%.1e) but the decision threshold is " +
+          f"minCos=$minCos%.4f — pairs between them have DEGRADED recall; " +
+          "pass designCos = minCos for full recall at the threshold (more bands)")
 
   /** Embedding-cosine near-duplicate pairs (corpus×corpus) via the same
     * band trick: pairs sharing a band, kept when cosine ≥ minCos.
@@ -441,15 +477,16 @@ object Ann {
     *    must either accept that or pass designCos = minCos (many more
     *    bands). The test corpora have no pairs between 0.51 and 0.9999,
     *    which is what makes the DuckDB oracle hash-exact.
-    *  - only (id, packed signature) rides the candidate exchange (~8+8·nb
-    *    bytes vs the 512-byte vector); candidate pairs are emitted by a
-    *    LAZY in-bucket iterator after ONE groupBy on (band, bkey) — not a
-    *    self-join, which would compute the banding twice and shuffle both
-    *    sides — then deduplicated on ids and only THEN joined back to the
-    *    vectors (the r2 shape shipped both 64-dim vectors through the
-    *    dedup shuffle). `maxBucketSize` is the same degenerate-data valve
-    *    as in Dedup.minhashLsh, applied before aggregation so both the
-    *    agg buffer AND the in-bucket CPU are bounded by the cap.
+    *  - the pairs come from `Dedup.bandedPairs` over the
+    *    [[computeSignSignatures]] frame: only (id, packed signature)
+    *    rides the bucket exchange (~8+8·nb bytes vs the 512-byte vector),
+    *    pairs are emitted by the core's lazy in-bucket iterator with its
+    *    bucket cap, cross-band skip, dedup elision and id_a rebalance,
+    *    and only THEN joined back to the vectors. The core consumes the
+    *    signature frame twice (its capped-key pre-pass), so the
+    *    hyperplane projections run twice per vector. The capped-bucket
+    *    set is snapshotted when this frame is built (the core's
+    *    static-input assumption).
     *  - in-bucket pairs are PREFILTERED on full-signature hamming distance
     *    before any exchange or cosine: a pair at designCos disagrees on
     *    > [[maxDisagreeFor]] of the nb·bb bits with prob ≤ targetMiss
@@ -465,49 +502,13 @@ object Ann {
       minCos: Double, bandBits: Int = 0, bands: Int = 0, dim: Int = 64,
       seed: Long = 42L, designCos: Double = 0.9999,
       targetMiss: Double = 1e-7, maxBucketSize: Int = 100000): DataFrame = {
-    // the recall guarantee holds at designCos, NOT at minCos: pairs in
-    // (minCos, designCos) ride the LSH S-curve down. The scaladoc says so,
-    // but minCos reads like a completeness threshold — surface the design
-    // point at RUN time so a caller on a real corpus sees the trade
-    if (designCos > minCos)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        f"cosineNearDupPairs: recall is designed at cos=$designCos%.4f " +
-          f"(miss ≤ ${2 * targetMiss}%.1e) but the decision threshold is " +
-          f"minCos=$minCos%.4f — pairs between them have DEGRADED recall; " +
-          "pass designCos = minCos for full recall at the threshold (more bands)")
+    warnBelowDesign("cosineNearDupPairs", minCos, designCos, targetMiss)
     val bb = if (bandBits > 0) bandBits else bandBitsFor(corpus.count())
     val nb = if (bands > 0) bands else bandsFor(bb, designCos, targetMiss)
-    val maxDis = maxDisagreeFor(nb * bb, designCos, targetMiss)
-    val keyed = withBandKeys(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("vec")),
-      "vec", bb, nb, dim, seed, keepSig = true)
-      .select(col("band"), col("bkey"), col("id"), col("sig"))
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // the shared capped-bucket shape (one exchange, cap-bounded agg
-    // memory) — see Dedup.cappedSortedMembers
-    val pairIds = vigil.dedup.Dedup.cappedSortedMembers(
-      keyed, Seq("band", "bkey"),
-      struct(col("id"), col("sig")), maxBucketSize)
-      .select(col("members")).as[Seq[(Long, Seq[Long])]]
-      .flatMap { ms =>
-        val ids = ms.iterator.map(_._1).toArray
-        val sigs = ms.iterator.map(_._2.toArray).toArray
-        (0 until ids.length).iterator.flatMap { i =>
-          ((i + 1) until ids.length).iterator.flatMap { j =>
-            val sa = sigs(i); val sb = sigs(j)
-            var dis = 0; var b = 0
-            while (b < sa.length && dis <= maxDis) {
-              dis += java.lang.Long.bitCount(sa(b) ^ sb(b)); b += 1
-            }
-            if (dis <= maxDis) Iterator.single((ids(i), ids(j))) else Iterator.empty
-          }
-        }
-      }
-      .toDF("id_a", "id_b")
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__n")).drop("__n")
-    val vecs = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"))
-    verifyCos(pairIds, vecs, minCos)
+    val sigs = computeSignSignatures(corpus, idCol, vecCol, bb, nb, dim, seed)
+      .withColumn("is_new", lit(true))
+    signNearDupPairs(sigs, corpus.select(col(idCol).as("vid"), col(vecCol).as("v")),
+      minCos, bb, nb, designCos, targetMiss, maxBucketSize)
   }
 
   /** Incremental embedding near-dup: a NEW batch against an existing
@@ -515,14 +516,16 @@ object Ann {
     * embedding-side twin of `Dedup.minhashLshIncremental`. Emits exactly
     * the (new×corpus ∪ new×new) slice of a from-scratch
     * [[cosineNearDupPairs]] over the union at the same FIXED banding
-    * (spec-asserted): the union rides the same buckets and caps, the
-    * same full-signature hamming prefilter, and the same exact-cosine
-    * verify; corpus×corpus pairs are suppressed before any popcount.
-    * Corpus signatures are never recomputed; corpus VECTORS are touched
-    * only by the verify joins over surviving candidate pairs. Ids must
-    * be unique across the union. `corpusVecs`/`newBatch` carry
-    * idCol/vecCol; recall is designed at designCos exactly as in the
-    * batch operator (same warning applies for minCos < designCos).
+    * (spec-asserted): the union rides the same pair core, so the same
+    * buckets and caps, the same full-signature hamming prefilter, and the
+    * same exact-cosine verify; corpus×corpus pairs are suppressed before
+    * any popcount. A stored table built with a different `bands` fails
+    * the core's banding guard. Corpus signatures are never recomputed;
+    * corpus VECTORS are touched only by the verify joins over surviving
+    * candidate pairs. Ids must be unique across the union.
+    * `corpusVecs`/`newBatch` carry idCol/vecCol; recall is designed at
+    * designCos exactly as in the batch operator (same warning applies for
+    * minCos < designCos).
     */
   def cosineNearDupPairsIncremental(
       corpusSigs: DataFrame, corpusVecs: DataFrame, newBatch: DataFrame,
@@ -530,48 +533,14 @@ object Ann {
       bandBits: Int, bands: Int, dim: Int = 64, seed: Long = 42L,
       designCos: Double = 0.9999, targetMiss: Double = 1e-7,
       maxBucketSize: Int = 100000): DataFrame = {
-    if (designCos > minCos)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        f"cosineNearDupPairsIncremental: recall designed at cos=$designCos%.4f " +
-          f"but minCos=$minCos%.4f — pairs between them have DEGRADED recall")
-    val maxDis = maxDisagreeFor(bands * bandBits, designCos, targetMiss)
-    val newSigs = computeSignSignatures(newBatch, idCol, vecCol, bandBits,
-      bands, dim, seed)
-    val union = corpusSigs.select(col("id"), col("sig"))
+    warnBelowDesign("cosineNearDupPairsIncremental", minCos, designCos, targetMiss)
+    val sigs = corpusSigs.select(col("id"), col("sig"))
       .withColumn("is_new", lit(false))
-      .unionByName(newSigs.withColumn("is_new", lit(true)))
-    val keyed = union
-      .select(col("id"), col("sig"), col("is_new"),
-        posexplode(col("sig")).as(Seq("band", "bkey")))
-    val spark = corpusSigs.sparkSession
-    import spark.implicits._
-    val pairIds = vigil.dedup.Dedup.cappedSortedMembers(
-      keyed, Seq("band", "bkey"),
-      struct(col("id"), col("sig"), col("is_new")), maxBucketSize)
-      .select(col("members")).as[Seq[(Long, Seq[Long], Boolean)]]
-      .flatMap { ms =>
-        val ids = ms.iterator.map(_._1).toArray
-        val sigs = ms.iterator.map(_._2.toArray).toArray
-        val nw = ms.iterator.map(_._3).toArray
-        (0 until ids.length).iterator.flatMap { i =>
-          ((i + 1) until ids.length).iterator.flatMap { j =>
-            if (!nw(i) && !nw(j)) Iterator.empty // corpus×corpus: not ours
-            else {
-              val sa = sigs(i); val sb = sigs(j)
-              var dis = 0; var b = 0
-              while (b < sa.length && dis <= maxDis) {
-                dis += java.lang.Long.bitCount(sa(b) ^ sb(b)); b += 1
-              }
-              if (dis <= maxDis) Iterator.single((ids(i), ids(j)))
-              else Iterator.empty
-            }
-          }
-        }
-      }
-      .toDF("id_a", "id_b")
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__n")).drop("__n")
+      .unionByName(computeSignSignatures(newBatch, idCol, vecCol, bandBits,
+        bands, dim, seed).withColumn("is_new", lit(true)))
     val vecs = corpusVecs.select(col(idCol).as("vid"), col(vecCol).as("v"))
       .unionByName(newBatch.select(col(idCol).as("vid"), col(vecCol).as("v")))
-    verifyCos(pairIds, vecs, minCos)
+    signNearDupPairs(sigs, vecs, minCos, bandBits, bands, designCos,
+      targetMiss, maxBucketSize)
   }
 }

@@ -253,7 +253,7 @@ object Dedup {
       * slice. Computed in plain Scala (not a Catalyst hash expression) so
       * the in-bucket pair loop can recompute ANY band's key from the full
       * signature — the capped-bucket lookup behind the sound cross-band
-      * skip in [[Dedup.minhashLsh]] depends on that.
+      * skip in [[Dedup.bandedPairs]] depends on that.
       */
     def bandHash(sig: Array[Long], band: Int, rowsPerBand: Int): Long = {
       var h = 0xcbf29ce484222325L ^ band.toLong
@@ -275,47 +275,19 @@ object Dedup {
     * ≥1 band with probability 1-(1-t^r)^b (the S-curve). Default 16×8
     * targets t ≈ 0.8.
     *
-    * Bucket-pair emission is a LAZY typed flatMap, not a UDF returning an
-    * array: a k-member near-dup cluster has C(k,2) pairs, and
-    * materializing them per bucket OOMs executors once clusters reach a
-    * few thousand members. `maxBucketSize` is applied BEFORE the member
-    * aggregation (row_number over the bucket key — a spillable sort on
-    * the same single exchange), so executor memory is bounded by the CAP
-    * even for a degenerate billion-member bucket (slice-after-collect
-    * would have materialized it in the agg buffer first). The cap is a
-    * safety valve for degenerate buckets (e.g. thousands of
-    * byte-identical docs, where exact dedup is the right tool and
-    * all-pairs output is intractable by construction); within the cap
-    * the output is exact.
-    *
-    * Cross-band skip (sound under caps): a true near-dup pair collides in
-    * ~every band, so emitting from every colliding band re-runs the
-    * 144-element estimator up to ×bands per pair. Band b now skips a pair
-    * when an EARLIER band's signature slices match AND that band's bucket
-    * was not capped — the earlier band provably holds both members and
-    * emits the pair itself. A naive first-colliding-band skip (tried and
-    * removed in r2) is unsound exactly when the earlier bucket WAS capped
-    * (the pair may have been sliced out of it); the capped-key set makes
-    * the skip exact. Capped keys come from a cheap cardinality pre-pass
-    * (one extra narrow signature pass + a shuffle of (band,bh,blk) keys
-    * only); the collect is bounded because capped buckets are the rare
-    * degenerate case the cap exists for. At production scale, persist the
-    * input upstream if the double signature pass matters; on dense corpora
-    * the skip saves far more than the pre-pass costs (227 s → see
-    * BENCH/BASELINE.md round 3).
+    * The pairs come from [[bandedPairs]], with [[MinHash.bandHash]] as
+    * the band key and `estJaccardAtLeast ≥ minEst` as the in-bucket test;
+    * the bucket cap, the cross-band skip, the pair dedup and the rebalance
+    * are the core's and are stated there, as is the static-input
+    * assumption. The signature frame is persisted: the core's capped-key
+    * pre-pass and its pair stage both consume it, and without the cache
+    * the second action re-runs the whole MinHash UDF pass. The cache holds
+    * (id, blk, 144-long sig) ≈ 1.2 KB/doc, spill-to-disk bounded;
+    * [[persistSigs]] caps the session at ONE live signature cache.
     *
     * `blockCol`: optional blocking key folded INTO the bucket key — only
     * same-block pairs are candidates, buckets get strictly smaller, and
     * the LSH shuffle is block-partitioned instead of global.
-    *
-    * Static input assumed: the capped-bucket set is collected on the
-    * driver ONCE, when this DataFrame is BUILT, and it both drives the
-    * cross-band skip and decides whether the (id_a, id_b) dedup exchange
-    * is elided. Re-executing the returned frame after the source changed
-    * (a re-scanned mutable table, an evicted cache over changed input)
-    * plans against the stale snapshot: a bucket that became capped can
-    * then emit duplicate pairs with no dedup, or lose pairs to the skip.
-    * Rebuild the frame per run over a source that can change.
     *
     * Returns (id_a, id_b, est_jaccard) with id_a < id_b, est ≥ minEst.
     */
@@ -324,27 +296,15 @@ object Dedup {
       bands: Int = 16, rowsPerBand: Int = 8, shingleK: Int = 3,
       seed: Long = 42L, minEst: Double = 0.8,
       maxBucketSize: Int = 100000,
-      blockCol: Option[String] = None,
-      crossBandSkip: Boolean = true,
-      precomputedSigs: Option[DataFrame] = None): DataFrame = {
-    // precomputedSigs (a [[computeSignatures]] frame, same bands/rows/
-    // shingle/seed/block params) skips the MinHash UDF pass entirely —
-    // the production shape when signatures live in a table (df/textCol
-    // are then only documentation). When WE compute them and the skip's
-    // cardinality pre-pass will re-consume the frame, persist: without
-    // the cache the second action re-runs the whole UDF pass. The cache
-    // holds (id, blk, 144-long sig) ≈ 1.2 KB/doc, spill-to-disk bounded;
-    // [[persistSigs]] caps the session at ONE live signature cache.
-    val sigs0 = precomputedSigs.getOrElse(computeSignatures(
+      blockCol: Option[String] = None): DataFrame = {
+    val sigs = persistSigs(computeSignatures(
       df, textCol, idCol, bands, rowsPerBand, shingleK, seed, blockCol))
-    val sigs = if (crossBandSkip && precomputedSigs.isEmpty) persistSigs(sigs0)
-      else sigs0
-    lshPairs(sigs.withColumn("is_new", lit(true)), bands, rowsPerBand,
-      minEst, maxBucketSize, crossBandSkip, onlyNew = false)
+    minhashPairs(sigs.withColumn("is_new", lit(true)), bands, rowsPerBand,
+      minEst, maxBucketSize)
   }
 
-  /** The stable signature frame consumed by [[minhashLsh]]
-    * (`precomputedSigs`) and [[minhashLshIncremental]]: one row per
+  /** The stable signature frame consumed by [[minhashLsh]] and
+    * [[minhashLshIncremental]]: one row per
     * document, `(id: long, blk: string, sig: array<long>)`. Write it to a
     * table and append each ingest batch's frame — the MinHash UDF pass is
     * the dominant narrow-stage cost of LSH dedup, and a recurring ingest
@@ -377,157 +337,210 @@ object Dedup {
     * Both inputs are [[computeSignatures]] frames with the SAME
     * bands/rowsPerBand/shingle/seed/block parameters; ids must be unique
     * across the union (re-ingesting an id produces self-pairs). The pair
-    * stage scans its input twice when crossBandSkip (cardinality
-    * pre-pass) — corpus signatures come from a table (cheap rescan by
-    * design), and callers should persist `newSigs` if they also append
-    * it to that table in the same job. At 100 TB the corpus sig table is
-    * the only big input, and it is NEVER recomputed or cached here.
+    * stage scans its input twice (the core's capped-key pre-pass) —
+    * corpus signatures come from a table (cheap rescan by design), and
+    * callers should persist `newSigs` if they also append it to that
+    * table in the same job. At 100 TB the corpus sig table is the only
+    * big input, and it is NEVER recomputed or cached here.
     *
-    * Static input assumed, as for [[minhashLsh]]: the capped-bucket set
-    * over the union is snapshotted when this DataFrame is BUILT. Build it
-    * AFTER the batch is final and rebuild it per ingest run — re-executing
-    * it once the corpus table has grown plans against the stale caps.
+    * Static input assumed, as stated on [[bandedPairs]]: build the frame
+    * AFTER the batch is final and rebuild it per ingest run.
     */
   def minhashLshIncremental(
       corpusSigs: DataFrame, newSigs: DataFrame,
       bands: Int = 16, rowsPerBand: Int = 8, minEst: Double = 0.8,
-      maxBucketSize: Int = 100000,
-      crossBandSkip: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 100000): DataFrame = {
     val union = corpusSigs.select(col("id"), col("blk"), col("sig"))
       .withColumn("is_new", lit(false))
       .unionByName(newSigs.select(col("id"), col("blk"), col("sig"))
         .withColumn("is_new", lit(true)))
-    lshPairs(union, bands, rowsPerBand, minEst, maxBucketSize,
-      crossBandSkip, onlyNew = true)
+    minhashPairs(union, bands, rowsPerBand, minEst, maxBucketSize)
   }
 
-  /** Shared LSH pair stage over a signature frame (id, blk, sig, is_new).
-    * onlyNew suppresses corpus×corpus pairs (both members is_new = false)
-    * before any estimator or skip work — the incremental contract.
+  /** The MinHash generator of [[bandedPairs]], shared by the batch and
+    * incremental faces.
     */
-  private def lshPairs(
+  private def minhashPairs(
       sigs: DataFrame, bands: Int, rowsPerBand: Int, minEst: Double,
-      maxBucketSize: Int, crossBandSkip: Boolean,
-      onlyNew: Boolean): DataFrame = {
-    val rpb = rowsPerBand
-    val nb = bands
-    val bhsUdf = udf { (sig: Seq[Long]) =>
-      // banding contract guard — matters most for STORED signature tables
-      // (precomputedSigs / minhashLshIncremental): a shorter sig would
-      // throw an opaque ArrayIndexOutOfBounds inside bandHash, and a
-      // LONGER one would silently band over a prefix, quietly breaking
-      // the recall math the band/row parameters were chosen for
-      require(sig.length == nb * rpb,
-        s"signature length ${sig.length} != bands*rowsPerBand = $nb*$rpb" +
-          " — the signature table was computed with different banding" +
-          " parameters than this query's (bands, rowsPerBand)")
-      val a = sig.toArray
-      Array.tabulate(nb)(b => MinHash.bandHash(a, b, rpb))
-    }
-    val exploded = sigs.select(col("id"), col("blk"), col("sig"),
-      col("is_new"), posexplode(bhsUdf(col("sig"))).as(Seq("band", "bh")))
+      maxBucketSize: Int): DataFrame =
+    bandedPairs(sigs, bands, bands * rowsPerBand, maxBucketSize)(
+      minhashKey(rowsPerBand),
+      (a, b) => {
+        val est = MinHash.estJaccardAtLeast(a, b, minEst)
+        if (est >= minEst) est else -1.0
+      })
+      .withColumnRenamed("value", "est_jaccard")
 
-    // capped-bucket keys: cardinality-only pre-pass (no member collection)
-    val spark = sigs.sparkSession
+  private def minhashKey(rowsPerBand: Int): (Array[Long], Int) => Long =
+    (sig, band) => MinHash.bandHash(sig, band, rowsPerBand)
+
+  /** THE banded-LSH pair core. MinHash-LSH ([[minhashLsh]],
+    * [[minhashLshIncremental]]), SimHash ([[simhashPairs]]) and the
+    * embedding sign-LSH (`vigil.ann.Ann.cosineNearDupPairs` and its
+    * incremental face) differ only in their signature frame and in two
+    * functions:
+    *  - `key(sig, b)`: band b's bucket key, a pure function of the whole
+    *    signature, so the pair loop can re-derive ANY band's key;
+    *  - `test(sigA, sigB)`: the pair's value, negative to reject it.
+    *
+    * `sigs` is `(id: long, blk: string, sig: array<long>, is_new:
+    * boolean)` with unique ids; a bucket is (band, key, blk), so only
+    * same-block pairs are candidates. Every `sig` must have `sigLength`
+    * elements (the banding guard in [[bandKeys]]).
+    *
+    * What the core decides, once for every generator:
+    *  - '''cap''': each bucket keeps its `maxBucketSize` smallest ids
+    *    ([[cappedSortedMembers]]), so executor memory is bounded by the
+    *    cap even for a degenerate billion-member bucket. The cap is a
+    *    safety valve for degenerate data (thousands of byte-identical
+    *    docs, where exact dedup is the right tool); within the cap the
+    *    output is exact. Capped keys come from a cardinality-only
+    *    pre-pass (a shuffle of (band, key, blk) keys whose capped set is
+    *    collected and broadcast; bounded because capped buckets are the
+    *    rare case the cap exists for), so the input is consumed twice.
+    *  - '''emission''': a LAZY typed flatMap over each bucket's members,
+    *    not a UDF returning a pair array — a k-member cluster has C(k,2)
+    *    pairs, and materializing them per bucket OOMs executors once
+    *    clusters reach a few thousand members. Pairs of two `is_new =
+    *    false` members are dropped before any test: the incremental
+    *    contract (a batch face marks every row new, so it drops nothing).
+    *  - '''cross-band skip''': a true near-dup pair collides in ~every
+    *    band, so band b skips a pair when an EARLIER band's keys match
+    *    (the bucket membership test itself) AND that band's bucket was
+    *    not capped — the earlier band provably holds both members and
+    *    emits the pair. A first-colliding-band skip that ignores the caps
+    *    (tried once and removed) loses the pairs sliced out of a capped
+    *    earlier bucket. On dense corpora the skip saves far more than the
+    *    pre-pass costs (227 s → see BENCH/BASELINE.md round 3).
+    *  - '''dedup''': with no capped bucket, exactly the first colliding
+    *    band emits a pair, so each pair appears once and no dedup
+    *    exchange runs. With caps a pair can be sliced out of the earlier
+    *    bucket and re-emitted later: a `groupBy(id_a, id_b)` collapses
+    *    the duplicates (the value is a function of the two signatures, so
+    *    every copy carries the same value).
+    *  - '''rebalance''': the pairs leave hash-partitioned on id_a into an
+    *    EXPLICIT [[verifyPartitions]] count. The pair stage is partitioned
+    *    by BUCKET key and near-clique buckets make a downstream verify
+    *    straggler-bound if it stays fused there (measured on
+    *    neardupVerified: task time down but wall UP without the
+    *    rebalance); hash(id_a) is the distribution a pair join needs, and
+    *    a later sampling or sort pass re-reads these shuffle files
+    *    instead of re-running the pair stage. The explicit count keeps
+    *    byte-based AQE coalescing from folding the narrow-bytes,
+    *    fat-compute consumer into one wave.
+    *
+    * Static input assumed: the capped-key set is collected ONCE, when the
+    * frame is BUILT, and it both drives the skip and decides whether the
+    * dedup exchange is elided. Re-executing the returned frame after the
+    * source changed (a re-scanned mutable table, an evicted cache over
+    * changed input) plans against the stale snapshot: a bucket that
+    * became capped can then emit duplicate pairs with no dedup, or lose
+    * pairs to the skip. Rebuild the frame per run over a source that can
+    * change.
+    *
+    * Returns (id_a, id_b, value: double) with id_a < id_b, one row per
+    * pair.
+    */
+  private[vigil] def bandedPairs(
+      sigs: DataFrame, bands: Int, sigLength: Int, maxBucketSize: Int)(
+      key: (Array[Long], Int) => Long,
+      test: (Array[Long], Array[Long]) => Double): DataFrame = {
+    val keyed = bandKeys(sigs, bands, sigLength, key)
+    val skip = crossBandSkip.value
     val capped: Set[(Int, Long, String)] =
-      if (!crossBandSkip) Set.empty
-      else exploded
-        .groupBy("band", "bh", "blk").agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") > maxBucketSize)
-        .select("band", "bh", "blk")
+      if (!skip) Set.empty
+      else bucketSizes(keyed).filter(col("cnt") > maxBucketSize)
+        .select("band", "key", "blk")
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSet
+    val spark = sigs.sparkSession
     val cappedB = spark.sparkContext.broadcast(capped)
-    val doSkip = crossBandSkip
-    val newOnly = onlyNew
-
-    // member struct leads with the unique id, so adding is_new does not
-    // change the cap ordering — incremental slicing under caps is
-    // IDENTICAL to from-scratch slicing over the same union
-    val grouped = cappedSortedMembers(exploded, Seq("band", "bh", "blk"),
-      struct(col("id"), col("sig"), col("is_new")), maxBucketSize)
-
     import spark.implicits._
-    val raw = grouped
+    // the member struct leads with the unique id, so the cap keeps the
+    // same members whatever else the struct carries: incremental slicing
+    // under caps is IDENTICAL to from-scratch slicing over the same union
+    val pairs = cappedSortedMembers(keyed, Seq("band", "key", "blk"),
+      struct(col("id"), col("sig"), col("is_new")), maxBucketSize)
       .select(col("band"), col("blk"), col("members"))
       .as[(Int, String, Seq[(Long, Seq[Long], Boolean)])]
-      .flatMap { case (band, blkv, members) =>
+      .flatMap { case (band, blk, members) =>
         val cap = cappedB.value
         val noCaps = cap.isEmpty
         val ids = members.iterator.map(_._1).toArray
         val sg = members.iterator.map(_._2.toArray).toArray
         val nw = members.iterator.map(_._3).toArray
-        val n = ids.length
-        // per-member band hashes for the earlier bands, computed once per
-        // bucket member: the cross-band skip criterion IS bucket-key
-        // (band-hash) equality — buckets are keyed by bandHash, so an
-        // earlier band provably holds the pair iff the hashes match (a
-        // slice compare was strictly narrower than the actual bucket
-        // membership test, and cost rpb element compares per band where
-        // this is one long compare; the hash also feeds the cap lookup
-        // for free)
-        val bhs: Array[Array[Long]] =
-          if (doSkip && band > 0)
-            Array.tabulate(n)(i =>
-              Array.tabulate(band)(b => MinHash.bandHash(sg(i), b, rpb)))
+        // the earlier bands' keys, once per bucket member
+        val earlier =
+          if (skip && band > 0)
+            Array.tabulate(ids.length)(i => Array.tabulate(band)(b => key(sg(i), b)))
           else null
-        (0 until n).iterator.flatMap { i =>
-          ((i + 1) until n).iterator.flatMap { j =>
-            if (newOnly && !nw(i) && !nw(j)) Iterator.empty
+        def heldEarlier(i: Int, j: Int): Boolean = {
+          val ki = earlier(i); val kj = earlier(j)
+          var b = 0
+          while (b < band) {
+            if (ki(b) == kj(b) && (noCaps || !cap.contains((b, ki(b), blk)))) return true
+            b += 1
+          }
+          false
+        }
+        (0 until ids.length).iterator.flatMap { i =>
+          ((i + 1) until ids.length).iterator.flatMap { j =>
+            if ((!nw(i) && !nw(j)) || (earlier != null && heldEarlier(i, j)))
+              Iterator.empty
             else {
-              val a = sg(i); val c = sg(j)
-              // cross-band skip: an earlier matching band emits this pair
-              // unless its bucket was capped (pair may be sliced out there)
-              var skip = false
-              if (doSkip && band > 0) {
-                val bi = bhs(i); val bj = bhs(j)
-                var b = 0
-                while (!skip && b < band) {
-                  if (bi(b) == bj(b) && (noCaps ||
-                      !cap.contains((b, bi(b), blkv))))
-                    skip = true
-                  b += 1
-                }
-              }
-              if (skip) Iterator.empty
-              else {
-                val est = MinHash.estJaccardAtLeast(a, c, minEst)
-                if (est >= minEst) Iterator.single((ids(i), ids(j), est))
-                else Iterator.empty
-              }
+              val v = test(sg(i), sg(j))
+              if (v >= 0) Iterator.single((ids(i), ids(j), v)) else Iterator.empty
             }
           }
         }
       }
-      .toDF("id_a", "id_b", "est_jaccard")
-    // dedup across bands: with the skip active AND no capped bucket, band
-    // b emits a pair iff NO earlier band's hashes match — exactly the
-    // first colliding band emits, so each pair appears ONCE and the
-    // groupBy dedup is a no-op full exchange of the candidate stream
-    // (~5M rows at sf0.1): elide it. `capped` is driver-known before
-    // planning. With caps (a pair may be sliced out of the earlier
-    // band's bucket and re-emitted later) or without the skip (once per
-    // colliding band), the grouping still collapses duplicates; the est
-    // value is a function of the two full signatures only, so max over
-    // duplicates equals the single-emission value — identical output
-    // either way (DedupAnnSpec's cap/skip matrix locks it).
-    if (doSkip && capped.isEmpty) raw
-    else raw.groupBy("id_a", "id_b").agg(max("est_jaccard").as("est_jaccard"))
+      .toDF("id_a", "id_b", "value")
+      .repartition(verifyPartitions(sigs), col("id_a"))
+    if (skip && capped.isEmpty) pairs
+    else pairs.groupBy("id_a", "id_b").agg(max("value").as("value"))
   }
 
-  /** THE capped-bucket member shape, shared by every bucketed candidate
-    * generator (MinHash-LSH, SimHash, and the embedding sign-LSH in
-    * vigil.ann.Ann): cap membership BEFORE aggregating via row_number
-    * over the bucket key — the cap-smallest members by `member` order
-    * (deterministic: `member` starts with the unique id) — so the agg
-    * buffer is bounded by the cap even for a degenerate billion-member
-    * bucket, the window sort is spillable, and the window's hash
-    * partitioning satisfies the groupBy (ONE exchange; plan-asserted in
-    * DedupAnnSpec). slice-after-collect_list would
-    * materialize the whole bucket first — the bug class this helper
-    * exists to prevent from reappearing in any one variant.
+  /** The cross-band skip of [[bandedPairs]], read when a frame is built.
+    * Specs turn it off (`vigil.LshReference`) to build the reference pair
+    * sets the skip is checked against; nothing else does.
+    */
+  private[vigil] val crossBandSkip = new scala.util.DynamicVariable[Boolean](true)
+
+  /** `sigs` with one row per band: `band` and its bucket `key`. The
+    * banding guard: a `sig` whose length is not `sigLength` — in practice
+    * a STORED signature table computed with other banding parameters —
+    * would index past its end (an opaque ArrayIndexOutOfBounds) or band
+    * over a prefix (silently breaking the recall math the banding was
+    * chosen for), so it fails here, loudly.
+    */
+  private def bandKeys(
+      sigs: DataFrame, bands: Int, sigLength: Int,
+      key: (Array[Long], Int) => Long): DataFrame = {
+    val keysUdf = udf { (sig: Seq[Long]) =>
+      require(sig.length == sigLength,
+        s"signature length ${sig.length} != $sigLength — the signature" +
+          " table was computed with different banding parameters than" +
+          s" this query's ($bands bands)")
+      val a = sig.toArray
+      Array.tabulate(bands)(b => key(a, b))
+    }
+    sigs.select(col("*"), posexplode(keysUdf(col("sig"))).as(Seq("band", "key")))
+  }
+
+  /** Member count of every (band, key, blk) bucket of a [[bandKeys]] frame. */
+  private def bucketSizes(keyed: DataFrame): DataFrame =
+    keyed.groupBy("band", "key", "blk").agg(count(lit(1)).as("cnt"))
+
+  /** The capped-bucket member shape of [[bandedPairs]]: cap membership
+    * BEFORE aggregating via row_number over the bucket key — the
+    * cap-smallest members by `member` order (deterministic: `member`
+    * starts with the unique id) — so the agg buffer is bounded by the cap
+    * even for a degenerate billion-member bucket, the window sort is
+    * spillable, and the window's hash partitioning satisfies the groupBy
+    * (ONE exchange; plan-asserted in DedupAnnSpec). slice-after-
+    * collect_list would materialize the whole bucket first.
     * Returns keyCols + `members` (sorted array), buckets of ≥2 only.
     */
-  def cappedSortedMembers(
+  private def cappedSortedMembers(
       df: DataFrame, keyCols: Seq[String], member: Column,
       cap: Int): DataFrame = {
     val keys = keyCols.map(col)
@@ -965,20 +978,11 @@ object Dedup {
   def lshMaxBucket(
       df: DataFrame, textCol: String, idCol: String,
       bands: Int, rowsPerBand: Int, shingleK: Int,
-      seed: Long = 42L, blockCol: Option[String] = None): Long = {
-    val numHashes = bands * rowsPerBand
-    val rpb = rowsPerBand
-    val nb = bands
-    val sigUdf = udf { (t: String) =>
-      val sig = MinHash.signature(if (t == null) "" else t, numHashes, shingleK, seed)
-      Array.tabulate(nb)(b => MinHash.bandHash(sig, b, rpb))
-    }
-    val blk = blockCol.map(c => col(c).cast("string")).getOrElse(lit(""))
-    df.select(blk.as("blk"), sigUdf(col(textCol)).as("bhs"))
-      .select(col("blk"), posexplode(col("bhs")).as(Seq("band", "bh")))
-      .groupBy("band", "bh", "blk").agg(count(lit(1)).as("cnt"))
+      seed: Long = 42L, blockCol: Option[String] = None): Long =
+    bucketSizes(bandKeys(
+      computeSignatures(df, textCol, idCol, bands, rowsPerBand, shingleK, seed, blockCol),
+      bands, bands * rowsPerBand, minhashKey(rowsPerBand)))
       .agg(max("cnt")).collect()(0).getLong(0)
-  }
 
   // ---------- SimHash -----------------------------------------------------
 
@@ -1012,53 +1016,29 @@ object Dedup {
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxDist. Pigeonhole
     * blocking: split the 64-bit fingerprint into (maxDist+1) blocks; a
-    * qualifying pair must agree on at least one block → shuffle on
-    * (block_idx, block_value) only.
+    * qualifying pair must agree on at least one block. The pairs come from
+    * [[bandedPairs]] over one-element signatures (the fingerprint), with
+    * block b as band b's key and `hamming ≤ maxDist` as the in-bucket
+    * test — the same cap, cross-band skip, dedup and rebalance as
+    * [[minhashLsh]], and the same static-input assumption: the
+    * capped-bucket set is snapshotted when this frame is built.
     */
   def simhashPairs(
       df: DataFrame, textCol: String, idCol: String,
       maxDist: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
-    val nBlocks = maxDist + 1
-    val width = 64 / nBlocks
-    val fpUdf = udf((t: String) => SimHash.fingerprint(t))
-    val fps = df.select(col(idCol).as("id"), fpUdf(col(textCol)).as("fp"))
-
-    val blockCols = (0 until nBlocks).map { b =>
-      struct(lit(b).as("blk"),
-        shiftrightunsigned(col("fp"), b * width)
-          .bitwiseAND(lit((1L << width) - 1)).as("bv"))
-    }
-    val exploded = fps
-      .withColumn("br", explode(array(blockCols: _*)))
-      .select(col("br.blk").as("blk"), col("br.bv").as("bv"), col("id"), col("fp"))
-
-    val grouped = cappedSortedMembers(exploded, Seq("blk", "bv"),
-      struct(col("id"), col("fp")), maxBucketSize)
-
-    // lazy pair iterator — memory bounded by the member list, no C(k,2)
-    // arrays. Every matching block emits; the grouping deduplicates (a
-    // first-matching-block skip would lose pairs sliced out of an earlier
-    // block's capped bucket).
-    val spark = df.sparkSession
-    import spark.implicits._
-    val maxD = maxDist
-    grouped
-      .select(col("members"))
-      .as[Seq[(Long, Long)]]
-      .flatMap { members =>
-        val ids = members.iterator.map(_._1).toArray
-        val fp = members.iterator.map(_._2).toArray
-        val n = ids.length
-        (0 until n).iterator.flatMap { i =>
-          ((i + 1) until n).iterator.flatMap { j =>
-            val d = SimHash.hamming(fp(i), fp(j))
-            if (d <= maxD) Iterator.single((ids(i), ids(j), d))
-            else Iterator.empty
-          }
-        }
-      }
-      .toDF("id_a", "id_b", "hamming")
-      .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
+    val width = 64 / (maxDist + 1)
+    // the low `width` bits; at width 64 (maxDist = 0) the whole fingerprint
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    val fpUdf = udf((t: String) => Array(SimHash.fingerprint(t)))
+    val sigs = df.select(col(idCol).as("id"), lit("").as("blk"),
+      fpUdf(col(textCol)).as("sig"), lit(true).as("is_new"))
+    bandedPairs(sigs, maxDist + 1, 1, maxBucketSize)(
+      (fp, b) => (fp(0) >>> (b * width)) & mask,
+      (a, b) => {
+        val d = SimHash.hamming(a(0), b(0))
+        if (d <= maxDist) d.toDouble else -1.0
+      })
+      .select(col("id_a"), col("id_b"), col("value").cast("int").as("hamming"))
   }
 
   /** The verifier's tokenization, shared by [[neardupVerified]] and
@@ -1109,11 +1089,12 @@ object Dedup {
     array_sort(transform(array_distinct(gramArr), g => xxhash64(g)))
   }
 
-  /** Partition count for the verify-join candidate rebalance: the
+  /** Partition count for [[bandedPairs]]' candidate rebalance: the
     * session's configured shuffle parallelism (the scale-adaptive knob
     * clusters already size), passed as an EXPLICIT repartition count so
     * byte-based AQE coalescing cannot fold the narrow-bytes, fat-compute
-    * merge-walk stage into a single wave (the r4 decideWindowed lesson).
+    * verify stage into a single wave (the decideWindowed lesson in
+    * CLAUDE.md).
     */
   private def verifyPartitions(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
@@ -1168,21 +1149,12 @@ object Dedup {
       seed: Long = 42L, maxBucketSize: Int = 100000,
       blockCol: Option[String] = None,
       shingleK: Int = 1): DataFrame = {
-    // narrow (16-byte-row) rebalance of the candidate stream: the fused
-    // est-flatMap stage is partitioned by BUCKET key, and near-clique
-    // buckets make the downstream join+walk straggler-bound if it stays
-    // fused there (measured: task time down but wall UP without this).
-    // hash(id_a) is also exactly the distribution a sort-merge pair join
-    // needs at cluster scale, and the exchange's shuffle files are reused
-    // by any later sampling/sort pass instead of re-running the est stage.
-    // EXPLICIT count (r4 lesson): byte-based AQE coalescing would fold
-    // this narrow-bytes / fat-compute stage into one straggler wave
+    // the candidates arrive hash-partitioned on id_a (the core's rebalance)
     val cands = minhashLsh(df, textCol, idCol, bands, rowsPerBand,
       shingleK = shingleK, seed = seed,
       minEst = math.max(0.0, minJaccard - 0.2),
       maxBucketSize = maxBucketSize, blockCol = blockCol)
       .select("id_a", "id_b")
-      .repartition(verifyPartitions(df), col("id_a"))
     // hashed tokens through the join + merge walk (3-4× narrower shuffle
     // rows, long compares) — see [[sortedGramTokenHashes]] for the
     // equivalence argument and the spec that locks it
@@ -1244,13 +1216,10 @@ object Dedup {
     val newSigs = persistSigs(computeSignatures(newBatch, textCol, idCol,
       bands, rowsPerBand, shingleK = shingleK, seed = seed,
       blockCol = blockCol))
-    // same narrow candidate rebalance as [[neardupVerified]] (skew +
-    // sampling-reuse + explicit-count rationale documented there)
     val cands = minhashLshIncremental(corpusSigs, newSigs, bands,
       rowsPerBand, minEst = math.max(0.0, minJaccard - 0.2),
       maxBucketSize = maxBucketSize)
       .select("id_a", "id_b")
-      .repartition(verifyPartitions(newBatch), col("id_a"))
     val toks = corpusText
       .select(col(idCol).as("id"), col(textCol).as("t"))
       .unionByName(newBatch.select(col(idCol).as("id"), col(textCol).as("t")))

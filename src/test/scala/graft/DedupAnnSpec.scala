@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.{ComponentsBudget, TextStats}
+import vigil.{ComponentsBudget, LshReference, TextStats}
 import vigil.ann.Ann
 import vigil.dedup.Dedup
 
@@ -65,6 +65,12 @@ class DedupAnnSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(!pairs.contains((0L, 3L)))
+    // maxDist = 0 keys each bucket on the whole fingerprint: the exact-dup
+    // pair, renumbered to the two largest ids, survives a cap of 2
+    val renumbered = corpus.withColumn("doc_id", pmod(col("doc_id") + 4, lit(6)))
+    val exact = Dedup.simhashPairs(renumbered, "text", "doc_id", maxDist = 0,
+      maxBucketSize = 2).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(exact == Set((4L, 5L)), s"maxDist = 0 under a cap of 2: $exact")
   }
 
   test("jaccard pairs: exact dup = 1.0 within block") {
@@ -290,16 +296,6 @@ class DedupAnnSpec extends AnyFunSuite {
         "no corpus×corpus pair may be emitted")
       assert(expected.nonEmpty, "fixture must actually exercise the slice")
     }
-
-    // precomputedSigs short-circuit: identical output to the internal pass
-    val allSigs = Dedup.computeSignatures(docs, "text", "doc_id",
-      bands = 24, rowsPerBand = 6, shingleK = 1)
-    val viaPre = toSet(Dedup.minhashLsh(docs, "text", "doc_id",
-      bands = 24, rowsPerBand = 6, shingleK = 1, minEst = 0.7,
-      precomputedSigs = Some(allSigs)))
-    val direct = toSet(Dedup.minhashLsh(docs, "text", "doc_id",
-      bands = 24, rowsPerBand = 6, shingleK = 1, minEst = 0.7))
-    assert(viaPre == direct)
   }
 
   test("incremental cosine near-dup equals the new-touching slice of from-scratch") {
@@ -336,6 +332,22 @@ class DedupAnnSpec extends AnyFunSuite {
       s"missing=${(expected -- inc).take(3)}, extra=${(inc -- expected).take(3)}")
     assert(expected.nonEmpty && full.size > expected.size,
       "fixture must exercise both emission and suppression")
+  }
+
+  /** 150 seeded random 64-dim vectors plus a perturbed copy of each at
+    * id + 1000 (cos ≈ 0.9999+). Returns (all, batch, corpus): the batch is
+    * every 3rd copy, the corpus the rest, so an incremental face must emit
+    * new×corpus pairs and suppress the equally-real corpus×corpus ones.
+    */
+  private def plantedVectors(): (DataFrame, DataFrame, DataFrame) = {
+    val rng = new scala.util.Random(3)
+    val base = (0L until 150L).map(i => (i, Seq.fill(64)(rng.nextGaussian())))
+    val copies = base.map { case (i, v) =>
+      (i + 1000L, v.map(x => x + rng.nextGaussian() * 0.003))
+    }
+    val all = (base ++ copies).toDF("vec_id", "embedding")
+    val isBatch = col("vec_id") >= 1000L && pmod(col("vec_id"), lit(3)) === 0
+    (all, all.filter(isBatch), all.filter(!isBatch))
   }
 
   test("recall-designed lshTopK recovers every planted neighbor in rank order") {
@@ -441,35 +453,75 @@ class DedupAnnSpec extends AnyFunSuite {
 
   test("cross-band skip is exact: skip-on equals skip-off, with and without caps") {
     // the r2 lesson: a first-colliding-band skip silently loses pairs
-    // sliced out of an earlier band's CAPPED bucket. The r3 capped-aware
-    // skip must emit the identical pair set as no-skip at ANY cap — under
-    // a tiny cap both modes lose the same (documented) sliced-out pairs,
-    // never different ones.
+    // sliced out of an earlier band's CAPPED bucket. The pair core's
+    // capped-aware skip must emit the identical pair set as no-skip at ANY
+    // cap, for every generator and face — under a tiny cap both modes lose
+    // the same (documented) sliced-out pairs, never different ones.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def pairs(cap: Int, skip: Boolean) =
-      Dedup.minhashLsh(docs, "text", "doc_id", bands = 24, rowsPerBand = 6,
-        shingleK = 1, minEst = 0.7, maxBucketSize = cap, crossBandSkip = skip)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    for (cap <- Seq(2, 8, 100000)) {
-      val on = pairs(cap, skip = true)
-      val off = pairs(cap, skip = false)
-      assert(on == off,
-        s"cap=$cap: skip-on ${on.size} pairs != skip-off ${off.size}; " +
-          s"missing=${(off -- on).take(3)} extra=${(on -- off).take(3)}")
+    val isBatchDoc = pmod(col("doc_id"), lit(3)) === 0
+    def minhashSigs(df: DataFrame) = Dedup.computeSignatures(df, "text",
+      "doc_id", bands = 24, rowsPerBand = 6, shingleK = 1)
+    val (vecs, vecBatch, vecCorpus) = plantedVectors()
+    // 4-bit keys: ~19 vectors per bucket, so caps 2 and 8 bite
+    val vecSigs = Ann.computeSignSignatures(vecCorpus, "vec_id", "embedding",
+      bandBits = 4, bands = 8)
+    val faces: Seq[(String, Int => DataFrame)] = Seq(
+      "minhashLsh" -> (cap => Dedup.minhashLsh(docs, "text", "doc_id",
+        bands = 24, rowsPerBand = 6, shingleK = 1, minEst = 0.7,
+        maxBucketSize = cap)),
+      "minhashLshIncremental" -> (cap => Dedup.minhashLshIncremental(
+        minhashSigs(docs.filter(!isBatchDoc)), minhashSigs(docs.filter(isBatchDoc)),
+        bands = 24, rowsPerBand = 6, minEst = 0.7, maxBucketSize = cap)),
+      "simhashPairs" -> (cap => Dedup.simhashPairs(docs, "text", "doc_id",
+        maxDist = 3, maxBucketSize = cap)),
+      "cosineNearDupPairs" -> (cap => Ann.cosineNearDupPairs(vecs, "vec_id",
+        "embedding", minCos = 0.95, bandBits = 4, bands = 8, maxBucketSize = cap)),
+      "cosineNearDupPairsIncremental" -> (cap => Ann.cosineNearDupPairsIncremental(
+        vecSigs, vecCorpus, vecBatch, "vec_id", "embedding", minCos = 0.95,
+        bandBits = 4, bands = 8, maxBucketSize = cap)))
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2)))
+    val sizes = scala.collection.mutable.Map.empty[(String, Int), Int]
+    for ((face, pairs) <- faces; cap <- Seq(2, 8, 100000)) {
+      val on = rows(pairs(cap))
+      val off = rows(LshReference.skipOff(pairs(cap)))
+      assert(on.toSet == off.toSet,
+        s"$face cap=$cap: skip-on ${on.toSet.size} pairs != skip-off " +
+          s"${off.toSet.size}; missing=${(off.toSet -- on).take(3)} " +
+          s"extra=${(on.toSet -- off).take(3)}")
+      sizes((face, cap)) = on.toSet.size
+      if (cap == 100000) {
+        // MULTIPLICITY lock: with no bucket capped the pair-dedup
+        // groupBy is ELIDED on the claim that each pair is emitted exactly
+        // once (first colliding band only). The set compare above would
+        // collapse a duplicate-emission regression, so count rows.
+        val dups = on.groupBy(p => (p._1, p._2)).filter(_._2.length > 1).keys
+        assert(dups.isEmpty,
+          s"$face: uncapped skip path emitted duplicate pairs: ${dups.take(3).toList}")
+      }
     }
-    // MULTIPLICITY lock (r7): with the skip on and no bucket capped, the
-    // pair-dedup groupBy is ELIDED on the claim that each pair is emitted
-    // exactly once (first colliding band only). A .toSet compare would
-    // silently collapse a duplicate-emission regression — assert row
-    // multiplicity directly, since duplicates would now flow straight
-    // into every downstream consumer.
-    val rows = Dedup.minhashLsh(docs, "text", "doc_id", bands = 24,
-      rowsPerBand = 6, shingleK = 1, minEst = 0.7,
-      maxBucketSize = 100000, crossBandSkip = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val dups = rows.groupBy(identity).filter(_._2.length > 1).keys
-    assert(dups.isEmpty,
-      s"uncapped skip path emitted duplicate pairs: ${dups.take(3).toList}")
+    // the fixture exercises the caps: a cap of 2 slices pairs out of
+    // every face (and the uncapped run is not empty)
+    faces.foreach { case (face, _) =>
+      assert(sizes((face, 2)) < sizes((face, 100000)), s"$face: $sizes")
+    }
+  }
+
+  test("banding guard: sign signatures stored at 8 bands fail a 6-band query") {
+    // a stored table built with other banding parameters used to index
+    // past the end of the shorter signature in the hamming loop, or
+    // compare a prefix without a word
+    val (_, batch, corpus) = plantedVectors()
+    val sigs8 = Ann.computeSignSignatures(corpus, "vec_id", "embedding",
+      bandBits = 8, bands = 8)
+    val e = intercept[Exception] {
+      Ann.cosineNearDupPairsIncremental(sigs8, corpus, batch, "vec_id",
+        "embedding", minCos = 0.95, bandBits = 8, bands = 6).collect()
+    }
+    val guard = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+    assert(guard.exists(_.getMessage.contains("different banding parameters")),
+      s"expected the banding guard, got $e")
   }
 
   test("randomized exactness: neardupVerified equals brute on fuzz corpora") {
@@ -578,10 +630,19 @@ class DedupAnnSpec extends AnyFunSuite {
     // none inlined into a join condition (which would add occurrences)
     val walks = "sorted_jaccard_ge".r.findAllIn(phys).size
     assert(walks == 1, s"expected exactly 1 fused walk in the plan, saw $walks:\n$phys")
-    val pairDedup = "hashpartitioning\\(id_a#\\d+L?, id_b".r.findAllIn(phys).size
-    assert(pairDedup == 0,
+    val pairDedup = "hashpartitioning\\(id_a#\\d+L?, id_b".r
+    assert(pairDedup.findAllIn(phys).isEmpty,
       s"expected no (id_a, id_b) dedup exchange on the uncapped skip path:\n" +
         phys.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
+    // the sign-LSH generator rides the same core: no dedup exchange either
+    val rng = new scala.util.Random(7)
+    val vecs = (0L until 60L).map(i => (i, Seq.fill(64)(rng.nextGaussian())))
+      .toDF("vec_id", "embedding")
+    val vphys = Ann.cosineNearDupPairs(vecs, "vec_id", "embedding",
+      minCos = 0.95).queryExecution.executedPlan.toString
+    assert(pairDedup.findAllIn(vphys).isEmpty,
+      s"expected no (id_a, id_b) dedup exchange in cosineNearDupPairs:\n" +
+        vphys.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
   }
 
   test("sf0.1 density gate: no LSH bucket approaches the cap on real data") {

@@ -14,11 +14,15 @@ import scala.jdk.CollectionConverters._
   * per-turn review kernel, `q_conv_assembly`, `q_pii_scrub` and
   * `q_lang_score` before the streaming refactor, and `q_ppl_buckets`,
   * `q_lm_buckets` and `q_quality_classifier` before the single-pass turn
-  * kernel.
+  * kernel, and the four queries that reach `Dedup.neardupVerified`
+  * (`q_doc_filter`, `q_doc_filter_build`, `q_doc_filter_incremental`,
+  * `q_pretrain_pipeline`) before the banded-LSH pair core.
   *
   * The transcript queries read no file: `SparkEntry.transcripts` takes its
   * scale from the directory name alone (sf0.01 → 2,000 Synth
-  * conversations). The other queries read the sf0.01 documents table.
+  * conversations). The other queries read the sf0.01 documents table;
+  * `q_doc_filter_build` writes the stored tables that
+  * `q_doc_filter_incremental`, locked after it, reads.
   *
   * The suites share one local[4] SparkContext, and a JVM holds only one, so
   * the local[1] hash comes from a child JVM running [[FlagshipLockSpec.main]]
@@ -77,6 +81,15 @@ object FlagshipLockSpec {
   /** `rows:sum of xxhash64` of `q_quality_classifier` at sf0.01. */
   val QualityClassifier = "500:84982561720998424686"
 
+  /** `rows:sum of xxhash64` of `q_doc_filter` at sf0.01. */
+  val DocFilter = "500:-37729896746840379503"
+  /** `rows:sum of xxhash64` of `q_doc_filter_build` at sf0.01. */
+  val DocFilterBuild = "3:20070728643964334091"
+  /** `rows:sum of xxhash64` of `q_doc_filter_incremental` at sf0.01. */
+  val DocFilterIncremental = "167:57463001934804303779"
+  /** `rows:sum of xxhash64` of `q_pretrain_pipeline` at sf0.01. */
+  val PretrainPipeline = "23:3324280970834440793"
+
   /** The sf0.01 test-data directory the locked queries run over. */
   val SfDir = "/root/testdata/sf0.01"
 
@@ -89,7 +102,11 @@ object FlagshipLockSpec {
     "q_lang_score" -> LangScore,
     "q_ppl_buckets" -> PplBuckets,
     "q_lm_buckets" -> LmBuckets,
-    "q_quality_classifier" -> QualityClassifier)
+    "q_quality_classifier" -> QualityClassifier,
+    "q_doc_filter" -> DocFilter,
+    "q_doc_filter_build" -> DocFilterBuild,
+    "q_doc_filter_incremental" -> DocFilterIncremental,
+    "q_pretrain_pipeline" -> PretrainPipeline)
 
   private val Prefix = "row hash: "
 
