@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into Spark 4's `private[sql]` Column↔Expression conversions
   * (org.apache.spark.sql.classic.ExpressionUtils). Spark 4 made Column
@@ -23,8 +26,23 @@ object VigilShim {
     */
   def unpersistCheckpointed(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ =>
     }
+
+  /** A checkpointed frame (its plan one `LogicalRDD`) over the same RDD,
+    * with the size estimate of `rows` rows. A checkpoint keeps the
+    * estimate of the plan it cut, and a join estimates the product of its
+    * sides, so a frame joined with itself and checkpointed again squares
+    * its estimate each time: after ~20 pointer jumps the driver spent
+    * minutes multiplying a BigInt of millions of digits.
+    */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = df.queryExecution.analyzed match {
+    case lr: LogicalRDD =>
+      val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+      val stats = Statistics(EstimationUtils.getOutputSize(lr.output, rows), Some(rows))
+      classic.Dataset.ofRows(session, LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
+        lr.outputOrdering, lr.isStreaming, lr.stream)(session, Some(stats)))
+    case other => throw new IllegalArgumentException(s"not a checkpointed frame: ${other.nodeName}")
+  }
 }

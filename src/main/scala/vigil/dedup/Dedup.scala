@@ -3,7 +3,7 @@ package vigil.dedup
 import scala.collection.mutable.ArrayBuilder
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, VigilShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -590,6 +590,7 @@ object Dedup {
     */
   private val lastSigCache =
     new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
+
   /** Connected components over an undirected near-dup pair graph:
     * (id, component) for EVERY node, component = smallest reachable id —
     * the cluster-canonicalization step of a dedup pipeline (keep one
@@ -607,36 +608,37 @@ object Dedup {
     * id as its label (and so shares it with every node whose smallest
     * neighbor it also is). Pairs with a null endpoint are ignored.
     *
-    * Driver finish: when the canonical pair list has at most
-    * `DriverEdges` = 2^20 edges, it is collected as primitive arrays and
-    * finished on the driver. Round 1 is replayed exactly — `comp0`, then
-    * one contracted edge `(comp0(s), comp0(d))` per pair whose endpoints
-    * are both nodes — with node membership of the endpoint ids from one
-    * broadcast semi-join against `nodes` (a filter, no shuffle); a
-    * union-find with the smallest id as root finishes the components, and
-    * every node is remapped in one lazy pass through a broadcast of sorted
-    * primitive arrays. Driver memory is O(2^20) primitive longs (≤ 2·2^20
-    * endpoint ids, their labels and the edge arrays: tens of MB), and no
-    * checkpoint is written.
+    * Two paths, one semantics. Round 1 is `comp0`, then one contracted
+    * edge `(comp0(s), comp0(d))` per pair whose endpoints are both nodes.
+    *  - '''Driver finish''': when the canonical pair list has at most
+    *    `DriverEdges` = 2^20 edges, it is collected as primitive arrays,
+    *    round 1 is replayed exactly (node membership of the endpoint ids
+    *    from one broadcast semi-join against `nodes`: a filter, no
+    *    shuffle), a union-find with the smallest id as root finishes the
+    *    components, and every node is remapped in one lazy pass through a
+    *    broadcast of sorted primitive arrays. Driver memory is O(2^20)
+    *    primitive longs (tens of MB), and no checkpoint is written.
+    *  - '''Distributed label rounds''' above the budget: round 1 is one
+    *    aggregation over the cached pair list; every later round hooks
+    *    each label of the CONTRACTED edge set to its smallest neighbor,
+    *    shortcuts every hook tree to its root by pointer jumping until no
+    *    pointer moves, and contracts the edges through the roots
+    *    (self-loops dropped, duplicates merged), until no edge is left.
+    *    Each frame is `iterBoundary`-truncated: persist alone is NOT
+    *    enough for an iterative frame, whose self-joins double the
+    *    LOGICAL plan per step (the driver OOMed just rendering it at
+    *    sf0.1).
     *
-    * Above the budget the rounds run distributed: round 1 is one
-    * aggregation over the cached pair list; later rounds iterate a
-    * min-label hook plus one pointer jump on the CONTRACTED edge set
-    * (edges remapped through the current labels, self-loops dropped,
-    * duplicates merged), which near-dup graphs shrink fast. Each round's
-    * frames are `localCheckpoint`ed — persist alone is NOT enough for an
-    * iterative frame: the union references labels twice, so the LOGICAL
-    * plan doubles per round (2^k nodes) and the driver OOMs just
-    * RENDERING the plan string (measured: OOM at sf0.1 → 8 s). If
-    * `maxIter` rounds leave contracted edges, the operator warns and
-    * finishes those label edges by the large-star/small-star reshaping
-    * (Kiveris et al. 2014, [[connectedComponentsStar]]), so every path
-    * gives the same labels.
+    * Round bound: at most 2⌈log₂(2·E₁)⌉ + 2 rounds for E₁ edges left
+    * after round 1, on any graph (a sorted path included); it fails
+    * loudly past that. It holds because each round's roots are the local
+    * minima of its contracted graph and every label points at its root:
+    *   a root survives the next round as a local minimum only if some
+    *   label hooked to it, so the labels with edges halve every 2 rounds.
     */
   def connectedComponents(
-      nodes: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 25): DataFrame =
-    componentsWithin(nodes, idCol, pairs, maxIter, DriverEdges)
+      nodes: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    componentsWithin(nodes, idCol, pairs, DriverEdges)
 
   /** Edge budget of [[connectedComponents]]' driver finish. */
   private val DriverEdges = 1 << 20
@@ -647,18 +649,17 @@ object Dedup {
     */
   private[vigil] def componentsWithin(
       nodes: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int, driverEdges: Int): DataFrame = {
+      driverEdges: Int): DataFrame = {
     // persist the CANONICAL one-direction pair list ONCE: it is two long
     // columns (tiny), but its lineage is the whole upstream dedup
-    // pipeline — without the persist every iteration's convergence probe
-    // re-runs LSH + verify (OOMed at sf0.1: 965k-pair graph, ~5 s verify
-    // per re-run). Persisting the doubled (src,dst)∪(dst,src) union
-    // instead would evaluate that expensive lineage once PER UNION
-    // BRANCH while materializing the cache (exchange reuse dedups the
-    // shuffles, not the post-join verify projection); deriving both
-    // directions FROM the cache costs only a second cache scan per round.
+    // pipeline — without the persist every round's count re-runs LSH +
+    // verify (OOMed at sf0.1: 965k-pair graph, ~5 s verify per re-run).
+    // Persisting the doubled (u,v)∪(v,u) union instead would evaluate
+    // that expensive lineage once PER UNION BRANCH while materializing
+    // the cache; deriving both directions FROM the cache costs only a
+    // second cache scan.
     val canonPairs = pairs
-      .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
+      .select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the count materializes the cache that either path reads next
     if (canonPairs.count() <= driverEdges) {
@@ -668,101 +669,98 @@ object Dedup {
     }
     // Round 1 needs NO labels join: with comp(v) initialized to v, the
     // neighbor-min fold is simply min(v, min Γ(v)) — one aggregation over
-    // the cached pair list. Later rounds then iterate on a CONTRACTED
-    // edge set (edges remapped through the current labels, self-loops
-    // dropped, duplicates merged): near-dup pair graphs are dense
-    // near-cliques, so the contracted set collapses to a few edges after
-    // one round and each subsequent round costs a trivial job instead of
-    // a full 2|pairs|-row join (the previous label-propagation loop
-    // re-joined the full edge list EVERY round — measured ~2.5 s/round
-    // × 6 rounds at sf0.1, see BENCH/BASELINE.md r7). Convergence =
-    // contracted edge set empty: every adjacent label pair has merged,
-    // so each component carries exactly one label — its minimum id
-    // (labels only decrease, and a component's min always maps to
-    // itself). The per-node mapping is a lazy chain of label-remap
-    // joins (node-count-sized, checkpoint-truncated) materialized once
-    // by the caller's action.
+    // the cached pair list. Later rounds work on the CONTRACTED edge set,
+    // which near-dup graphs (dense near-cliques) collapse to a few edges
+    // in one round. Labels only decrease and a component's min always
+    // maps to itself, so once no contracted edge is left each component
+    // carries exactly one label, its minimum id. The per-node mapping is
+    // a lazy chain of label-remap joins (node-count-sized,
+    // checkpoint-truncated) materialized once by the caller's action.
     val comp0 = nodes
       .select(col(idCol).cast("long").as("id"))
-      .join(canonPairs
-          .select(col("src").as("a"), col("dst").as("b"))
-          .unionByName(canonPairs.select(col("dst").as("a"), col("src").as("b")))
-          .groupBy(col("a")).agg(min(col("b")).as("nmin")),
-        col("id") === col("a"), "left")
+      .join(neighborMin(canonPairs), col("id") === col("a"), "left")
       .select(col("id"), least(col("id"), col("nmin")).as("comp"))
       .iterBoundary(false)
     var mapping = comp0
-    var contracted = canonPairs
-      .join(comp0.as("ma"), canonPairs("src") === col("ma.id"))
-      .join(comp0.as("mb"), canonPairs("dst") === col("mb.id"))
-      .select(col("ma.comp").as("x"), col("mb.comp").as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .distinct()
-      .iterBoundary(false)
-    // ONE action: materializes comp0 + the contracted edge set and
-    // answers convergence
+    var contracted = contract(canonPairs, comp0)
+    // ONE action: materializes comp0 + the contracted edge set
     var nEdges = contracted.count()
-    var iter = 1
-    while (nEdges > 0L && iter < maxIter) {
-      // min-label hook over the contracted labels + one pointer jump
-      val nmin = contracted
-        .select(col("u").as("a"), col("v").as("b"))
-        .unionByName(contracted.select(col("v").as("a"), col("u").as("b")))
-        .groupBy(col("a")).agg(min(col("b")).as("nb"))
-      val f1 = nmin.select(col("a").as("lbl"),
-        least(col("a"), col("nb")).as("f1"))
-      val f = f1.as("x").join(f1.as("y"), col("x.f1") === col("y.lbl"), "left")
-        .select(col("x.lbl").as("lbl"),
-          least(col("x.f1"), coalesce(col("y.f1"), col("x.f1"))).as("f"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    contracted = VigilShim.withRowCount(contracted, nEdges)
+    val maxRounds =
+      2 * (64 - java.lang.Long.numberOfLeadingZeros(2 * nEdges - 1)) + 2
+    var round = 1
+    while (nEdges > 0L) {
+      round += 1
+      if (round > maxRounds) throw new IllegalStateException(
+        s"connectedComponents: $nEdges contracted edges left after " +
+          s"${round - 1} label rounds, past the bound of $maxRounds")
+      val hook = neighborMin(contracted)
+        .select(col("a").as("id"), least(col("a"), col("nmin")).as("comp"))
+      val f = shortcut(hook)
       // remap nodes (labels without contracted edges keep their comp) —
       // lazy: a node-count-sized join chain, materialized at the end
-      mapping = mapping.join(f, mapping("comp") === f("lbl"), "left")
-        .select(mapping("id").as("id"),
-          coalesce(col("f"), mapping("comp")).as("comp"))
+      mapping = mapping.join(f, mapping("comp") === f("id"), "left")
+        .select(mapping("id"), coalesce(f("comp"), mapping("comp")).as("comp"))
         .iterBoundary(false)
-      // contract the edge set through f (inner joins: every contracted
-      // endpoint has an edge, so f covers it)
-      val next = contracted
-        .join(f.as("fu"), contracted("u") === col("fu.lbl"))
-        .join(f.as("fv"), contracted("v") === col("fv.lbl"))
-        .select(col("fu.f").as("x"), col("fv.f").as("y"))
-        .filter(col("x") =!= col("y"))
-        .select(least(col("x"), col("y")).as("u"),
-          greatest(col("x"), col("y")).as("v"))
-        .distinct()
-        .iterBoundary(false)
+      val next = contract(contracted, f)
       nEdges = next.count()
-      f.unpersist(blocking = false)
-      contracted = next
-      iter += 1
+      // nothing reads this round's input edges again: f and `next` are
+      // materialized, and the mapping chain reads f, not the edges
+      VigilShim.unpersistCheckpointed(contracted)
+      contracted = VigilShim.withRowCount(next, nEdges)
     }
-    if (nEdges > 0L) {
-      // adversarial-diameter fallback: a path whose ids run in path order
-      // loses only two labels per round (hook to the smaller neighbor,
-      // then one pointer jump), so landing here means a long chain-like
-      // component. The large-star/small-star reshaping contracts ANY
-      // graph to stars in O(log² n) rounds independent of how the label
-      // happened to propagate. It runs over the checkpointed CONTRACTED
-      // label edges, not the raw pairs: a non-node endpoint then links
-      // nothing here either, and the pairs lineage is not re-run.
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents: $nEdges contracted edges left after $maxIter " +
-          "label rounds — finishing them by large-star/small-star")
-      val roots = starContract(contracted.select(col("v").as("u"), col("u").as("v")))
-        .select(col("id").as("lbl"), col("comp").as("root"))
-      mapping = mapping.join(roots, mapping("comp") === roots("lbl"), "left")
-        .select(mapping("id").as("id"),
-          coalesce(col("root"), mapping("comp")).as("comp"))
-    }
+    VigilShim.unpersistCheckpointed(contracted)
     // the mapping chain is backed by materialized checkpoints (comp0 and
-    // every round's contracted edge frame); the pairs cache can go — a
-    // later eviction means recompute of the EDGES only, never of the
-    // iteration chain
+    // every round's shortcut labels); the pairs cache can go
     canonPairs.unpersist(blocking = false)
     mapping.select(col("id").as(idCol), col("comp").as("component"))
+  }
+
+  /** (a, nmin): each endpoint of the undirected edges `(u, v)` with its
+    * smallest neighbor.
+    */
+  private def neighborMin(edges: DataFrame): DataFrame =
+    edges.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
+      .groupBy(col("a")).agg(min(col("b")).as("nmin"))
+
+  /** The edges `(u, v)` relabeled through `labels` (id, comp), as the
+    * canonical `u < v` edge set without self-loops or duplicates. Inner
+    * joins: an endpoint without a label links nothing.
+    */
+  private def contract(edges: DataFrame, labels: DataFrame): DataFrame =
+    edges
+      .join(labels.as("lu"), edges("u") === col("lu.id"))
+      .join(labels.as("lv"), edges("v") === col("lv.id"))
+      .select(col("lu.comp").as("x"), col("lv.comp").as("y"))
+      .filter(col("x") =!= col("y"))
+      .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
+      .distinct()
+      .iterBoundary(false)
+
+  /** Full pointer jumping over a hook forest `(id, comp)`, comp ≤ id, in
+    * which every pointer target is itself an id: `f ← f∘f` until no
+    * pointer moves, so every id points at its tree's root. One action per
+    * jump materializes it and counts its rows and moved pointers; the
+    * jump it replaced is released then, so the blocks held do not grow
+    * with the number of jumps, and the row count replaces the squared
+    * size estimate of the self-join. The result (id, comp, moved) stays
+    * materialized.
+    */
+  private def shortcut(hook: DataFrame): DataFrame = {
+    var f = hook.iterBoundary(false)
+    var moved = 1L
+    while (moved > 0L) {
+      val next = f.as("x").join(f.as("y"), col("x.comp") === col("y.id"))
+        .select(col("x.id").as("id"), col("y.comp").as("comp"),
+          (col("y.comp") =!= col("x.comp")).as("moved"))
+        .iterBoundary(false)
+      val counts = next.agg(count(lit(1)), count(when(col("moved"), true))).head()
+      moved = counts.getLong(1)
+      VigilShim.unpersistCheckpointed(f)
+      f = VigilShim.withRowCount(next, counts.getLong(0))
+    }
+    f
   }
 
   /** [[connectedComponents]]' driver finish over the whole counted pair
@@ -861,110 +859,11 @@ object Dedup {
     }.apply(c)
   }
 
-  /** Connected components by alternating large-star/small-star edge
-    * reshaping (Kiveris et al. 2014, "Connected Components in MapReduce
-    * and Beyond") — the adversarial-diameter path behind
-    * [[connectedComponents]], also callable directly when the input graph
-    * is KNOWN to be long-chained (citation graphs, temporal link chains)
-    * rather than the near-clique shape verified near-dup graphs have.
-    *
-    * Per round (both steps are one groupBy-min + one join, keyed on a
-    * node id — no global structure, executor memory bounded by a
-    * neighborhood's min, not its size):
-    *  - '''large-star''': every node `a` links each LARGER neighbor to
-    *    `min(Γ(a) ∪ {a})` — long tails collapse toward small ids without
-    *    ever increasing edge count;
-    *  - '''small-star''': every node `u` links its smaller neighbors and
-    *    itself to `min(Γ⁻(u) ∪ {u})` — local stars canonicalize.
-    * The edge set converges to disjoint stars rooted at each component's
-    * minimum id in O(log² n) rounds on ANY graph (typically ~log n); the
-    * fixpoint check is exact set equality (two anti-joins over
-    * checkpointed rounds), not a hash heuristic.
-    */
-  def connectedComponentsStar(
-      nodes: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 50): DataFrame = {
-    val canon = pairs
-      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      .distinct()
-      .iterBoundary(true)
-    val roots = starContract(canon, maxIter)
-    nodes.select(col(idCol).cast("long").as("id"))
-      .join(roots, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("comp"), col("id")).as("component"))
-  }
-
-  /** Core star-contraction loop over canonical `(u > v)` edges: `(id,
-    * comp)` for every id with an edge that is not its component's
-    * minimum. Every round is `localCheckpoint`ed for the same reason as
-    * the label loop: iterative self-referencing plans double per round
-    * otherwise.
-    */
-  private def starContract(
-      canonicalEdges: DataFrame, maxIter: Int = 50): DataFrame = {
-    var edges = canonicalEdges
-    // checkpoint-block hygiene (r6 ADVICE): frames THIS loop checkpointed
-    // are released once the round that consumed them is over — an
-    // adversarial many-round graph otherwise accumulates O(rounds) block
-    // sets until driver GC. The caller's canonicalEdges is never touched.
-    var prevOwned: Option[DataFrame] = None
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // neighborhood view: (a, b) for every b ∈ Γ(a), both directions
-      val nbrs = edges.select(col("u").as("a"), col("v").as("b"))
-        .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
-      val mins = nbrs.groupBy("a").agg(min(col("b")).as("nmin"))
-      // large-star: for b > a emit (b, min(Γ(a) ∪ {a})); m ≤ a < b keeps
-      // the canonical orientation for free, and no self-loops can appear
-      val large = nbrs.join(mins, "a")
-        .filter(col("b") > col("a"))
-        .select(col("b").as("u"), least(col("nmin"), col("a")).as("v"))
-        .distinct()
-        .iterBoundary(true)
-      // small-star over the canonical edges: m = min(Γ⁻(u)); every smaller
-      // neighbor v ≠ m re-links to m, and u itself links to m
-      val smins = large.groupBy("u").agg(min(col("v")).as("m"))
-      val next = large.join(smins, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionByName(smins.select(col("u"), col("m").as("v")))
-        .distinct()
-        .iterBoundary(true)
-      // exact fixpoint: the edge SET is unchanged (both difference
-      // directions — counts alone can balance out a swap)
-      converged =
-        next.exceptAll(edges).limit(1).count() == 0L &&
-          edges.exceptAll(next).limit(1).count() == 0L
-      // this round's intermediate and the PREVIOUS round's edges are now
-      // consumed for good — release their checkpoint blocks
-      org.apache.spark.sql.VigilShim.unpersistCheckpointed(large)
-      prevOwned.foreach(org.apache.spark.sql.VigilShim.unpersistCheckpointed)
-      prevOwned = Some(next)
-      edges = next
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponentsStar did not converge in $maxIter rounds — " +
-        "raise maxIter (O(log² n) bound; 50 covers any feasible corpus)")
-    // fixpoint = disjoint stars: each non-root node has exactly ONE edge
-    // (u → component min); roots and isolated nodes map to themselves.
-    // The groupBy-min is defensive (idempotent on a true star set).
-    edges.groupBy(col("u").as("id")).agg(min(col("v")).as("comp"))
-  }
-
-  private def persistSigs(df: DataFrame): DataFrame =
-    persistBounded(lastSigCache, df)
-  private def persistBounded(
-      slot: java.util.concurrent.atomic.AtomicReference[DataFrame],
-      df: DataFrame): DataFrame = {
+  /** `df` persisted in the one signature-cache slot ([[lastSigCache]]). */
+  private def persistSigs(df: DataFrame): DataFrame = {
     val cached =
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prev = slot.getAndSet(cached)
+    val prev = lastSigCache.getAndSet(cached)
     if (prev != null && (prev ne cached)) prev.unpersist(blocking = false)
     cached
   }

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.ComponentsBudget
+import vigil.{ComponentsBudget, SparkJobs}
 import vigil.dedup.Dedup
 
-/** `Dedup.connectedComponents` on its three paths: the default budget
-  * (small graphs finish on the driver before round 1), budget 0 (the
-  * distributed rounds alone) and budget 0 with `maxIter = 2` (rounds that
-  * run out on long paths and finish by the large-star/small-star fallback).
+/** `Dedup.connectedComponents` on its two paths: the default budget
+  * (small graphs finish on the driver before round 1) and budget 0 (the
+  * distributed label rounds alone), on shapes that make min-label rounds
+  * slow: sorted, permuted and zig-zag paths and a comb.
   */
 class ComponentsSpec extends AnyFunSuite {
 
@@ -60,8 +60,27 @@ class ComponentsSpec extends AnyFunSuite {
         .map(_.toLong)
       Graph("permuted chain of 200", perm, perm.sliding(2).map(w => (w(0), w(1))).toSeq)
     },
-    // ids in path order: the rounds shrink it by two labels each
+    // ids in path order: each hook tree is the whole remaining path
     Graph("sorted chain of 30", (0L until 30L), (0L until 29L).map(i => (i, i + 1))),
+    {
+      // path order 0, 599, 1, 598, …: every other id is a local minimum
+      val zig = (0L until 300L).flatMap(i => Seq(i, 599L - i))
+      Graph("zig-zag path of 600", zig, zig.sliding(2).map(w => (w(0), w(1))).toSeq)
+    },
+    {
+      // a sorted spine of large ids, each with one small pendant leaf,
+      // the leaves permuted: round 2 hooks every spine id to its leaf,
+      // so the contracted graph is a permuted path of the leaves
+      val spine = 1000L until 1300L
+      val leaves = new scala.util.Random(7).shuffle((0L until 300L).toList)
+        .zip(spine)
+      Graph("comb of 300 with permuted leaves", spine ++ leaves.map(_._1),
+        spine.sliding(2).map(w => (w(0), w(1))).toSeq ++ leaves.map(_.swap))
+    },
+    // every pair has a non-node endpoint: nothing links, and each even
+    // id but 0 takes the odd id below it as its label
+    Graph("chain of 2,000 ids, odd ids not nodes", (0L until 2000L by 2),
+      (0L until 1999L).map(i => (i, i + 1))),
     Graph("no pairs", Seq(3L, 1L, 2L), Nil),
     Graph("only self-loops and dangling", Seq(5L, 6L, 7L),
       Seq((5L, 5L), (6L, 99L), (99L, 98L), (7L, 7L))),
@@ -81,9 +100,7 @@ class ComponentsSpec extends AnyFunSuite {
     val pairs = g.pairs.toDF("id_a", "id_b")
     Seq(
       "default" -> labels(Dedup.connectedComponents(nodes, "doc_id", pairs)),
-      "budget 0" -> labels(ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0)),
-      "budget 0, maxIter 2" -> labels(
-        ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0, maxIter = 2)))
+      "budget 0" -> labels(ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0)))
   }
 
   /** Union-find over the raw pairs, the smallest id as root. */
@@ -100,7 +117,7 @@ class ComponentsSpec extends AnyFunSuite {
     g.nodes.map(v => v -> find(v)).toMap
   }
 
-  test("labels are equal on the driver finish, the distributed rounds and the fallback, and equal a union-find twin on closed graphs") {
+  test("labels agree across budgets and with a union-find twin on closed graphs") {
     assert(graphs.size >= 20)
     assert(graphs.count(!_.closed) >= 5, "too few graphs with non-node endpoints")
     graphs.foreach { g =>
@@ -124,16 +141,34 @@ class ComponentsSpec extends AnyFunSuite {
         assert(l == expected, s"$budget: $pairs")
       }
     }
-    // at budget 0 the rounds run out on the 71-node path and the star
-    // fallback finishes it: over the contracted label edges, so 1 and 2
-    // stay apart there too (over the raw pairs, 9 would link them)
+    // the later rounds run over the contracted label edges, so 1 and 2
+    // stay apart while the 71-node path merges (over the raw pairs, 9
+    // would link them)
     val nodes = (Seq(1L, 2L) ++ (10L to 80L)).toDF("doc_id")
     val pairs = (Seq((1L, 9L), (2L, 9L)) ++ (10L until 80L).map(i => (i, i + 1)))
       .toDF("id_a", "id_b")
-    Seq(Dedup.connectedComponents(nodes, "doc_id", pairs, maxIter = 2),
-      ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0, maxIter = 2)
+    Seq(Dedup.connectedComponents(nodes, "doc_id", pairs),
+      ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0)
     ).map(labels).foreach { got =>
       assert(got(1L) == 1L && got(2L) == 2L && (10L to 80L).forall(got(_) == 10L), got)
     }
+  }
+
+  /** A sorted path is the slow shape for min-label rounds: with one
+    * pointer jump per round it loses two labels a round. Shortcutting
+    * every hook tree to its root finishes it in two rounds: 56 jobs at
+    * local[4], where 25 one-jump rounds and a large-star/small-star
+    * finish took 426.
+    */
+  test("a sorted 4,096-id chain at budget 0 runs in at most 100 Spark jobs") {
+    val n = 4096L
+    val nodes = (0L until n).toDF("doc_id")
+    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    var got = Map.empty[Long, Long]
+    val jobs = SparkJobs.during(spark) {
+      got = labels(ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0))
+    }
+    assert(got.size == n && got.values.forall(_ == 0L))
+    assert(jobs <= 100, s"$jobs Spark jobs")
   }
 }

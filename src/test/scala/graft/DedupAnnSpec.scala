@@ -826,46 +826,22 @@ class DedupAnnSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.vigil.checkpoint.dir")
   }
 
-  test("connectedComponentsStar: path graph with diameter >> 25, fallback, dense-graph equality") {
+  test("connectedComponents: 800-id permuted path at budget 0 is one component") {
     // adversarial shape for label propagation: one long PATH. Node ids are
     // a deterministic permutation of 0..n-1 (the component min sits at a
     // random interior position, so "min at the head" can't mask a
-    // propagation bug); edges link consecutive path positions.
+    // propagation bug); edges link consecutive path positions. Budget 0
+    // runs the distributed label rounds, not the driver finish.
     val n = 800
     val perm = (0 until n).sortBy(i => (i * 2654435761L) % 4294967296L)
       .map(_.toLong)
     val nodes = perm.toDF("doc_id")
     val pairs = perm.sliding(2).map(w => (w(0), w(1))).toSeq
       .toDF("id_a", "id_b")
-    val star = Dedup.connectedComponentsStar(nodes, "doc_id", pairs)
+    val got = ComponentsBudget.connectedComponents(nodes, "doc_id", pairs, 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star.size == n && star.values.forall(_ == 0L),
-      s"path must be ONE component rooted at 0; got ${star.values.toSet.take(5)}")
-
-    // the distributed rounds (driver finish off: budget 0) at a tiny round
-    // budget can't finish a 64-long path by label rounds (pointer jumping
-    // reaches ~2^maxIter hops) — they must FALL BACK to the star path and
-    // still be exact, not throw
-    val small = (0L until 64L).toDF("doc_id")
-    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val viaFallback = ComponentsBudget.connectedComponents(small, "doc_id", chain,
-      0, maxIter = 2).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaFallback.size == 64 && viaFallback.values.forall(_ == 0L))
-    // at the default budget the 63 pairs finish on the driver
-    val viaDriver = Dedup.connectedComponents(small, "doc_id", chain,
-      maxIter = 2).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaDriver == viaFallback)
-
-    // on the dense near-dup fixture graph both operators are the same
-    // function (multi-hundred-member components + singletons)
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val vp = Dedup.neardupVerified(docs, "text", "doc_id", 0.9)
-      .localCheckpoint(true)
-    val a = Dedup.connectedComponents(docs, "doc_id", vp)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Dedup.connectedComponentsStar(docs, "doc_id", vp)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b, a.toSeq.diff(b.toSeq).take(5).toString)
+    assert(got.size == n && got.values.forall(_ == 0L),
+      s"path must be ONE component rooted at 0; got ${got.values.toSet.take(5)}")
   }
 
   test("topNgrams: hand counts, short-text guard, top-k plan shape") {

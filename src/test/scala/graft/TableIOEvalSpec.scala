@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import vigil.{Decide, Eval, SaltedDecide, Synth, TableIO}
+import vigil.{Decide, Eval, SaltedDecide, SparkJobs, Synth, TableIO}
 import vigil.media.Media
 
 /** Lineage + checkpoint-resume, eval metrics, media plumbing. */
@@ -29,20 +29,6 @@ class TableIOEvalSpec extends AnyFunSuite {
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
     assert(rows.map(_._1).distinct.length == rows.length, "one lineage row per bucket")
     rows.toMap
-  }
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsWhile(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.VigilSparkShim.waitListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.VigilSparkShim.waitListenerBusEmpty(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get
   }
 
   /** The lineage counters by their defining formulas, straight from a
@@ -121,7 +107,7 @@ class TableIOEvalSpec extends AnyFunSuite {
       .select("bucket", "n_turns", "scrubbed").collect()
     assert(pre.length == 1 && pre(0).getInt(0) == 0 && pre(0).getLong(1) == 5L &&
       pre(0).isNullAt(2), pre.mkString)
-    assert(jobsWhile(TableIO.lineage(spark, dir)) == 0, "lineage infers no schema")
+    assert(SparkJobs.during(spark)(TableIO.lineage(spark, dir)) == 0, "lineage infers no schema")
   }
 
   test("a scoped view takes its schema from its own snapshot") {
@@ -156,7 +142,7 @@ class TableIOEvalSpec extends AnyFunSuite {
     vigil.Pipeline.run(spark, Synth.corpusDF(spark, 30), dir, "snap-1", cfg, nBuckets = 4)
     val inferred = spark.read.parquet(s"$dir/data").filter(col("snapshot") === "snap-1")
     var view: DataFrame = null
-    assert(jobsWhile { view = TableIO.readScored(spark, dir, "snap-1") } == 0)
+    assert(SparkJobs.during(spark) { view = TableIO.readScored(spark, dir, "snap-1") } == 0)
     assert(view.schema.treeString == inferred.schema.treeString)
     def rows(df: DataFrame) =
       df.orderBy("conv_id", "turn_idx").collect().map(_.toSeq.map(String.valueOf)).toSeq

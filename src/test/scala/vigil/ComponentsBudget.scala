@@ -12,7 +12,6 @@ object ComponentsBudget {
     * `driverEdges` edges remain; 0 runs the distributed rounds alone.
     */
   def connectedComponents(
-      nodes: DataFrame, idCol: String, pairs: DataFrame, driverEdges: Int,
-      maxIter: Int = 25): DataFrame =
-    Dedup.componentsWithin(nodes, idCol, pairs, maxIter, driverEdges)
+      nodes: DataFrame, idCol: String, pairs: DataFrame, driverEdges: Int): DataFrame =
+    Dedup.componentsWithin(nodes, idCol, pairs, driverEdges)
 }
